@@ -51,12 +51,10 @@ object Bench {
       Runtime.getRuntime.availableProcessors().toString)
     val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // experiment knob: SPARK_GRAFT_AQE=false to measure AQE's latency tax
-    sys.env.get("SPARK_GRAFT_AQE").foreach(v =>
-      spark.conf.set("spark.sql.adaptive.enabled", v))
     // experiment knob: arbitrary session confs, "k=v;k2=v2" (e.g. force
     // spark.graft.broadcastReshape.threshold=1 to bench the past-threshold
-    // shuffle fallback at scale)
+    // shuffle fallback at scale, or spark.sql.adaptive.enabled=false to
+    // measure AQE's latency tax)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k.trim, v.trim)

@@ -77,27 +77,9 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.ui.enabled", "false")
 
-  /** builder + context-creation-time experiment knobs (these cannot be set
-    * on a live session):
-    *  - SPARK_GRAFT_LOCAL_DIR: shuffle/spill scratch location. local[N] has
-    *    no external shuffle service, so scratch placement is the local
-    *    stand-in for a cluster's SSD-backed local dirs.
-    *  - SPARK_GRAFT_SHUFFLE_COMPRESS: shuffle block + spill compression
-    *    (lz4 by default). With scratch on tmpfs the compress/decompress CPU
-    *    is pure overhead; on real disks/network it usually pays for itself.
-    */
-  private def withEnvKnobs(b: SparkSession.Builder): SparkSession.Builder = {
-    sys.env.get("SPARK_GRAFT_LOCAL_DIR").foreach(d => b.config("spark.local.dir", d))
-    sys.env.get("SPARK_GRAFT_SHUFFLE_COMPRESS").foreach { v =>
-      b.config("spark.shuffle.compress", v)
-      b.config("spark.shuffle.spill.compress", v)
-    }
-    b
-  }
-
   /** Local session with sane defaults; idempotent via getOrCreate. */
   def local(cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val s = withEnvKnobs(builder(cpus)).getOrCreate()
+    val s = builder(cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

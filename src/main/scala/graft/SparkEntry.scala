@@ -16,18 +16,26 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     TpchQueries.queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
+  /** Every inventory object, each registered once for both maps. */
+  val querySets: Seq[QuerySet] = Seq(
+    TpchQueries, TpchQueries2, RelationalQueries, AggQueries, WindowQueries,
+    WindowQueries2, FunctionQueries, FunctionQueries2, FunctionQueries3,
+    ArrayMathQueries, PipelineQueries, DmlQueries, StreamQueries,
+    MultimodalQueries, Round2Queries, Round3Queries, Round3bQueries,
+    Round3cQueries, Round3dQueries, Round3eQueries, Round3fQueries,
+    Round4Queries, Round4bQueries, Round4cQueries, Round4dQueries,
+    Round4eQueries, Round4fQueries, PipelineQueries2, TpcdsQueries,
+    TpcdsQueries2, TpcdsQueries3, TpcdsQueries4, TpcdsQueries5,
+    Round5Queries, Round5bQueries, WorkloadQueries, Round6Queries,
+    Round8Queries, Round9Queries, Round10Queries, Round11Queries,
+    Round12Queries, Round13Queries)
+
   /** One entry per implemented operator from SURVEY.md §2. (A `val`: the
-    * 27-map concatenation costs real milliseconds inside benchmarked query
+    * 43-set concatenation costs real milliseconds inside benchmarked query
     * construction when rebuilt per call.) */
-  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    TpchQueries.queries ++ TpchQueries2.queries ++ RelationalQueries.queries ++
-      AggQueries.queries ++ WindowQueries.queries ++ WindowQueries2.queries ++ FunctionQueries.queries ++ FunctionQueries2.queries ++ FunctionQueries3.queries ++ ArrayMathQueries.queries ++ ArrayMathQueries.queries2 ++
-      PipelineQueries.queries ++ DmlQueries.queries ++ StreamQueries.queries ++ MultimodalQueries.queries ++ Round2Queries.queries ++ Round3Queries.queries ++ Round3bQueries.queries ++ Round3cQueries.queries ++ Round3dQueries.queries ++ Round3eQueries.queries ++ Round3fQueries.queries ++ Round4Queries.queries ++ Round4bQueries.queries ++ Round4cQueries.queries ++ Round4dQueries.queries ++ Round4eQueries.queries ++ Round4fQueries.queries ++ PipelineQueries2.queries ++ TpcdsQueries.queries ++ TpcdsQueries2.queries ++ TpcdsQueries3.queries ++ TpcdsQueries4.queries ++ TpcdsQueries5.queries ++ Round5Queries.queries ++ Round5bQueries.queries ++ WorkloadQueries.queries ++ Round6Queries.queries ++ Round8Queries.queries ++ Round9Queries.queries ++ Round10Queries.queries ++ Round11Queries.queries ++ Round12Queries.queries ++ Round13Queries.queries
+  lazy val queries: Map[String, Q.QueryFn] = querySets.flatMap(_.queries).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  lazy val oracleSql: Map[String, String] =
-    TpchQueries.oracleSql ++ TpchQueries2.oracleSql ++ RelationalQueries.oracleSql ++
-      AggQueries.oracleSql ++ WindowQueries.oracleSql ++ WindowQueries2.oracleSql ++ FunctionQueries.oracleSql ++ FunctionQueries2.oracleSql ++ FunctionQueries3.oracleSql ++ ArrayMathQueries.oracleSql ++
-      PipelineQueries.oracleSql ++ DmlQueries.oracleSql ++ StreamQueries.oracleSql ++ MultimodalQueries.oracleSql ++ Round2Queries.oracleSql ++ Round3Queries.oracleSql ++ Round3bQueries.oracleSql ++ Round3cQueries.oracleSql ++ Round3dQueries.oracleSql ++ Round3eQueries.oracleSql ++ Round3fQueries.oracleSql ++ Round4Queries.oracleSql ++ Round4bQueries.oracleSql ++ Round4cQueries.oracleSql ++ Round4dQueries.oracleSql ++ Round4eQueries.oracleSql ++ Round4fQueries.oracleSql ++ PipelineQueries2.oracleSql ++ TpcdsQueries.oracleSql ++ TpcdsQueries2.oracleSql ++ TpcdsQueries3.oracleSql ++ TpcdsQueries4.oracleSql ++ TpcdsQueries5.oracleSql ++ Round5Queries.oracleSql ++ Round5bQueries.oracleSql ++ WorkloadQueries.oracleSql ++ Round6Queries.oracleSql ++ Round8Queries.oracleSql ++ Round9Queries.oracleSql ++ Round10Queries.oracleSql ++ Round11Queries.oracleSql ++ Round12Queries.oracleSql ++ Round13Queries.oracleSql
+  lazy val oracleSql: Map[String, String] = querySets.flatMap(_.oracleSql).toMap
 }

@@ -252,9 +252,9 @@ object Dedup {
     // ONE join key, so its whole B² set-probe pass lands on a single task —
     // at corpus scale one hot (source, lang, band) bucket is a job-killing
     // straggler. GATED on a measured hot bucket actually existing: the max
-    // bucket size is one tiny aggregate over the checkpointed rows (the
-    // NgramLab A/B measured the always-on triangle apparatus at ~0.7 s on
-    // the flat sf0.1 distribution — max bucket 54 docs — while the
+    // bucket size is one tiny aggregate over the checkpointed rows (an A/B
+    // in OPTIMIZATION_r14.md measured the always-on triangle apparatus at
+    // ~0.7 s on the flat sf0.1 distribution — max bucket 54 docs — while the
     // checkpoint alone is a 1.6× win; pay the split only when it buys
     // something). Past the gate, buckets split into k = ⌈B/cap⌉ (≤64)
     // deterministic salt classes (pmod(xxhash64(doc_id), k)); each doc is
@@ -268,13 +268,15 @@ object Dedup {
     // costs 2 exchanges / 4 stages of launch latency (~0.45 s measured at
     // sf0.1) just to learn one number; a partition-local count-map reduce
     // is one job over the checkpointed rows (map size ≤ |buckets|, bounded
-    // by |sources × langs × bands| at any scale).
+    // by |sources × langs × bands| at any scale). A NULL bucket never
+    // equi-joins, so its rows are skipped (as BitmapJoin skips NULL keys).
     val maxBn = {
       import scala.jdk.CollectionConverters._
       org.apache.spark.sql.GraftSqlBridge.internalRdd(
         prepped.select(col("bucket"))).mapPartitions { it =>
         val m = new java.util.HashMap[String, java.lang.Long]()
-        it.foreach(r => m.merge(r.getString(0), 1L, (a: java.lang.Long, b: java.lang.Long) => a + b))
+        it.foreach(r => if (!r.isNullAt(0))
+          m.merge(r.getString(0), 1L, (a: java.lang.Long, b: java.lang.Long) => a + b))
         Iterator.single(m)
       }.fold(new java.util.HashMap[String, java.lang.Long]()) { (a, b) =>
         b.forEach((k, v) => a.merge(k, v, (x: java.lang.Long, y: java.lang.Long) => x + y))
@@ -425,7 +427,7 @@ object Dedup {
     // a giant codegen tree: 533 ms of text_repeated_ngrams' 1.58 s steady
     // profile, 8.8 s first-run compile); NgramWindows joins the tokens
     // once and emits windows as zero-copy slices of that buffer.
-    // Bit-identical output (Round5Spec asserts against the old expression).
+    // Bit-identical output (PipelineSpec asserts against the old expression).
     val w = toks.select(col("doc_id"),
       posexplode(org.apache.spark.sql.GraftSqlBridge.column(
         graft.functions.NgramWindows(

@@ -14,7 +14,7 @@ import Q._
   * (resolve_grouping_function.rs) — all on Spark builtins, which plan
   * partial+final hash aggregation with map-side combine automatically.
   */
-object AggQueries {
+object AggQueries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
     // Statistical aggregates: stddev/variance/corr/covariance.

@@ -9,7 +9,7 @@ import Q._
   * Spark's higher-order builtins (`transform`, `zip_with`, `aggregate`) —
   * codegen'd lambdas, no UDFs, no custom expressions needed.
   */
-object ArrayMathQueries {
+object ArrayMathQueries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
     "fn_array_math" -> { (s, dir) =>
@@ -29,9 +29,8 @@ object ArrayMathQueries {
           r6(element_at(zip_with(e, reverse(e), (x, y) => x.cast("double") + y.cast("double")), 1)).as("add_head"),
           r6(element_at(zip_with(e, reverse(e), (x, y) => x.cast("double") - y.cast("double")), 2)).as("sub_head2"),
           r6(element_at(e, 1) / norm2).as("normalized_head"))
-    })
+    },
 
-  val queries2: Map[String, QueryFn] = Map(
     // Array manipulation batch 2 (reference: functions-nested remove/
     // repeat/compact/flatten/zip files).
     "fn_array2" -> { (s, dir) =>

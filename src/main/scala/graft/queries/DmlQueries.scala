@@ -14,7 +14,7 @@ import Q._
   * algebra our SessionTables transforms implement, which is exactly the
   * semantics being checked.
   */
-object DmlQueries {
+object DmlQueries extends QuerySet {
 
   private def scratch(name: String): String = {
     val d = s"${System.getProperty("java.io.tmpdir")}/graft_scratch/$name"

@@ -14,7 +14,7 @@ import Q._
   * `regexp_replace` global flag, dayofweek conventions) — each oracle uses
   * the DuckDB spelling of the same semantics.
   */
-object FunctionQueries {
+object FunctionQueries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
     // String functions (reference: functions/src/string/, unicode/).

@@ -15,7 +15,7 @@ import Q._
   * disjunctions), approx_percentile_cont (t-digest,
   * functions-aggregate/src/approx_percentile_cont.rs).
   */
-object FunctionQueries2 {
+object FunctionQueries2 extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
     // Map construction + access (reference: functions-nested/src/map*.rs).

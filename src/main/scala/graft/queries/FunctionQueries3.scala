@@ -12,7 +12,7 @@ import Q._
   * the sample convention explicitly, documenting the semantic bridge
   * (reference stddev/variance files carry the same _pop/_samp split).
   */
-object FunctionQueries3 {
+object FunctionQueries3 extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
     "fn_string2" -> { (s, dir) =>
@@ -56,11 +56,11 @@ object FunctionQueries3 {
     // group-count-bounded at ANY scale, so one final task is exact and
     // sortWithinPartitions IS the total order. AQE stays ON: the
     // distinct-agg's two mid-exchanges carry ~1 MB here and AQE's
-    // coalescing beats a fixed width (Q16Lab min-of-8 interleave, SF1:
-    // plain AQE 0.452 / AQE+coalesce-sort 0.392 / staticWide 0.677 — the
-    // static form's 32+32 task launches on KB-scale exchanges REGRESSED,
-    // so it was rejected). Past the broadcast gate the plain AQE text
-    // runs unchanged.
+    // coalescing beats a fixed width (OPTIMIZATION_r13.md, min-of-8
+    // interleave, SF1: plain AQE 0.452 / AQE+coalesce-sort 0.392 / staticWide
+    // 0.677 — the static form's 32+32 task launches on KB-scale exchanges
+    // REGRESSED, so it was rejected). Past the broadcast gate the plain AQE
+    // text runs unchanged.
     "q16_suppcnt" -> { (s0, dir) =>
       import graft.plans.BroadcastAdvisor._
       val p = tableStats(s0, s"$dir/part.parquet")

@@ -17,7 +17,7 @@ import Q._
   * The frame-sampling (video) path keeps the byte-chunk stand-in — no JDK
   * H.264 decoder exists — with its ascii()/prefix-sum oracle.
   */
-object MultimodalQueries {
+object MultimodalQueries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
     // REAL JPEG decode + feature extraction (per-pixel gray mean/histogram)

@@ -17,7 +17,7 @@ import Q._
   * checked against DuckDB (MinHash is built on md5 + lexicographic min
   * specifically so the oracle can reproduce it bit-for-bit).
   */
-object PipelineQueries {
+object PipelineQueries extends QuerySet {
 
   private val EnList = "['the','and','of','is','a','to','in']"
   private val WordsCte =

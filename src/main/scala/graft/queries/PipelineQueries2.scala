@@ -9,7 +9,7 @@ import Q._
   * dedup. All deterministic (hash-threshold sampling, exact frequency
   * tables), so the DuckDB oracle replays them bit-for-bit.
   */
-object PipelineQueries2 {
+object PipelineQueries2 extends QuerySet {
 
   private val wordsCol = "filter(split(text, ' '), w -> w != '')"
 

@@ -3,6 +3,15 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+/** One inventory object: its queries and the DuckDB SQL that checks them.
+  * `SparkEntry` builds both inventory maps from one list of these, so an
+  * object cannot be registered for one map and forgotten in the other. */
+trait QuerySet {
+  def queries: Map[String, Q.QueryFn]
+  /** Oracle SQL per query name; omitted for non-SQL-expressible queries. */
+  def oracleSql: Map[String, String]
+}
+
 /** Shared helpers for the oracle-checked query inventory.
   *
   * Conventions that make Spark results hash-comparable with the DuckDB
@@ -98,11 +107,11 @@ object Q {
       ss.conf.set("spark.sql.adaptive.enabled", "false")
       ss.conf.set("spark.sql.shuffle.partitions", "1")
       ss.conf.set("spark.sql.constraintPropagation.enabled", "false")
-      // r13 (Q22Lab variant G, min-of-8 interleave: shipped 0.649 →
-      // excluded-rules 0.555): rules that CANNOT fire on the tiny-result
-      // shapes routed here (explicit joins — no reorder; no CSV/JSON
-      // exprs, decimals, object serialization, concats, repartitions or
-      // windows) still walk the whole tree every plan. Plan-constant
+      // r13 (OPTIMIZATION_r13.md, q22 variant G, min-of-8 interleave: shipped
+      // 0.649 → excluded-rules 0.555): rules that CANNOT fire on the
+      // tiny-result shapes routed here (explicit joins — no reorder; no
+      // CSV/JSON exprs, decimals, object serialization, concats, repartitions
+      // or windows) still walk the whole tree every plan. Plan-constant
       // shaving, scale-independent; results oracle-gated as always.
       ss.conf.set("spark.sql.optimizer.excludedRules", Seq(
         "org.apache.spark.sql.catalyst.optimizer.CostBasedJoinReorder",

@@ -14,7 +14,7 @@ import Q._
   * (recursive_query.rs:66), Values (logical_plan/plan.rs:270) and
   * generate_series (functions-table/src/generate_series.rs).
   */
-object RelationalQueries {
+object RelationalQueries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
     // INNER join, raw-row projection output.

@@ -14,7 +14,7 @@ import Q._
   * the BYTES back, executes the consumed form and compares against the
   * DuckDB oracle.
   */
-object Round10Queries {
+object Round10Queries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
     // ValuesNode + RepartitionNode over the wire: an inline VALUES list

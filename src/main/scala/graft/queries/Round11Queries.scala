@@ -16,7 +16,7 @@ import Q._
   * bytes back on the session, executes the consumed form and compares
   * against the DuckDB oracle.
   */
-object Round11Queries {
+object Round11Queries extends QuerySet {
 
   private def tf(s: org.apache.spark.sql.SparkSession, dir: String)
       : String => Option[org.apache.spark.sql.DataFrame] =

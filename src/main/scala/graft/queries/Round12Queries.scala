@@ -15,7 +15,7 @@ import Q._
   * (SPM, SHJ, PlaceholderRow, ScalarSubquery) are consumed from
   * hand-authored reference-shaped bytes and executed.
   */
-object Round12Queries {
+object Round12Queries extends QuerySet {
 
   private def tf(s: org.apache.spark.sql.SparkSession, dir: String)
       : String => Option[org.apache.spark.sql.DataFrame] =

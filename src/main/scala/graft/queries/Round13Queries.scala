@@ -14,7 +14,7 @@ import Q._
   * hand-authored reference-shaped bytes; the oracle replays the same
   * zip semantics in DuckDB (whose multi-unnest zips identically).
   */
-object Round13Queries {
+object Round13Queries extends QuerySet {
 
   private def tf(s: org.apache.spark.sql.SparkSession, dir: String)
       : String => Option[org.apache.spark.sql.DataFrame] =

@@ -15,7 +15,7 @@ import Q._
   * recursive_query.rs:66,76 + cte.slt; physical-plan/src/unnest.rs:65 +
   * unnest.slt; expr/src/udwf.rs:315 (window UDF surface).
   */
-object Round2Queries {
+object Round2Queries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -19,7 +19,7 @@ import Q._
   * offline — closing the SURVEY §2.1 Avro row that round 1 marked
   * unavailable. Reference: datasource-avro/src/avro_to_df.rs.
   */
-object Round3Queries {
+object Round3Queries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
 

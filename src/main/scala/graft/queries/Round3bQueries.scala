@@ -15,7 +15,7 @@ import graft.operators.{Similarity, TextQuality}
   * the iteration deterministic across engines, so an iterative ML-ish
   * pipeline gets the same rows+hash oracle treatment as a SQL query.
   */
-object Round3bQueries {
+object Round3bQueries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -11,7 +11,7 @@ import Q._
   * reference is SQL-first, so the SQL front-door forms are part of the
   * user-facing surface being re-expressed.
   */
-object Round3cQueries {
+object Round3cQueries extends QuerySet {
 
   private def view(s: org.apache.spark.sql.SparkSession, dir: String,
       name: String, as: String): Unit =

@@ -8,7 +8,7 @@ import graft.operators.Dedup
 /** Round-3 batch 4: benchmark decontamination, window-frame EXCLUDE
   * semantics, sliding streaming windows.
   */
-object Round3dQueries {
+object Round3dQueries extends QuerySet {
 
   private val WordsCte =
     "SELECT doc_id, list_filter(string_split(text, ' '), w -> w != '') AS ws FROM documents"

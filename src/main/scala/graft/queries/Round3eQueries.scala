@@ -6,7 +6,7 @@ import Q._
 /** Round-3 batch 5: binary higher-order lambdas (zip_with, map_zip_with),
   * ANSI-overflow try_* arithmetic, grouping_id.
   */
-object Round3eQueries {
+object Round3eQueries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -6,7 +6,7 @@ import Q._
 /** Round-3 batch 6: frequency-weighted exact percentile, count_if,
   * locale-grouped number formatting.
   */
-object Round3fQueries {
+object Round3fQueries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
 

@@ -9,7 +9,7 @@ import Q._
   * conventions (unsigned widening, TIME→µs), persistent views over a
   * multi-schema catalog, pipe-operator SQL.
   */
-object Round4Queries {
+object Round4Queries extends QuerySet {
 
   /** Committed parquet fixtures for type-convention tests — written once by
     * pyarrow (unsigned logical types) / DuckDB (TIME, isAdjustedToUTC=false);

@@ -9,7 +9,7 @@ import Q._
   * pop/positions/replace/any_* and the unixtime / to_char / typeof family
   * were the semantics not yet exercised under any Spark spelling.
   */
-object Round4bQueries {
+object Round4bQueries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
 

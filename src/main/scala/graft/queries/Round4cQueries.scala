@@ -15,7 +15,7 @@ import Q._
   * hive-partitioned fact (dynamic_filter_pushdown_config.slt's runtime
   * pruning, in Spark's DPP form).
   */
-object Round4cQueries {
+object Round4cQueries extends QuerySet {
 
   /** Committed fixture: 3 parquet files (5000/3000/1200 rows), f0 split
     * into 2 row groups — written once by DuckDB so file names and row-group

@@ -12,7 +12,7 @@ import Q._
   * semantic dedup, wildcard EXCLUDE (wildcard.slt), and the float16
   * widening convention (float16.slt).
   */
-object Round4dQueries {
+object Round4dQueries extends QuerySet {
 
   val f16Fixture = "/root/repo/src/test/resources/fixtures/type_f16/f16.parquet"
 

@@ -7,7 +7,7 @@ import Q._
   * (to_timestamp_timezone.slt) and IEEE float edge semantics
   * (negative_zero.slt) — both previously unexercised.
   */
-object Round4eQueries {
+object Round4eQueries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
 

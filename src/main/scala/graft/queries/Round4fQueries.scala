@@ -9,7 +9,7 @@ import Q._
   * own generate_series/range TVFs which share the reference's semantics
   * (inclusive vs exclusive end, negative steps, temporal stepping).
   */
-object Round4fQueries {
+object Round4fQueries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
 

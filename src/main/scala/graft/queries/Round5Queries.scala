@@ -7,7 +7,7 @@ import Q._
 import graft.plans.SqlUnparser
 
 /** Round-5 additions exercised through the driver's oracle gate. */
-object Round5Queries {
+object Round5Queries extends QuerySet {
 
   private def scratch(name: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_scratch/$name"

@@ -7,7 +7,7 @@ import Q._
 /** Round-5 continuation: multi-dimensional clustering layout and mergeable
   * sketch aggregates, all under the driver's DuckDB differential.
   */
-object Round5bQueries {
+object Round5bQueries extends QuerySet {
 
   private def scratch(name: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_scratch/$name"

@@ -13,7 +13,7 @@ import graft.queries.Q._
   * precision). All functions are pure catalyst trees registered via the
   * session extension (graft.functions.TimeFunctions), callable from SQL.
   */
-object Round6Queries {
+object Round6Queries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
     // TIME-of-day + timestamp-precision family. Sub-day values render as

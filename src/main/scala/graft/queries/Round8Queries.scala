@@ -12,7 +12,7 @@ import Q._
   * the consumed form; the DuckDB oracle checks the final rows. A wrong
   * field number, varint, or length prefix anywhere breaks the hash.
   */
-object Round8Queries {
+object Round8Queries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
     "dfproto_binary_roundtrip" -> { (s, dir) =>

@@ -14,7 +14,7 @@ import Q._
   * consumed form, and checks the rows against the DuckDB oracle — a wrong
   * field number, join-key orientation, or frame bound breaks the hash.
   */
-object Round9Queries {
+object Round9Queries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
     // TPC-H q3-shaped multi-join over the wire: two JoinNodes (equi keys

@@ -7,7 +7,7 @@ import Q._
 /** Oracle-checked streaming queries: the bounded events table driven through
   * the Structured Streaming engine (micro-batches, memory sink) must equal
   * the batch SQL the DuckDB oracle runs. */
-object StreamQueries {
+object StreamQueries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
     "stream_tumbling_agg" -> { (s, dir) =>

@@ -20,7 +20,7 @@ import Q._
   * broadcast, fact never exchanged until the final keyed agg — holds for
   * all of them, and AQE handles the runtime reshape at cluster scale.
   */
-object TpcdsQueries {
+object TpcdsQueries extends QuerySet {
 
   private def r2sql(e: String, as: String) =
     s"CAST(FLOOR(($e + 1.37e-4) * 100 + 0.5) AS DOUBLE) / 100 AS $as"

@@ -23,7 +23,7 @@ import Q._
   * fact, then window/self-join work on the already-aggregated (small)
   * series — the TPC-DS pattern where the fact is touched once.
   */
-object TpcdsQueries2 {
+object TpcdsQueries2 extends QuerySet {
 
   private def r2sql(e: String, as: String) =
     s"CAST(FLOOR(($e + 1.37e-4) * 100 + 0.5) AS DOUBLE) / 100 AS $as"

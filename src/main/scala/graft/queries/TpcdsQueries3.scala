@@ -42,7 +42,7 @@ import Q._
   * q95's correlated self-join is an equi-join on the fact's own key, so
   * it stays shuffle-local under any hash partitioning on l_orderkey.
   */
-object TpcdsQueries3 {
+object TpcdsQueries3 extends QuerySet {
 
   private def r2sql(e: String, as: String) =
     s"CAST(FLOOR(($e + 1.37e-4) * 100 + 0.5) AS DOUBLE) / 100 AS $as"

@@ -26,7 +26,7 @@ import Q._
   *
   * Same shared-SQL convention as tranches 1-3 (one text, both engines).
   */
-object TpcdsQueries4 {
+object TpcdsQueries4 extends QuerySet {
 
   private def r2sql(e: String, as: String) =
     s"CAST(FLOOR(($e + 1.37e-4) * 100 + 0.5) AS DOUBLE) / 100 AS $as"

@@ -25,7 +25,7 @@ import Q._
   * Scale: every query is dimension-broadcast + at most one keyed shuffle
   * of the fact; self-joins and windows run over already-aggregated series.
   */
-object TpcdsQueries5 {
+object TpcdsQueries5 extends QuerySet {
 
   private def r2sql(e: String, as: String) =
     s"CAST(FLOOR(($e + 1.37e-4) * 100 + 0.5) AS DOUBLE) / 100 AS $as"

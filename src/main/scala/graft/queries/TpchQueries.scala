@@ -12,7 +12,7 @@ import Q._
   * join selection (broadcast vs shuffle via AQE) and parquet
   * filter/projection pushdown.
   */
-object TpchQueries {
+object TpchQueries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
     // TPC-H Q1: scan → filter → groupBy agg → sort.
@@ -52,7 +52,7 @@ object TpchQueries {
     // customer joins no re-aggregation is needed above them.
     // Declared as ONE SQL statement: the eager per-operator analysis of the
     // DataFrame DSL costs ~2× the single parse+analyze of the equivalent
-    // text (measured 96 vs 50 ms/plan on this shape — tools/PlanCost),
+    // text (measured 96 vs 50 ms/plan on this shape — NOTES_r4.md),
     // which is a real fraction of a 1 s query. Same plan either way.
     "q3_join_topk" -> { (s0, dir) =>
       // Stats-gated reshape (BroadcastAdvisor): the broadcast form is only
@@ -183,8 +183,8 @@ object TpchQueries {
     // the join runs as SHUFFLE_HASH when the per-partition orders build
     // fits task memory (stats-gated via shouldShuffleHash — past the
     // threshold the plain AQE text plans the spillable SMJ). A/B at SF1
-    // (Profile, steady state): gated SHUFFLE_HASH+bool 0.686 s; r5 plain
-    // AQE 0.711; runtime bloom filter 1.30 (extra fact pass + 1-task
+    // (steady state, BENCH_NOTES.md): gated SHUFFLE_HASH+bool 0.686 s;
+    // r5 plain AQE 0.711; runtime bloom filter 1.30 (extra fact pass + 1-task
     // bloom merge buys only 12→5 MB on a join that was never
     // scan-bound); bool payload under plain AQE 1.16 (AQE flips to a
     // LOSING 1.5M-row broadcast — driver-side build hides ~0.7 s). The
@@ -196,10 +196,10 @@ object TpchQueries {
       // r11: the orders side carries exactly ONE boolean per key, so the
       // whole build collapses to two dense bitsets over o_orderkey
       // (BitmapJoin) — 2×750 KB at SF1 vs any hash relation, zero
-      // shuffles left but the ≤2-group agg. Q12Lab (SF1, interleaved
-      // min-of-8): bitmap-exact 0.274 s vs gated SHUFFLE_HASH 0.522 vs
-      // plain AQE 0.857 vs broadcast 0.814, identical results. Gated on
-      // footer maxKey (2×maxKey/8 ≤ broadcast threshold, minKey ≥ 0);
+      // shuffles left but the ≤2-group agg. BENCH_NOTES.md r11 (SF1,
+      // interleaved min-of-8): bitmap-exact 0.274 s vs gated SHUFFLE_HASH
+      // 0.522 vs plain AQE 0.857 vs broadcast 0.814, identical results. Gated
+      // on footer maxKey (2×maxKey/8 ≤ broadcast threshold, minKey ≥ 0);
       // past it, the r5-measured SHUFFLE_HASH/AQE chain is unchanged.
       if (graft.operators.BitmapJoin.gate(s0, o.cols.get("o_orderkey"))) {
         val s = staticWideSession(s0)
@@ -265,9 +265,9 @@ object TpchQueries {
       val c = t(s, dir, "customer")
       // r14: materializing the HAVING survivors (localCheckpoint + real
       // count) and broadcasting them into the orders scan was implemented
-      // and measured-REJECTED (Q18Lab, SF1, same-JVM min-of-8: shuffle
-      // join 1.43/1.67 vs ckpt+broadcast 1.61/2.14). The orders exchange
-      // this removes runs CONCURRENTLY with the lineitem partial-agg
+      // and measured-REJECTED (OPTIMIZATION_r14.md, SF1, same-JVM min-of-8:
+      // shuffle join 1.43/1.67 vs ckpt+broadcast 1.61/2.14). The orders
+      // exchange this removes runs CONCURRENTLY with the lineitem partial-agg
       // exchange (the query's semantic shuffle), so cutting it buys no
       // wall-clock while the checkpoint inserts a barrier + count job +
       // broadcast build on the critical path. The 44 MB partial-agg

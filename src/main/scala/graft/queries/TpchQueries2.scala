@@ -12,7 +12,7 @@ import Q._
   * conditional aggregation, views, nested INs, disjunctive DNF predicates,
   * anti-join + scalar subquery, etc.).
   */
-object TpchQueries2 {
+object TpchQueries2 extends QuerySet {
 
   /** q21 tail shared by the bitmap branch: resolve supplier names (the
     * planner's own size estimate broadcasts the dimension; no hint, so past
@@ -44,8 +44,8 @@ object TpchQueries2 {
       // over l_orderkey (BitmapJoin exists-only form; duplicates are
       // idempotent under OR, exactly semi-join semantics). Built by a
       // partition-OR pass over the 2-column filtered fact scan; the
-      // 3-month order window probes it with a bit test. Q4Lab (SF1,
-      // interleaved min-of-8): bitmap 0.225 s vs shipped bcast-window
+      // 3-month order window probes it with a bit test. BENCH_NOTES.md
+      // r12 (SF1, interleaved min-of-8): bitmap 0.225 s vs shipped bcast-window
       // 0.323 vs broadcast-semi 0.417 vs plain AQE EXISTS 0.826,
       // identical results. Gated on footer maxKey (maxKey/8 ≤ broadcast
       // threshold, minKey ≥ 0); past the gate the prior measured
@@ -441,9 +441,9 @@ object TpchQueries2 {
       // (~190 KB at SF1 vs a ~750k-entry HashedRelation; build stage
       // 671 → 66 ms in the SF1 profile), probed by a codegen bit test
       // inside the lineitem scan. The two-level aggregate keeps the
-      // prior partial-agg cascade: Q21Lab (SF1, same-JVM interleaved
-      // min-of-8) measured the single-exchange repartition form WORSE
-      // (B min 1.066 / med 1.422) than this cascade (C min 0.930 /
+      // prior partial-agg cascade: OPTIMIZATION_r13.md (SF1, same-JVM
+      // interleaved min-of-8) measured the single-exchange repartition form
+      // WORSE (B min 1.066 / med 1.422) than this cascade (C min 0.930 /
       // med 1.142) and the prior broadcast chain (A 0.946 / 1.195) —
       // stacking both 3M-entry hash builds into one stage loses more
       // than the second, well-combined exchange costs. Gated on footer
@@ -522,7 +522,7 @@ object TpchQueries2 {
         // broadcast 1-row CROSS JOIN — identical semantics (NULL gavg over
         // an empty positive-balance set filters everything either way) but
         // it skips Catalyst's scalar-subquery planning machinery (84 → 39
-        // ms/plan measured, tools/PlanLab) and its build runs CONCURRENTLY
+        // ms/plan measured, BENCH_NOTES.md r9) and its build runs CONCURRENTLY
         // with the oh broadcast. Single reducer (tinyResultSession) →
         // sortWithinPartitions IS the total order: no range exchange, no
         // sampling job. customer is still never exchanged.

@@ -13,7 +13,7 @@ import Q._
   * unbounded and bounded (ROWS/RANGE) frames; per-group top-k benefits from
   * the WindowGroupLimit rule (≈ reference's sorts/partitioned_topk.rs:175).
   */
-object WindowQueries {
+object WindowQueries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
     // Ranking family over a deterministic total order.

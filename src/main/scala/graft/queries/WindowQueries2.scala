@@ -17,7 +17,7 @@ import Q._
   * the same dense_rank+RANGE identity — an independent engine computing the
   * identical semantics.)
   */
-object WindowQueries2 {
+object WindowQueries2 extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
     "win_groups_frame" -> { (s, dir) =>

@@ -28,7 +28,7 @@ import Q._
   * one-row summary so the oracle compares a stable digest while the engine
   * still pays the full wide aggregation — the external_aggr stressor shape.
   */
-object WorkloadQueries {
+object WorkloadQueries extends QuerySet {
 
   private def r2sql(e: String, as: String) =
     s"CAST(FLOOR(($e + 1.37e-4) * 100 + 0.5) AS DOUBLE) / 100 AS $as"

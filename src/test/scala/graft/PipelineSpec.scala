@@ -210,6 +210,28 @@ class PipelineSpec extends AnyFunSuite {
     assert(!allPairs.contains((3L, 4L)))
   }
 
+  test("ngram pairs skip NULL band rows on the plain and salted paths") {
+    // ngramJaccardPairs takes a caller-supplied band column; a NULL band
+    // never equi-joins, so its docs pair with nothing — and the bucket-size
+    // gate must not fail on them.
+    val s = spark; import s.implicits._
+    val docs = Seq(
+      (1L, "a b c d e f g h", Option("web")),
+      (2L, "a b c d e f g x", Option("web")),
+      (3L, "a b c d e f g h", Option.empty[String]),
+      (4L, "a b c d e f g x", Option.empty[String]))
+      .toDF("doc_id", "text", "band")
+    val capKey = "spark.graft.ngramPairs.bucketCap"
+    for (cap <- Seq("4096", "1")) {
+      spark.conf.set(capKey, cap)
+      try {
+        val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", col("band"))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        assert(pairs == Set((1L, 2L)), s"cap=$cap")
+      } finally spark.conf.unset(capKey)
+    }
+  }
+
   test("NgramWindows kernel is bit-identical to the transform/slice form") {
     // r14: the zero-copy window kernel replaced the per-window
     // slice+concat_ws expression inside Dedup.ngramWindows — compare

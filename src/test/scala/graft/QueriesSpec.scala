@@ -22,10 +22,20 @@ class QueriesSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"oracles without queries: $missing")
   }
 
+  test("no query name is registered by two query sets") {
+    // the inventory maps are concatenations, where a repeated name would
+    // silently keep only the later set's entry
+    for (names <- Seq(SparkEntry.querySets.flatMap(_.queries.keys),
+                      SparkEntry.querySets.flatMap(_.oracleSql.keys))) {
+      val dups = names.diff(names.distinct).distinct
+      assert(dups.isEmpty, s"names in more than one query set: $dups")
+    }
+  }
+
   test("inventory size never silently shrinks") {
     // bump when adding queries; catches entries dropped by bad merges/edits
-    assert(SparkEntry.queries.size >= 286, s"got ${SparkEntry.queries.size}")
-    assert(SparkEntry.oracleSql.size >= 286, s"got ${SparkEntry.oracleSql.size}")
+    assert(SparkEntry.queries.size >= 372, s"got ${SparkEntry.queries.size}")
+    assert(SparkEntry.oracleSql.size >= 372, s"got ${SparkEntry.oracleSql.size}")
   }
 
   test("entry returns rows") {

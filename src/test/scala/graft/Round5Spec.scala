@@ -47,8 +47,8 @@ class Round5Spec extends AnyFunSuite {
     // threshold BOTH gates release and the plain hint-free text plans.
     // (The middle SHUFFLE_HASH tier needs bitmapBytes > threshold ≥
     // estBytes/partitions, which tiny-fixture stats can't produce — it is
-    // measured at SF1 in Q12Lab and gated by the same BroadcastAdvisor
-    // code q3 exercises above.)
+    // measured at SF1 (BENCH_NOTES.md r11) and gated by the same
+    // BroadcastAdvisor code q3 exercises above.)
     val sSh = spark.newSession()
     sSh.conf.set("spark.sql.adaptive.enabled", "false") // inspect static plan
     val planSh = graft.queries.TpchQueries.queries("q12_shipmode")(sSh, dir)

@@ -2,23 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (Spark startup is ~5s). */
+/** One shared local session for all suites (Spark startup is ~5s), with
+  * the engine's shipped config. */
 object TestSpark {
   val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // engine default (see GraftSession): prune even when the broadcast
-      // can't be reused — the dim side is broadcast-small by construction
-      .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
 }
