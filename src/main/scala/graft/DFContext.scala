@@ -166,26 +166,12 @@ class DFContext(val spark: SparkSession) {
           })
         }.mkString("'")
       }
-      sqlRewritten(bound)
+      spark.sql(DFContext.rewrite(bound))
     case DeallocRe(name) =>
       preparedStmts.remove(name.toLowerCase)
       spark.emptyDataFrame
-    case q => sqlRewritten(q)
+    case q => spark.sql(DFContext.rewrite(q))
   }
-
-  private def sqlRewritten(query: String): DataFrame =
-    if (DFContext.usesExclude(query)) {
-      // Analysis happens eagerly inside spark.sql, so scoping the parser
-      // flag around the call is race-free for this session.
-      val key = "spark.sql.parser.quotedRegexColumnNames"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "true")
-      try spark.sql(DFContext.rewrite(query))
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    } else spark.sql(DFContext.rewrite(query))
 
   /** Prepared-statement surface (reference: Expr::Placeholder,
     * dataframe with_param_values — dataframe/mod.rs:2384): named `:name`
@@ -522,99 +508,6 @@ object DFContext {
     out.toSeq
   }
 
-  /** Index of the first top-level `GROUP BY` in `s`, or -1. */
-  private def findTopLevelGroupBy(s: String): Int = {
-    val u = s.toUpperCase
-    var depth = 0
-    var i = 0
-    while (i < s.length) {
-      s(i) match {
-        case '\'' =>
-          i += 1
-          while (i < s.length && !(s(i) == '\'' && (i + 1 >= s.length || s(i + 1) != '\''))) {
-            if (s(i) == '\'' && i + 1 < s.length && s(i + 1) == '\'') i += 1
-            i += 1
-          }
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ if depth == 0 && wordAt(u, i, "GROUP") &&
-          u.drop(i + 5).dropWhile(_.isWhitespace).startsWith("BY") => return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** Pipe-operator SQL (reference: sqllogictest/test_files/pipe_operator.slt,
-    * the ZetaSQL-style `|>` dialect DataFusion adopted). A pipeline
-    * `base |> op1 |> op2 …` is folded left into nested standard SQL:
-    *
-    *   - `WHERE p`            → `SELECT * FROM (cur) __p WHERE p`
-    *   - `ORDER BY o`         → `SELECT * FROM (cur) __p ORDER BY o`
-    *   - `LIMIT n` (after ORDER BY: appended so the sort survives)
-    *   - `SELECT list`        → `SELECT list FROM (cur) __p`
-    *   - `EXTEND e AS a`      → `SELECT *, e AS a FROM (cur) __p`
-    *   - `AS name`            → names the current relation for later ops
-    *   - `AGGREGATE aggs [GROUP BY keys]` → keyed/global aggregation
-    *   - `<kind> JOIN rel ON cond` → kept as a FROM fragment so the next
-    *     `SELECT` can still use both sides' qualifiers
-    *   - `UNION/INTERSECT/EXCEPT …` → `(cur) <setop> …`
-    */
-  private[graft] def rewritePipes(query: String): String = {
-    val parts = splitTopLevel(query, "|>")
-    if (parts.length < 2) return query
-    var cur = parts.head.trim
-    var alias: Option[String] = None
-    var pendingFrom: Option[String] = None
-    var lastWasOrder = false
-    for (seg0 <- parts.tail) {
-      val seg = seg0.trim
-      val u = seg.toUpperCase
-      // the current pipeline value as a FROM-able relation
-      val rel = pendingFrom.getOrElse(s"($cur) ${alias.getOrElse("__p")}")
-      def consume(): Unit = { pendingFrom = None; alias = None; lastWasOrder = false }
-      if (u.startsWith("WHERE")) {
-        cur = s"SELECT * FROM $rel WHERE ${seg.drop(5).trim}"; consume()
-      } else if (u.startsWith("ORDER")) {
-        val by = seg.drop(5).trim.drop(2).trim // past ORDER, past BY
-        cur = s"SELECT * FROM $rel ORDER BY $by"; consume(); lastWasOrder = true
-      } else if (u.startsWith("LIMIT") || u.startsWith("OFFSET")) {
-        if (lastWasOrder) { cur = s"$cur $seg"; lastWasOrder = true }
-        else { cur = s"SELECT * FROM $rel $seg"; consume() }
-        pendingFrom = None; alias = None
-      } else if (u.startsWith("SELECT")) {
-        cur = s"SELECT ${seg.drop(6).trim} FROM $rel"; consume()
-      } else if (u.startsWith("EXTEND")) {
-        cur = s"SELECT *, ${seg.drop(6).trim} FROM $rel"; consume()
-      } else if (u.startsWith("AS")) {
-        alias = Some(seg.drop(2).trim)
-      } else if (u.startsWith("AGGREGATE")) {
-        val body = seg.drop(9).trim
-        val g = findTopLevelGroupBy(body)
-        cur =
-          if (g < 0) s"SELECT $body FROM $rel"
-          else {
-            val aggs = body.substring(0, g).trim
-            val keys = body.substring(g).trim.drop(5).trim.drop(2).trim
-            s"SELECT $keys, $aggs FROM $rel GROUP BY $keys"
-          }
-        consume()
-      } else if (u.startsWith("UNION") || u.startsWith("INTERSECT") || u.startsWith("EXCEPT")) {
-        cur = s"($cur) $seg"; consume()
-      } else if (u.startsWith("JOIN") || u.startsWith("LEFT") || u.startsWith("RIGHT") ||
-        u.startsWith("FULL") || u.startsWith("INNER") || u.startsWith("CROSS")) {
-        pendingFrom = Some(s"$rel $seg")
-        cur = s"SELECT * FROM $rel $seg"
-        lastWasOrder = false
-      } else {
-        // unknown operator: pass through untouched and let the parser report
-        cur = s"$cur |> $seg"
-      }
-    }
-    cur
-  }
-
   /** Light SQL pre-rewrite for QUALIFY and DISTINCT ON.
     *
     * - `... QUALIFY <pred> [ORDER BY …] [LIMIT …]` → the predicate is
@@ -630,8 +523,7 @@ object DFContext {
     *   ORDER BY, as in the reference); key expressions may contain parens.
     */
   def rewrite(query: String): String =
-    rewriteOrderByWindow(rewriteStd(rewriteExclude(rewritePipes(
-      rewriteRegexOps(query)))))
+    rewriteOrderByWindow(rewriteStd(rewriteExclude(rewriteRegexOps(query))))
 
   // ------------------------------------------------- Postgres operators
 
@@ -905,26 +797,23 @@ object DFContext {
   }
 
   /** Wildcard modifiers (reference: `wildcard.slt`, sqlparser's
-    * `SELECT * EXCLUDE/EXCEPT (cols)`): rewritten onto Spark's
-    * regex-quoted-column feature — `* EXCLUDE (a, b)` becomes the quoted
-    * regex `` `^(?!(?:a|b)$).+` ``, which the parser expands to every
-    * column NOT in the list. Works at any query depth (subqueries too);
-    * requires `spark.sql.parser.quotedRegexColumnNames=true`, which
-    * [[DFContext.sql]] enables for the duration of the statement iff this
-    * rewrite fired. */
-  private val ExcludeRe =
-    """(?is)\*\s+(?:EXCLUDE|EXCEPT)\s*\(([^()]*)\)""".r
-
-  private[graft] def usesExclude(query: String): Boolean =
-    ExcludeRe.findFirstIn(query).isDefined
-
-  private[graft] def rewriteExclude(query: String): String =
-    ExcludeRe.replaceAllIn(query, m => {
-      val cols = m.group(1).split(",").iterator.map(_.trim.stripPrefix("`").stripSuffix("`"))
-        .filter(_.nonEmpty).map(java.util.regex.Pattern.quote).toSeq
-      scala.util.matching.Regex.quoteReplacement(
-        "`^(?!(?:" + cols.mkString("|") + ")$).+`")
-    })
+    * `SELECT * EXCLUDE (cols)`): Spark parses the same column list natively
+    * as `* EXCEPT (cols)`, qualified `t.*` included, so an EXCLUDE keyword
+    * right after a `*` is swapped for EXCEPT. Lexed, so string literals and
+    * quoted identifiers stay untouched; an unknown column fails analysis,
+    * like the reference's bind error. */
+  private def rewriteExclude(query: String): String =
+    if (!query.toUpperCase.contains("EXCLUDE")) query
+    else {
+      val toks = lex(query)
+      toks.indices.drop(1).filter { i =>
+        val (star, kw) = (toks(i - 1), toks(i))
+        star.kind == 'p' && query(star.start) == '*' && kw.kind == 'w' &&
+          query.substring(kw.start, kw.end).equalsIgnoreCase("EXCLUDE")
+      }.foldRight(query) { (i, q) =>
+        q.substring(0, toks(i).start) + "EXCEPT" + q.substring(toks(i).end)
+      }
+    }
 
   private def rewriteStd(query: String): String = {
     // WITH-prefixed statements: the CTE bodies are parenthesized, so the

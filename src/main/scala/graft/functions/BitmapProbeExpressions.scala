@@ -2,29 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
 
-/** Codegen bit-test probes over the BitmapJoin dense bitsets.
-  *
-  * r13 (optimization round): the probes were Scala-closure UDFs — a boxed
-  * call per fact row at the hottest point of q4/q12/q21 (the filter inside
-  * the lineitem scan). As Catalyst expressions the bit test inlines into
-  * whole-stage codegen (no boxing, no UDF dispatch); the bitset rides the
-  * expression as a referenced object, which Spark ships once per stage in
-  * the broadcast task binary — the same distribution cost the explicit
-  * `sparkContext.broadcast` paid.
-  */
-
-/** Wire spelling for the probe payloads (r14): the bitsets/byte maps ride
-  * SQL text and Substrait as base64 string literals —
-  * `bitmap_exists_probe(key, '<b64>')` re-parses to the exact expression
-  * (TextFunctions.builders registers the names in every session), so the
-  * optimized q4/q12/q21/q9 plans cross the unparser and the Substrait
-  * sweep instead of eroding the wire-coverage floor (r13 verdict item 9).
-  * Payloads are small by construction — the same broadcast-threshold gate
-  * that admits the probe bounds maxKey (bits or bytes). */
+/** Base64 codec for a long array (little-endian words) — the wire form of
+  * a [[DenseKeyProbe]] payload. */
 object ProbePayloadCodec {
   def encodeLongs(a: Array[Long]): String = {
     val bb = java.nio.ByteBuffer.allocate(a.length * 8)
@@ -34,67 +17,38 @@ object ProbePayloadCodec {
   }
   def decodeLongs(s: String): Array[Long] = {
     val bytes = java.util.Base64.getDecoder.decode(s)
-    require(bytes.length % 8 == 0, "bitmap payload must be 8-byte aligned")
+    require(bytes.length % 8 == 0, "probe payload must be 8-byte aligned")
     val lb = java.nio.ByteBuffer.wrap(bytes)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN).asLongBuffer()
     val out = new Array[Long](bytes.length / 8)
     lb.get(out)
     out
   }
-  def encodeBytes(a: Array[Byte]): String =
-    java.util.Base64.getEncoder.encodeToString(a)
-  def decodeBytes(s: String): Array[Byte] =
-    java.util.Base64.getDecoder.decode(s)
 }
 
-/** Set-membership probe (the LEFT SEMI filter): true iff bit `child` is set
-  * in `exists`. NULL child → NULL (a WHERE drops it — EXISTS-false). */
-case class BitmapExistsProbe(child: Expression, exists: Array[Long])
+/** Lookup probe over a dense key map (`BitmapJoin.build`): key `k` owns
+  * the `bits`-wide slot at bit offset `(k mod 64/bits)·bits` of word
+  * `k / (64/bits)`. Yields the slot value as an INT, or NULL for a NULL,
+  * negative or out-of-range key and for an empty slot (0 = absent, which
+  * callers drop — the inner/semi-join semantics).
+  *
+  * A whole-stage-codegen expression rather than a Scala-closure UDF: the
+  * lookup inlines into the scan stage (no per-row boxing or dispatch), and
+  * the generated Java specializes on the constant `bits`, so `bits = 1` is
+  * one shift-and-mask bit test. The map rides the expression as a
+  * referenced object, which Spark ships once per stage in the broadcast
+  * task binary — the same distribution cost an explicit broadcast pays. */
+case class DenseKeyProbe(child: Expression, bits: Int, words: Array[Long])
     extends UnaryExpression {
+  require(bits == 1 || bits == 2 || bits == 8, s"dense_key_probe: bits must be 1, 2 or 8")
 
-  override def prettyName: String = "bitmap_exists_probe"
+  private val shift = Integer.numberOfTrailingZeros(64 / bits) // log2(slots per word)
+  private val mask = (1L << bits) - 1
+
+  override def prettyName: String = DenseKeyProbe.Name
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("bitmap probe key must be BIGINT")
-  override def dataType: DataType = BooleanType
-
-  override def nullSafeEval(input: Any): Any = {
-    val k = input.asInstanceOf[Long]
-    val w = (k >>> 6).toInt
-    k >= 0 && w < exists.length && (exists(w) & (1L << (k & 63))) != 0L
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val ex = ctx.addReferenceObj("exists", exists, "long[]")
-      val w = ctx.freshName("w")
-      s"""
-         |final int $w = (int)($c >>> 6);
-         |${ev.value} = $c >= 0L && $w < $ex.length &&
-         |  ($ex[$w] & (1L << ($c & 63))) != 0L;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Dense byte-map probe (r14): the one-byte-payload generalization of
-  * [[BitmapFlagProbe]] — `bytes(key)` holds a 1..255 payload, 0 means the
-  * key is absent and the probe yields NULL (callers filter it out — the
-  * inner-join drop). For q9's orders side the payload is
-  * `year(o_orderdate) - 1900`, turning the fact⋈orders SHUFFLE_HASH (both
-  * sides exchanged, 1.5M-entry hash relation built per partition) into an
-  * in-scan codegen array index. Same scale gate as the bitmaps: maxKey
-  * bytes must fit the broadcast threshold, else the caller falls back to
-  * the exchange plan. */
-case class ByteMapProbe(child: Expression, bytes: Array[Byte])
-    extends UnaryExpression {
-
-  override def prettyName: String = "bytemap_probe"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("bytemap probe key must be BIGINT")
+    else TypeCheckResult.TypeCheckFailure("dense_key_probe key must be BIGINT")
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
 
@@ -103,23 +57,30 @@ case class ByteMapProbe(child: Expression, bytes: Array[Byte])
     if (v == null) null
     else {
       val k = v.asInstanceOf[Long]
-      if (k < 0 || k >= bytes.length || bytes(k.toInt) == 0) null
-      else java.lang.Integer.valueOf(bytes(k.toInt) & 0xff)
+      if (k < 0 || (k >>> shift) >= words.length) null
+      else {
+        val slot = (words((k >>> shift).toInt) >>> ((k & (64 / bits - 1)) * bits)) & mask
+        if (slot == 0L) null else java.lang.Integer.valueOf(slot.toInt)
+      }
     }
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bm = ctx.addReferenceObj("bytes", bytes, "byte[]")
+    val arr = ctx.addReferenceObj("words", words, "long[]")
     val c = child.genCode(ctx)
+    val w = ctx.freshName("w")
+    val off = if (bits == 1) s"${c.value}" else s"((${c.value} & ${64 / bits - 1}L) * $bits)"
     ev.copy(code =
       code"""
         ${c.code}
         boolean ${ev.isNull} = true;
         int ${ev.value} = 0;
-        if (!${c.isNull} && ${c.value} >= 0L && ${c.value} < $bm.length
-            && $bm[(int)${c.value}] != 0) {
-          ${ev.isNull} = false;
-          ${ev.value} = $bm[(int)${c.value}] & 0xff;
+        if (!${c.isNull} && ${c.value} >= 0L) {
+          final long $w = ${c.value} >>> $shift;
+          if ($w < $arr.length) {
+            ${ev.value} = (int) (($arr[(int) $w] >>> $off) & ${mask}L);
+            ${ev.isNull} = ${ev.value} == 0;
+          }
         }""")
   }
 
@@ -127,51 +88,28 @@ case class ByteMapProbe(child: Expression, bytes: Array[Byte])
     copy(child = newChild)
 }
 
-/** Tri-state flag probe: NULL when the key is absent from `exists`
-  * (callers filter it out — the inner-join drop), else the flag bit. */
-case class BitmapFlagProbe(child: Expression, exists: Array[Long],
-    flags: Array[Long]) extends UnaryExpression {
+/** Wire spelling `dense_key_probe(key, bits, '<base64 longs>')`: the map
+  * rides SQL text and Substrait as a string literal and re-parses to the
+  * exact expression (TextFunctions.builders registers the name in every
+  * session), so the optimized q4/q9/q12/q21 plans cross the unparser and
+  * the Substrait sweep. Payloads are small by construction — the
+  * broadcast-threshold gate that admits the probe bounds maxKey. */
+object DenseKeyProbe {
+  val Name = "dense_key_probe"
 
-  override def prettyName: String = "bitmap_flag_probe"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("bitmap probe key must be BIGINT")
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
+  /** The call's arguments: the key, `bits` and the encoded payload. */
+  def wireArgs(p: DenseKeyProbe): Seq[Expression] =
+    Seq(p.child, Literal(p.bits), Literal(ProbePayloadCodec.encodeLongs(p.words)))
 
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else {
-      val k = v.asInstanceOf[Long]
-      val w = (k >>> 6).toInt
-      val bit = 1L << (k & 63)
-      if (k < 0 || w >= exists.length || (exists(w) & bit) == 0L) null
-      else java.lang.Boolean.valueOf((flags(w) & bit) != 0L)
-    }
+  /** Rebuild the probe from resolved call arguments (key, bits, payload). */
+  def fromArgs(args: Seq[Expression]): DenseKeyProbe = {
+    require(args.size == 3, s"$Name(key, bits, payload) takes 3 arguments, got ${args.size}")
+    def literal(e: Expression, what: String): Any =
+      Option(if (e.foldable) e.eval() else null).getOrElse(throw new IllegalArgumentException(
+        s"$Name: $what must be a non-NULL literal, got ${e.sql}"))
+    require(args(1).dataType == IntegerType && args(2).dataType == StringType,
+      s"$Name(key, bits INT, payload STRING): got ${args.map(_.dataType.sql).mkString(", ")}")
+    DenseKeyProbe(args.head, literal(args(1), "bits").asInstanceOf[Int],
+      ProbePayloadCodec.decodeLongs(literal(args(2), "payload").toString))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ex = ctx.addReferenceObj("exists", exists, "long[]")
-    val fl = ctx.addReferenceObj("flags", flags, "long[]")
-    val c = child.genCode(ctx)
-    val w = ctx.freshName("w")
-    val bit = ctx.freshName("bit")
-    ev.copy(code =
-      code"""
-        ${c.code}
-        boolean ${ev.isNull} = true;
-        boolean ${ev.value} = false;
-        if (!${c.isNull}) {
-          final int $w = (int)(${c.value} >>> 6);
-          final long $bit = 1L << (${c.value} & 63);
-          if (${c.value} >= 0L && $w < $ex.length && ($ex[$w] & $bit) != 0L) {
-            ${ev.isNull} = false;
-            ${ev.value} = ($fl[$w] & $bit) != 0L;
-          }
-        }""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -111,7 +111,7 @@ object TextFunctions {
       es => expressionEager(f(es.map(column)))
     type B = Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
       org.apache.spark.sql.catalyst.expressions.Expression
-    val base: Seq[(String, B)] = Seq(
+    Seq[(String, B)](
       "tokens" -> one(cs => words(cs.head)),
       "token_count" -> one(cs => tokenCount(cs.head)),
       "lang_id" -> one(cs => langId(cs.head)),
@@ -134,37 +134,11 @@ object TextFunctions {
           else throw new IllegalArgumentException(
             s"minhash_sig(text, k): k must be a foldable integer, got ${kExpr.sql}")
         MinHashSig(es.head, k)
-      })
-    base ++ {
-      // r14: wire spellings for the dense-probe family — the payload rides
-      // as a base64 string literal, decoded ONCE at analysis time, so SQL
-      // text / Substrait round-trips of the optimized q4/q12/q21/q9 plans
-      // rebuild the exact codegen expression (see ProbePayloadCodec).
-      def litStr(e: org.apache.spark.sql.catalyst.expressions.Expression,
-          fn: String): String =
-        if (e.foldable && e.dataType == org.apache.spark.sql.types.StringType)
-          Option(e.eval()).map(_.toString).getOrElse(
-            throw new IllegalArgumentException(s"$fn: payload must not be NULL"))
-        else throw new IllegalArgumentException(
-          s"$fn: payload must be a foldable string, got ${e.sql}")
-      Seq[(String, B)](
-        "bitmap_exists_probe" -> { (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          require(es.size == 2, "bitmap_exists_probe(key, payload)")
-          BitmapExistsProbe(es.head,
-            ProbePayloadCodec.decodeLongs(litStr(es(1), "bitmap_exists_probe")))
-        },
-        "bitmap_flag_probe" -> { (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          require(es.size == 3, "bitmap_flag_probe(key, exists, flags)")
-          BitmapFlagProbe(es.head,
-            ProbePayloadCodec.decodeLongs(litStr(es(1), "bitmap_flag_probe")),
-            ProbePayloadCodec.decodeLongs(litStr(es(2), "bitmap_flag_probe")))
-        },
-        "bytemap_probe" -> { (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          require(es.size == 2, "bytemap_probe(key, payload)")
-          ByteMapProbe(es.head,
-            ProbePayloadCodec.decodeBytes(litStr(es(1), "bytemap_probe")))
-        })
-    }
+      },
+      // the dense-key probe's wire spelling (see DenseKeyProbe): SQL text
+      // and Substrait round-trips of the q4/q9/q12/q21 plans rebuild the
+      // exact codegen expression
+      DenseKeyProbe.Name -> DenseKeyProbe.fromArgs)
   }
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {

@@ -4,104 +4,100 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import org.apache.spark.sql.functions._
 
-/** Flag-bitmap broadcast join: a semi-join specialization for build sides
-  * whose join key is a bounded non-negative integer (surrogate keys,
-  * order/part/customer keys). Instead of broadcasting a hash map keyed by
-  * 8-byte entries (~40 B/key with object headers), broadcast two DENSE
-  * bitsets over the key domain — `exists` (the key has a build row; an
-  * absent probe key is dropped, preserving inner-join semantics without
-  * assuming foreign-key integrity) and `flag` (the build row's boolean
-  * payload). For TPC-H q12's 1.5M-order build at SF1 that is 2 × 750 KB
-  * versus a ~60 MB hash relation, and the probe is two bit tests.
+/** Dense key map: a join specialization for build sides whose join key is
+  * a bounded non-negative integer (surrogate keys, order/part/customer
+  * keys). Instead of broadcasting a hash map keyed by 8-byte entries
+  * (~40 B/key with object headers), broadcast ONE dense array over the key
+  * domain: each key owns a slot of `bits` ∈ {1, 2, 8} bits packed into
+  * `Array[Long]`, and slot value 0 means the key has no build row (the
+  * probe yields NULL and the caller drops it — inner/semi-join semantics
+  * without assuming foreign-key integrity). The three uses:
+  *   - q4/q21: `bits = 1`, value 1 — an EXISTS set (the LEFT SEMI filter);
+  *   - q12: `bits = 2`, value 1 or 2 — exists plus one boolean payload;
+  *   - q9: `bits = 8`, value `year - 1900` — a one-byte payload.
+  * For q12's 1.5M-order build at SF1 that is 375 KB versus a ~60 MB hash
+  * relation, and the probe is one shift-and-mask.
   *
   * This mirrors the perfect-hash/min-max join specializations native
   * engines apply when build keys are dense integers (the reference picks
   * its CollectLeft build from stats the same way —
-  * `datafusion/physical-optimizer/src/join_selection.rs`); here the
-  * payload is exactly one boolean, which is what makes the bitset form
-  * strictly smaller than any hash layout.
+  * `datafusion/physical-optimizer/src/join_selection.rs`).
   *
-  * Scale design: the build runs DISTRIBUTED — each partition ORs its keys
-  * into a local bitset sized by the keys it actually saw, and only the
-  * OR-reduction crosses the wire (the same driver-side materialization any
-  * broadcast build pays, at bitset size). Callers gate on footer stats:
-  * 2 × maxKey/8 bytes must fit the broadcast threshold
-  * (`BroadcastAdvisor.shouldBroadcast`), and minKey must be ≥ 0; past the
-  * gate, fall back to the shuffle join. At 100 TB the gate trips (maxKey
-  * ~150 B → 37 GB of bitset) and the plan reverts to the exchange form —
-  * the decision is planning-time stats, not a constant.
+  * Scale design: the build runs DISTRIBUTED — each partition writes its
+  * keys into a local array sized by the keys it actually saw, and only the
+  * OR-merge crosses the wire (the same driver-side materialization any
+  * broadcast build pays, at map size). Callers gate on footer stats
+  * ([[gate]]); past the gate, they fall back to the exchange join. At
+  * 100 TB the gate trips (maxKey ~150 B → 19 GB even at one bit per key)
+  * and the plan reverts to the exchange form — the decision is
+  * planning-time stats, not a constant.
   */
 object BitmapJoin {
 
-  /** One distributed pass over `df`: dense bitsets (exists, flag) over
-    * `df(key)` (non-negative long) with `df(flag)` (boolean). Partition-
-    * local build + OR-reduce; empty input yields empty bitsets (every
-    * probe misses — the inner join of an empty build side). NULL build
-    * keys are skipped (a NULL key never matches under equi-join
-    * semantics, so it must not set a bit for key 0).
-    *
-    * PRECONDITION: build keys must be UNIQUE. Duplicate keys OR-collapse
-    * their flag bits ("any row with this key has flag=true"), which
-    * diverges from inner-join semantics that would emit one probe match
-    * per build row. Callers join on a primary/surrogate key (q12's
-    * o_orderkey); for anything else use the exchange join. */
-  def buildFlagBitmaps(df: DataFrame, key: String, flag: String)
-      : (Array[Long], Array[Long]) =
-    org.apache.spark.sql.GraftSqlBridge.internalRdd(
-      df.select(col(key).cast("long"), col(flag).cast("boolean")))
-      .mapPartitions { it =>
-        var exists = new Array[Long](1 << 10)
-        var flags = new Array[Long](1 << 10)
-        var maxW = -1
-        it.filterNot(_.isNullAt(0)).foreach { r =>
-          val k = r.getLong(0)
-          require(k >= 0, s"BitmapJoin: negative key $k")
-          val w = (k >> 6).toInt
-          if (w >= exists.length) {
-            var n = exists.length
-            while (n <= w) n <<= 1
-            exists = java.util.Arrays.copyOf(exists, n)
-            flags = java.util.Arrays.copyOf(flags, n)
-          }
-          val bit = 1L << (k & 63)
-          exists(w) |= bit
-          if (!r.isNullAt(1) && r.getBoolean(1)) flags(w) |= bit
-          if (w > maxW) maxW = w
-        }
-        if (maxW < 0) Iterator.empty
-        else Iterator.single((java.util.Arrays.copyOf(exists, maxW + 1),
-          java.util.Arrays.copyOf(flags, maxW + 1)))
-      }
-      .fold((Array.emptyLongArray, Array.emptyLongArray)) { (a, b) =>
-        val ((ae, af), (be, bf)) =
-          if (a._1.length >= b._1.length) (a, b) else (b, a)
-        var i = 0
-        while (i < be.length) { ae(i) |= be(i); af(i) |= bf(i); i += 1 }
-        (ae, af)
-      }
+  private def checkBits(bits: Int): Unit =
+    require(bits == 1 || bits == 2 || bits == 8,
+      s"dense key map: bits must be 1, 2 or 8, got $bits")
 
-  /** Exists-only build: ONE dense bitset over `df(key)` — the semi-join
-    * specialization (an EXISTS/IN subquery with no payload is exactly a
-    * set). Unlike the flag form, duplicate keys are fine here: OR is
-    * idempotent and set membership IS the semi-join's semantics. NULL
-    * keys are skipped (never equi-match). */
-  def buildExistsBitmap(df: DataFrame, key: String): Array[Long] =
+  private def conflict(k: Long, a: Long, b: Long): Nothing =
+    throw new IllegalArgumentException(
+      s"dense key map: duplicate build key $k with conflicting values $a and $b")
+
+  /** OR-merge two map words, failing on a slot both sides set to different
+    * non-zero values (equal values are idempotent, so `bits = 1` never
+    * conflicts). `base` is the first key of the word. */
+  private def mergeWord(a: Long, b: Long, bits: Int, base: Long): Long = {
+    if (bits > 1 && a != 0L && b != 0L && a != b) {
+      val mask = (1L << bits) - 1
+      var pos = 0
+      while (pos < 64) {
+        val sa = (a >>> pos) & mask
+        val sb = (b >>> pos) & mask
+        if (sa != 0L && sb != 0L && sa != sb) conflict(base + pos / bits, sa, sb)
+        pos += bits
+      }
+    }
+    a | b
+  }
+
+  /** One distributed pass over `df`: slot(`df(key)`) = `value` for every
+    * row. Partition-local build + OR-merge; empty input yields an empty map
+    * (every probe misses — the join of an empty build side). NULL keys and
+    * NULL values are skipped (a NULL key never equi-matches, so it must
+    * not occupy slot 0). A negative key or a value outside `1..2^bits-1`
+    * fails the build, so callers gate on footer min/max first.
+    *
+    * A key written twice with different values fails loudly: the payload
+    * forms (bits 2 and 8) need UNIQUE build keys (q12/q9 join on the
+    * o_orderkey primary key), and a duplicate would otherwise keep an
+    * arbitrary row's value. */
+  def build(df: DataFrame, key: String, value: Column, bits: Int): Array[Long] = {
+    checkBits(bits)
+    val shift = Integer.numberOfTrailingZeros(64 / bits) // log2(slots per word)
+    val maxV = (1L << bits) - 1
     org.apache.spark.sql.GraftSqlBridge.internalRdd(
-      df.select(col(key).cast("long")))
+      df.select(col(key).cast("long"), value.cast("long")))
       .mapPartitions { it =>
         var arr = new Array[Long](1 << 10)
         var maxW = -1
-        it.filterNot(_.isNullAt(0)).foreach { r =>
-          val k = r.getLong(0)
-          require(k >= 0, s"BitmapJoin: negative key $k")
-          val w = (k >> 6).toInt
-          if (w >= arr.length) {
-            var n = arr.length
-            while (n <= w) n <<= 1
-            arr = java.util.Arrays.copyOf(arr, n)
+        it.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1)) {
+            val k = r.getLong(0)
+            val v = r.getLong(1)
+            require(k >= 0, s"dense key map: negative key $k")
+            require((k >>> shift) < Int.MaxValue - 8, s"dense key map: key $k out of dense range")
+            require(v >= 1 && v <= maxV, s"dense key map: value $v out of 1..$maxV")
+            val w = (k >>> shift).toInt
+            if (w >= arr.length) {
+              var n = arr.length
+              while (n <= w) n <<= 1
+              arr = java.util.Arrays.copyOf(arr, n)
+            }
+            val off = (k & ((1L << shift) - 1)) * bits
+            val old = (arr(w) >>> off) & maxV
+            if (old == 0L) arr(w) |= v << off
+            else if (old != v) conflict(k, old, v)
+            if (w > maxW) maxW = w
           }
-          arr(w) |= 1L << (k & 63)
-          if (w > maxW) maxW = w
         }
         if (maxW < 0) Iterator.empty
         else Iterator.single(java.util.Arrays.copyOf(arr, maxW + 1))
@@ -109,114 +105,31 @@ object BitmapJoin {
       .fold(Array.emptyLongArray) { (a, b) =>
         val (big, small) = if (a.length >= b.length) (a, b) else (b, a)
         var i = 0
-        while (i < small.length) { big(i) |= small(i); i += 1 }
-        big
-      }
-
-  /** Dense byte-map build (r14): one distributed pass over `df` producing
-    * `bytes(key) = value` for every row, 0 = absent. `value` must be an
-    * integer column in 1..255 after the caller's own offsetting (q9 stores
-    * `year(o_orderdate) - 1900`); out-of-range values fail the build, so a
-    * caller must gate on footer min/max first. NULL keys/values are
-    * skipped (an equi-join never matches them).
-    *
-    * PRECONDITION: build keys must be UNIQUE (primary/surrogate key) — a
-    * duplicate key would keep one arbitrary row's value; with a true PK
-    * both writes carry the same value and the merge is idempotent. */
-  def buildByteMap(df: DataFrame, key: String, value: Column): Array[Byte] =
-    org.apache.spark.sql.GraftSqlBridge.internalRdd(
-      df.select(col(key).cast("long"), value.cast("int")))
-      .mapPartitions { it =>
-        var arr = new Array[Byte](1 << 13)
-        var maxK = -1L
-        it.foreach { r =>
-          if (!r.isNullAt(0) && !r.isNullAt(1)) {
-            val k = r.getLong(0)
-            val v = r.getInt(1)
-            require(k >= 0 && k < Int.MaxValue - 8,
-              s"BitmapJoin: bytemap key $k out of dense range")
-            require(v >= 1 && v <= 255, s"BitmapJoin: bytemap value $v out of 1..255")
-            if (k >= arr.length) {
-              var n = arr.length
-              while (n <= k) n <<= 1
-              arr = java.util.Arrays.copyOf(arr, n)
-            }
-            arr(k.toInt) = v.toByte
-            if (k > maxK) maxK = k
-          }
-        }
-        if (maxK < 0) Iterator.empty
-        else Iterator.single(java.util.Arrays.copyOf(arr, maxK.toInt + 1))
-      }
-      .fold(Array.emptyByteArray) { (a, b) =>
-        val (big, small) = if (a.length >= b.length) (a, b) else (b, a)
-        var i = 0
         while (i < small.length) {
-          if (small(i) != 0) big(i) = small(i)
+          big(i) = mergeWord(big(i), small(i), bits, i.toLong << shift)
           i += 1
         }
         big
       }
+  }
 
-  /** Int-valued lookup probe over the byte map: NULL when the key is
-    * absent (callers filter it out — the inner-join drop), else the 1..255
-    * payload. Codegen expression, same rationale as [[existsProbe]]. */
-  def byteMapProbe(spark: SparkSession, bytes: Array[Byte])
-      : Column => Column = (k: Column) =>
+  /** Codegen lookup probe over a [[build]] result: NULL when the key is
+    * absent (callers filter it out — the inner-join drop), else the slot's
+    * 1..2^bits-1 value. Returns a Column transformer so call sites read
+    * like a function application. */
+  def probe(words: Array[Long], bits: Int): Column => Column = (k: Column) =>
     org.apache.spark.sql.GraftSqlBridge.column(
-      graft.functions.ByteMapProbe(
-        org.apache.spark.sql.GraftSqlBridge.expression(k), bytes))
+      graft.functions.DenseKeyProbe(
+        org.apache.spark.sql.GraftSqlBridge.expression(k), bits, words))
 
-  /** Footer-stats gate for the byte-map form: maxKey BYTES must fit the
-    * broadcast threshold (8× the exists-bitmap footprint for the same key
-    * domain) and keys must be non-negative. The 1..255 payload range is
-    * the CALLER's check (it knows the value column's units — q9 gates the
-    * year range off the date footer's microsPerUnit). */
-  def gateByteMap(spark: SparkSession,
-      keyStats: Option[graft.plans.BroadcastAdvisor.ColStats]): Boolean =
+  /** Footer-stats gate: keys are non-negative and the map (maxKey·bits/8
+    * bytes) fits the broadcast threshold. Parquet footers carry no
+    * distinct counts, so the unique-key precondition of the payload forms
+    * cannot be checked here — it is the caller's schema knowledge (primary
+    * key), and [[build]] fails loudly if it does not hold. */
+  def gate(spark: SparkSession,
+      keyStats: Option[graft.plans.BroadcastAdvisor.ColStats], bits: Int): Boolean =
     keyStats.exists(c => c.minLong.exists(_ >= 0) &&
-      c.maxLong.exists(mk =>
-        graft.plans.BroadcastAdvisor.shouldBroadcast(spark, mk + 16)))
-
-  /** Boolean membership probe over the exists bitset (the LEFT SEMI
-    * filter). A NULL probe key yields NULL, which a WHERE drops —
-    * EXISTS-false.
-    *
-    * r13: a whole-stage-codegen expression instead of a Scala-closure UDF —
-    * the bit test inlines into the scan stage (no per-row boxing/dispatch);
-    * the bitset rides the expression's referenced objects, shipped once per
-    * stage in the broadcast task binary (the same distribution cost the
-    * explicit `broadcast` paid). Returns a Column transformer so call
-    * sites read like the old UDF application. */
-  def existsProbe(spark: SparkSession, exists: Array[Long])
-      : Column => Column = (k: Column) =>
-    org.apache.spark.sql.GraftSqlBridge.column(
-      graft.functions.BitmapExistsProbe(
-        org.apache.spark.sql.GraftSqlBridge.expression(k), exists))
-
-  /** Footer-stats gate for the exists-only (one-plane) form. */
-  def gateExists(spark: SparkSession,
-      keyStats: Option[graft.plans.BroadcastAdvisor.ColStats]): Boolean =
-    keyStats.exists(c => c.minLong.exists(_ >= 0) &&
-      c.maxLong.exists(mk =>
-        graft.plans.BroadcastAdvisor.shouldBroadcast(spark, mk / 8 + 16)))
-
-  /** Tri-state probe column over the bitsets: NULL when the key is absent
-    * from `exists` (callers filter it out — the inner-join drop), else the
-    * flag bit. Codegen expression, same rationale as [[existsProbe]]. */
-  def flagProbe(spark: SparkSession, exists: Array[Long],
-      flags: Array[Long]): Column => Column = (k: Column) =>
-    org.apache.spark.sql.GraftSqlBridge.column(
-      graft.functions.BitmapFlagProbe(
-        org.apache.spark.sql.GraftSqlBridge.expression(k), exists, flags))
-
-  /** Footer-stats gate: bitset pair fits the broadcast threshold and keys
-    * are non-negative. Parquet footers carry no distinct counts, so the
-    * unique-key PRECONDITION (see buildFlagBitmaps) cannot be checked
-    * here — it is the caller's schema knowledge (primary key). */
-  def gate(spark: SparkSession, keyStats: Option[graft.plans.BroadcastAdvisor.ColStats])
-      : Boolean =
-    keyStats.exists(c => c.minLong.exists(_ >= 0) &&
-      c.maxLong.exists(mk =>
-        graft.plans.BroadcastAdvisor.shouldBroadcast(spark, 2L * (mk / 8 + 16))))
+      c.maxLong.exists(mk => graft.plans.BroadcastAdvisor.shouldBroadcast(spark,
+        (mk.toDouble * bits / 8 + 16).toLong)))
 }

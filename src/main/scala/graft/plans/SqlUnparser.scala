@@ -134,24 +134,13 @@ object SqlUnparser {
       // emit "UDF(...)", which cannot re-parse (q12's bitmap probe)
       case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF =>
         unsupported(s"Scala UDF ${u.udfName.getOrElse("(anonymous)")}")
-      // r14: the codegen probes' payloads ride as base64 string literals —
-      // the registered builders (TextFunctions) decode them back to the
-      // exact expression on re-parse, so the optimized q4/q12/q21/q9 plans
-      // cross the wire instead of eroding the sweep floor (payload size is
-      // bounded by the same broadcast-threshold gate that admits the probe)
-      case b: graft.functions.BitmapExistsProbe =>
-        RawSql(s"bitmap_exists_probe(${rewrite(b.child).sql}, " +
-          s"'${graft.functions.ProbePayloadCodec.encodeLongs(b.exists)}')",
-          b.dataType)
-      case b: graft.functions.BitmapFlagProbe =>
-        RawSql(s"bitmap_flag_probe(${rewrite(b.child).sql}, " +
-          s"'${graft.functions.ProbePayloadCodec.encodeLongs(b.exists)}', " +
-          s"'${graft.functions.ProbePayloadCodec.encodeLongs(b.flags)}')",
-          b.dataType)
-      case b: graft.functions.ByteMapProbe =>
-        RawSql(s"bytemap_probe(${rewrite(b.child).sql}, " +
-          s"'${graft.functions.ProbePayloadCodec.encodeBytes(b.bytes)}')",
-          b.dataType)
+      // the dense-key probe's map rides as a base64 string literal — the
+      // registered builder (TextFunctions) decodes it back to the exact
+      // expression on re-parse (payload size is bounded by the same
+      // broadcast-threshold gate that admits the probe)
+      case p: graft.functions.DenseKeyProbe =>
+        RawSql(graft.functions.DenseKeyProbe.wireArgs(p).map(rewrite(_).sql)
+          .mkString(s"${graft.functions.DenseKeyProbe.Name}(", ", ", ")"), p.dataType)
       // PIVOT analyzes into the internal PivotFirst aggregate, which has
       // no SQL spelling — fail loudly rather than emit "pivotfirst(...)"
       case p: org.apache.spark.sql.catalyst.expressions.aggregate.PivotFirst =>

@@ -606,26 +606,9 @@ object SubstraitSerde {
     case "contains" => args(0).contains(args(1))
     case "starts_with" => args(0).startsWith(args(1))
     case "ends_with" => args(0).endsWith(args(1))
-    case "bitmap_exists_probe" | "bitmap_flag_probe" | "bytemap_probe" =>
-      // r14 dense-probe family: payload literals decode back to the exact
-      // codegen expression (see ProbePayloadCodec / TextFunctions.builders)
-      def litStr(c: Column): String = {
-        val e = org.apache.spark.sql.GraftSqlBridge.expressionEager(c)
-        require(e.foldable && e.dataType ==
-          org.apache.spark.sql.types.StringType, s"probe payload literal: ${e.sql}")
-        e.eval().toString
-      }
-      val key = org.apache.spark.sql.GraftSqlBridge.expressionEager(args.head)
-      val built: org.apache.spark.sql.catalyst.expressions.Expression = name match {
-        case "bitmap_exists_probe" => graft.functions.BitmapExistsProbe(key,
-          graft.functions.ProbePayloadCodec.decodeLongs(litStr(args(1))))
-        case "bitmap_flag_probe" => graft.functions.BitmapFlagProbe(key,
-          graft.functions.ProbePayloadCodec.decodeLongs(litStr(args(1))),
-          graft.functions.ProbePayloadCodec.decodeLongs(litStr(args(2))))
-        case _ => graft.functions.ByteMapProbe(key,
-          graft.functions.ProbePayloadCodec.decodeBytes(litStr(args(1))))
-      }
-      org.apache.spark.sql.GraftSqlBridge.column(built)
+    case graft.functions.DenseKeyProbe.Name =>
+      org.apache.spark.sql.GraftSqlBridge.column(graft.functions.DenseKeyProbe
+        .fromArgs(args.map(org.apache.spark.sql.GraftSqlBridge.expressionEager)))
     case other =>
       throw new IllegalArgumentException(s"substrait: unsupported function $other")
   }
@@ -1113,26 +1096,10 @@ object SubstraitSerde {
       case CLike(l, r, _) => fn("like", Seq(l, r))
       case CIsNull(c) => fn("is_null", Seq(c))
       case CIsNotNull(c) => fn("is_not_null", Seq(c))
-      // r14: dense-probe family — payload rides as a base64 string literal
-      // (extension-space function names; consume rebuilds the exact
-      // expression via ProbePayloadCodec). Bounded by the probe's own
-      // broadcast-threshold gate.
-      case b: graft.functions.BitmapExistsProbe =>
-        fn("bitmap_exists_probe", Seq(b.child, CLit(
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            graft.functions.ProbePayloadCodec.encodeLongs(b.exists)),
-          StringType)))
-      case b: graft.functions.BitmapFlagProbe =>
-        fn("bitmap_flag_probe", Seq(b.child,
-          CLit(org.apache.spark.unsafe.types.UTF8String.fromString(
-            graft.functions.ProbePayloadCodec.encodeLongs(b.exists)), StringType),
-          CLit(org.apache.spark.unsafe.types.UTF8String.fromString(
-            graft.functions.ProbePayloadCodec.encodeLongs(b.flags)), StringType)))
-      case b: graft.functions.ByteMapProbe =>
-        fn("bytemap_probe", Seq(b.child, CLit(
-          org.apache.spark.unsafe.types.UTF8String.fromString(
-            graft.functions.ProbePayloadCodec.encodeBytes(b.bytes)),
-          StringType)))
+      // dense-key probe: the map rides as a base64 string literal in an
+      // extension-space function; consume rebuilds the exact expression
+      case p: graft.functions.DenseKeyProbe =>
+        fn(graft.functions.DenseKeyProbe.Name, graft.functions.DenseKeyProbe.wireArgs(p))
       case CCast(child, dt, _, _) =>
         JObject("cast" -> JObject(
           "type" -> typeJson(dt, e.nullable),

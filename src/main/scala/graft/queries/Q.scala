@@ -33,6 +33,21 @@ object Q {
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     graft.Tables.load(s, dir, name)
 
+  /** One cached child session per (parent, profile): weak on the parent,
+    * so it is collected with it; it shares the SparkContext, so executors
+    * and caches are common and only the session conf differs. */
+  private val childSessions =
+    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, SparkSession]]()
+  private def childSession(s: SparkSession, profile: String)(
+      confs: (String, String)*): SparkSession = childSessions.synchronized {
+    childSessions.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
+      .getOrElseUpdate(profile, {
+        val ss = s.newSession()
+        confs.foreach { case (k, v) => ss.conf.set(k, v) }
+        ss
+      })
+  }
+
   /** Fast-path session for short static-plan queries: AQE disabled.
     *
     * AQE's per-stage materialize→replan handoffs cost a measured ~70-80 ms
@@ -41,35 +56,32 @@ object Q {
     * explicit broadcast hints, no data-dependent join choices, only
     * KB-scale exchanges left to coalesce. Adaptivity stays ON (the session
     * default) for everything with real shuffles, where runtime coalescing
-    * and skew handling are the 100-TB-correct behavior.
-    *
-    * One child session per parent (weak — collected with the parent); it
-    * shares the SparkContext, so executors/caches are common and only the
-    * session conf differs. */
-  private val fastSessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
-  def staticPlanSession(s: SparkSession): SparkSession = fastSessions.synchronized {
-    val existing = fastSessions.get(s)
-    if (existing != null) existing
-    else {
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.adaptive.enabled", "false")
-      // These queries' post-scan exchanges carry ≤4 MB; 32 final-agg tasks
-      // are pure launch latency for that (measured 146→106 ms on the SF1 q3
-      // final stage at 8). With AQE on, coalescePartitions reaches the same
-      // shape at runtime — this is the static mirror of it. At cluster
-      // scale these queries run on the default AQE session instead.
-      ss.conf.set("spark.sql.shuffle.partitions", "8")
-      // Constraint propagation infers IsNotNull/transitive predicates from
-      // join keys — useful inference for machine-generated plans, a pure
-      // planning tax here where every filter is already explicit (measured
-      // 59→41 ms/plan on the q3 shape; the reference has no equivalent
-      // optimizer pass either). Scan pushdown of the explicit predicates is
-      // unaffected.
-      ss.conf.set("spark.sql.constraintPropagation.enabled", "false")
-      fastSessions.put(s, ss)
-      ss
-    }
-  }
+    * and skew handling are the 100-TB-correct behavior. */
+  def staticPlanSession(s: SparkSession): SparkSession = childSession(s, "static")(
+    "spark.sql.adaptive.enabled" -> "false",
+    // These queries' post-scan exchanges carry ≤4 MB; 32 final-agg tasks
+    // are pure launch latency for that (measured 146→106 ms on the SF1 q3
+    // final stage at 8). With AQE on, coalescePartitions reaches the same
+    // shape at runtime — this is the static mirror of it. At cluster
+    // scale these queries run on the default AQE session instead.
+    "spark.sql.shuffle.partitions" -> "8",
+    // Constraint propagation infers IsNotNull/transitive predicates from
+    // join keys — useful inference for machine-generated plans, a pure
+    // planning tax here where every filter is already explicit (measured
+    // 59→41 ms/plan on the q3 shape; the reference has no equivalent
+    // optimizer pass either). Scan pushdown of the explicit predicates is
+    // unaffected.
+    "spark.sql.constraintPropagation.enabled" -> "false")
+
+  /** staticPlanSession variant that KEEPS the session's shuffle width
+    * (32 = cores in the bench harness): for static 3-stage shapes whose
+    * one real shuffle carries MBs and wants every core (q12's mid-size
+    * partitioned hash join), where the 8-partition static session would
+    * run the join on a quarter of the machine. AQE off for the same
+    * reason as staticPlanSession — the plan is decided at planning time. */
+  def staticWideSession(s: SparkSession): SparkSession = childSession(s, "wide")(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.constraintPropagation.enabled" -> "false")
 
   /** staticPlanSession variant with ONE shuffle partition, for queries
     * whose every exchange is provably tiny (a grouped aggregate over a
@@ -79,55 +91,27 @@ object Q {
     * single-partition child satisfies the Sort's required distribution, so
     * the ORDER BY's range exchange (and its sampling job) vanish — two
     * whole stages off a latency-bound query. */
-  /** staticPlanSession variant that KEEPS the session's shuffle width
-    * (32 = cores in the bench harness): for static 3-stage shapes whose
-    * one real shuffle carries MBs and wants every core (q12's mid-size
-    * partitioned hash join), where the 8-partition static session would
-    * run the join on a quarter of the machine. AQE off for the same
-    * reason as staticPlanSession — the plan is decided at planning time. */
-  private val wideSessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
-  def staticWideSession(s: SparkSession): SparkSession = wideSessions.synchronized {
-    val existing = wideSessions.get(s)
-    if (existing != null) existing
-    else {
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.adaptive.enabled", "false")
-      ss.conf.set("spark.sql.constraintPropagation.enabled", "false")
-      wideSessions.put(s, ss)
-      ss
-    }
-  }
-
-  private val tinySessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
-  def tinyResultSession(s: SparkSession): SparkSession = tinySessions.synchronized {
-    val existing = tinySessions.get(s)
-    if (existing != null) existing
-    else {
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.adaptive.enabled", "false")
-      ss.conf.set("spark.sql.shuffle.partitions", "1")
-      ss.conf.set("spark.sql.constraintPropagation.enabled", "false")
-      // r13 (OPTIMIZATION_r13.md, q22 variant G, min-of-8 interleave: shipped
-      // 0.649 → excluded-rules 0.555): rules that CANNOT fire on the
-      // tiny-result shapes routed here (explicit joins — no reorder; no
-      // CSV/JSON exprs, decimals, object serialization, concats, repartitions
-      // or windows) still walk the whole tree every plan. Plan-constant
-      // shaving, scale-independent; results oracle-gated as always.
-      ss.conf.set("spark.sql.optimizer.excludedRules", Seq(
-        "org.apache.spark.sql.catalyst.optimizer.CostBasedJoinReorder",
-        "org.apache.spark.sql.catalyst.optimizer.ReorderJoin",
-        "org.apache.spark.sql.catalyst.optimizer.OptimizeCsvJsonExprs",
-        "org.apache.spark.sql.catalyst.optimizer.DecimalAggregates",
-        "org.apache.spark.sql.catalyst.optimizer.ObjectSerializerPruning",
-        "org.apache.spark.sql.catalyst.optimizer.EliminateSerialization",
-        "org.apache.spark.sql.catalyst.optimizer.CombineConcats",
-        "org.apache.spark.sql.catalyst.optimizer.OptimizeRepartition",
-        "org.apache.spark.sql.catalyst.optimizer.TransposeWindow",
-        "org.apache.spark.sql.catalyst.optimizer.InferWindowGroupLimit").mkString(","))
-      tinySessions.put(s, ss)
-      ss
-    }
-  }
+  def tinyResultSession(s: SparkSession): SparkSession = childSession(s, "tiny")(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> "1",
+    "spark.sql.constraintPropagation.enabled" -> "false",
+    // r13 (OPTIMIZATION_r13.md, q22 variant G, min-of-8 interleave: shipped
+    // 0.649 → excluded-rules 0.555): rules that CANNOT fire on the
+    // tiny-result shapes routed here (explicit joins — no reorder; no
+    // CSV/JSON exprs, decimals, object serialization, concats, repartitions
+    // or windows) still walk the whole tree every plan. Plan-constant
+    // shaving, scale-independent; results oracle-gated as always.
+    "spark.sql.optimizer.excludedRules" -> Seq(
+      "org.apache.spark.sql.catalyst.optimizer.CostBasedJoinReorder",
+      "org.apache.spark.sql.catalyst.optimizer.ReorderJoin",
+      "org.apache.spark.sql.catalyst.optimizer.OptimizeCsvJsonExprs",
+      "org.apache.spark.sql.catalyst.optimizer.DecimalAggregates",
+      "org.apache.spark.sql.catalyst.optimizer.ObjectSerializerPruning",
+      "org.apache.spark.sql.catalyst.optimizer.EliminateSerialization",
+      "org.apache.spark.sql.catalyst.optimizer.CombineConcats",
+      "org.apache.spark.sql.catalyst.optimizer.OptimizeRepartition",
+      "org.apache.spark.sql.catalyst.optimizer.TransposeWindow",
+      "org.apache.spark.sql.catalyst.optimizer.InferWindowGroupLimit").mkString(","))
 
   /** Register the fixture tables as temp views once per (session, dir) —
     * `createOrReplaceTempView` costs ~20-25 ms per table-triple per call

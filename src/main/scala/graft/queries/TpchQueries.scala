@@ -194,26 +194,26 @@ object TpchQueries extends QuerySet {
       import graft.plans.BroadcastAdvisor._
       val o = tableStats(s0, s"$dir/orders.parquet")
       // r11: the orders side carries exactly ONE boolean per key, so the
-      // whole build collapses to two dense bitsets over o_orderkey
-      // (BitmapJoin) — 2×750 KB at SF1 vs any hash relation, zero
-      // shuffles left but the ≤2-group agg. BENCH_NOTES.md r11 (SF1,
-      // interleaved min-of-8): bitmap-exact 0.274 s vs gated SHUFFLE_HASH
-      // 0.522 vs plain AQE 0.857 vs broadcast 0.814, identical results. Gated
-      // on footer maxKey (2×maxKey/8 ≤ broadcast threshold, minKey ≥ 0);
-      // past it, the r5-measured SHUFFLE_HASH/AQE chain is unchanged.
-      if (graft.operators.BitmapJoin.gate(s0, o.cols.get("o_orderkey"))) {
+      // whole build collapses to a dense 2-bit key map over o_orderkey
+      // (BitmapJoin; slot 1 = low, 2 = high, 0 = absent) — 375 KB at SF1
+      // vs any hash relation, zero shuffles left but the ≤2-group agg.
+      // BENCH_NOTES.md r11 (SF1, interleaved min-of-8, as two 1-bit
+      // planes): bitmap-exact 0.274 s vs gated SHUFFLE_HASH 0.522 vs plain
+      // AQE 0.857 vs broadcast 0.814, identical results. Gated on footer
+      // maxKey (2×maxKey/8 ≤ broadcast threshold, minKey ≥ 0); past it, the
+      // r5-measured SHUFFLE_HASH/AQE chain is unchanged.
+      if (graft.operators.BitmapJoin.gate(s0, o.cols.get("o_orderkey"), 2)) {
         val s = staticWideSession(s0)
         fixtureViews(s, dir)
         val orders = s.table("orders").select(col("o_orderkey"),
           col("o_orderpriority").isin("1-URGENT", "2-HIGH").as("hi"))
-        val (ex, hi) = graft.operators.BitmapJoin
-          .buildFlagBitmaps(orders, "o_orderkey", "hi")
-        val probe = graft.operators.BitmapJoin.flagProbe(s, ex, hi)
+        val probe = graft.operators.BitmapJoin.probe(graft.operators.BitmapJoin
+          .build(orders, "o_orderkey", when(col("hi"), 2).otherwise(1), 2), 2)
         s.table("lineitem")
           .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
             col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
           .select(col("l_linestatus"),
-            probe(col("l_orderkey").cast("long")).as("hi"))
+            (probe(col("l_orderkey").cast("long")) === 2).as("hi"))
           .filter(col("hi").isNotNull) // inner-join drop for unmatched keys
           .groupBy(col("l_linestatus"))
           .agg(sum(when(col("hi"), 1).otherwise(0)).as("high_line_count"),

@@ -41,7 +41,7 @@ object TpchQueries2 extends QuerySet {
       val l = tableStats(s0, s"$dir/lineitem.parquet")
       // r12: EXISTS(σ lineitem) carries NO payload — it is a pure SET of
       // orderkeys, so the whole subquery collapses to ONE dense bitset
-      // over l_orderkey (BitmapJoin exists-only form; duplicates are
+      // over l_orderkey (a 1-bit BitmapJoin key map; duplicates are
       // idempotent under OR, exactly semi-join semantics). Built by a
       // partition-OR pass over the 2-column filtered fact scan; the
       // 3-month order window probes it with a bit test. BENCH_NOTES.md
@@ -50,18 +50,18 @@ object TpchQueries2 extends QuerySet {
       // identical results. Gated on footer maxKey (maxKey/8 ≤ broadcast
       // threshold, minKey ≥ 0); past the gate the prior measured
       // broadcast-window/AQE chain below is unchanged.
-      if (graft.operators.BitmapJoin.gateExists(s0, l.cols.get("l_orderkey"))) {
+      if (graft.operators.BitmapJoin.gate(s0, l.cols.get("l_orderkey"), 1)) {
         val s = staticWideSession(s0)
         fixtureViews(s, dir)
         val keys = s.table("lineitem")
           .filter(col("l_quantity") > 45)
           .select(col("l_orderkey"))
-        val bm = graft.operators.BitmapJoin.buildExistsBitmap(keys, "l_orderkey")
-        val hasLine = graft.operators.BitmapJoin.existsProbe(s, bm)
+        val hasLine = graft.operators.BitmapJoin.probe(
+          graft.operators.BitmapJoin.build(keys, "l_orderkey", lit(1), 1), 1)
         s.table("orders")
           .filter(col("o_orderdate") >= lit("1996-07-01").cast("timestamp") &&
             col("o_orderdate") < lit("1996-10-01").cast("timestamp"))
-          .filter(hasLine(col("o_orderkey").cast("long")))
+          .filter(hasLine(col("o_orderkey").cast("long")).isNotNull)
           .groupBy(col("o_orderpriority"))
           .agg(count(lit(1)).as("order_count"))
           .coalesce(1).sortWithinPartitions("o_orderpriority")
@@ -203,12 +203,12 @@ object TpchQueries2 extends QuerySet {
       // looked up by the PK o_orderkey — a 1-byte payload per key. Past the
       // r13 fold the SHUFFLE_HASH still exchanged BOTH the folded fact
       // (orderkey, amount, n_name) and all of orders, then built a
-      // 1.5M-entry hash relation per partition. A dense byte map
-      // (bytes[o_orderkey] = year-1900, 0 = absent → NULL → dropped, the
+      // 1.5M-entry hash relation per partition. A dense 8-bit key map
+      // (slot[o_orderkey] = year-1900, 0 = absent → NULL → dropped, the
       // inner-join semantics without assuming FK integrity) turns that
       // join into an in-scan codegen array index: the only exchange left
       // is the ~175-group final aggregate. Gated on footer stats like
-      // q21's bitmap: maxKey bytes ≤ broadcast threshold, minKey ≥ 0, and
+      // q21's 1-bit map: maxKey bytes ≤ broadcast threshold, minKey ≥ 0, and
       // o_orderdate's footer year range inside 1901..2155 so the payload
       // fits 1..255 (at 100 TB maxKey trips the gate and the exchange
       // plan below is unchanged). o_orderkey unique + o_orderdate non-null
@@ -220,13 +220,12 @@ object TpchQueries2 extends QuerySet {
         mn <- c.minLong; mx <- c.maxLong; u <- c.microsPerUnit
       } yield yearOf(mn, u) >= 1901 && yearOf(mx, u) <= 2155).getOrElse(false))
       if (bc && yearsOk &&
-          graft.operators.BitmapJoin.gateByteMap(s0, o.cols.get("o_orderkey"))) {
+          graft.operators.BitmapJoin.gate(s0, o.cols.get("o_orderkey"), 8)) {
         val s = staticPlanSession(s0)
         fixtureViews(s, dir)
-        val ym = graft.operators.BitmapJoin.buildByteMap(
+        val oyear = graft.operators.BitmapJoin.probe(graft.operators.BitmapJoin.build(
           s.table("orders").select(col("o_orderkey"), col("o_orderdate")),
-          "o_orderkey", year(col("o_orderdate")) - 1900)
-        val oyear = graft.operators.BitmapJoin.byteMapProbe(s, ym)
+          "o_orderkey", year(col("o_orderdate")) - 1900, 8), 8)
         val f = s.sql(
           """SELECT /*+ BROADCAST(psx), BROADCAST(sn) */ l_orderkey, n_name,
             |   l_extendedprice * (1 - l_discount)
@@ -449,15 +448,15 @@ object TpchQueries2 extends QuerySet {
       // than the second, well-combined exchange costs. Gated on footer
       // maxKey (maxKey/8 ≤ broadcast threshold, minKey ≥ 0); past the
       // gate the prior measured broadcast/AQE chain below is unchanged.
-      if (graft.operators.BitmapJoin.gateExists(s0, o.cols.get("o_orderkey"))) {
+      if (graft.operators.BitmapJoin.gate(s0, o.cols.get("o_orderkey"), 1)) {
         val s = staticPlanSession(s0)
         fixtureViews(s, dir)
         val keys = s.table("orders")
           .filter(col("o_orderstatus") === "F").select(col("o_orderkey"))
-        val bm = graft.operators.BitmapJoin.buildExistsBitmap(keys, "o_orderkey")
-        val isF = graft.operators.BitmapJoin.existsProbe(s, bm)
+        val isF = graft.operators.BitmapJoin.probe(
+          graft.operators.BitmapJoin.build(keys, "o_orderkey", lit(1), 1), 1)
         val l2 = s.table("lineitem")
-          .filter(isF(col("l_orderkey").cast("long")))
+          .filter(isF(col("l_orderkey").cast("long")).isNotNull)
           .groupBy("l_orderkey", "l_suppkey")
           .agg(sum(when(col("l_quantity") > 30, 1).otherwise(0)).as("high_lines"))
           .groupBy("l_orderkey").agg(

@@ -12,8 +12,8 @@ import scala.util.Random
   * (spark.sql.codegen.factoryMode=NO_CODEGEN). This is the reference's
   * fuzz-suite idea pointed at the third execution axis the existing
   * DifferentialFuzzSpec doesn't cover — and it exercises this library's
-  * custom codegen Expressions (gcd/lcm via MathExpressions) on both their
-  * doGenCode and eval paths.
+  * custom codegen Expressions (gcd/lcm via MathExpressions, the dense-key
+  * probe) on both their doGenCode and eval paths.
   *
   * Grammar stays in exactly-representable territory (integer arithmetic,
   * string ops, conditionals, date parts; no division/float accumulation
@@ -43,6 +43,15 @@ class CodegenFuzzSpec extends AnyFunSuite {
       case 7 => when(boolExpr(r, depth - 1), longExpr(r, depth - 1))
         .otherwise(longExpr(r, depth - 1))
     }
+  }
+
+  /** Dense-key probe over a random map at every slot width: hits, empty
+    * slots, and negative / past-the-end keys (NULL). Drawn from its own
+    * generator so the other columns' trees stay seed-stable. */
+  private def probeExpr(r: Random): Column = {
+    val bits = Seq(1, 2, 8)(r.nextInt(3))
+    val words = Array.fill(r.nextInt(4) + 1)(r.nextLong())
+    graft.operators.BitmapJoin.probe(words, bits)(longExpr(r, 2))
   }
   private def pm(r: Random): String =
     s"pmod(${longCols(r.nextInt(longCols.size))}, ${r.nextInt(50) + 2})"
@@ -74,12 +83,14 @@ class CodegenFuzzSpec extends AnyFunSuite {
       .withColumn("e1", longExpr(r, 3))
       .withColumn("e2", strExpr(r, 2))
       .withColumn("e3", year(col("l_shipdate")) * 100 + month(col("l_shipdate")))
+      .withColumn("e4", probeExpr(new Random(seed + 1000)))
       .filter(boolExpr(r, 2))
     val key = if (r.nextBoolean()) col("l_returnflag")
               else pmod(col("l_suppkey"), lit(r.nextInt(5).toLong + 2)).cast("string")
     proj.groupBy(key.as("k"))
       .agg(count(lit(1)).as("n"), sum(col("e1")).as("s1"),
-        max(col("e2")).as("m2"), min(col("e3")).as("m3"))
+        max(col("e2")).as("m2"), min(col("e3")).as("m3"),
+        sum(col("e4")).as("s4"), count(col("e4")).as("n4"))
   }
 
   test("random expression trees agree across codegen modes (40 seeds)") {
@@ -98,6 +109,7 @@ class CodegenFuzzSpec extends AnyFunSuite {
       (name, Tables.load(ss, dir, "lineitem"))
     }
     var nonEmpty = 0
+    var probed = 0
     for (seed <- 1 to 40) {
       val results = sessions.map { case (name, df) =>
         name -> randomQuery(seed)(df).collect().map(_.mkString("|")).sorted.toSeq
@@ -107,9 +119,11 @@ class CodegenFuzzSpec extends AnyFunSuite {
         assert(rows == ref,
           s"seed $seed: $name differs from $refName")
       if (ref.nonEmpty) nonEmpty += 1
+      if (ref.exists(!_.endsWith("|0"))) probed += 1 // some non-NULL probe (n4 > 0)
     }
     // a random filter may legitimately select nothing; most must not,
     // or the corpus isn't testing anything
     assert(nonEmpty >= 30, s"only $nonEmpty/40 seeds produced rows")
+    assert(probed >= 15, s"only $probed/40 seeds hit a dense-key probe slot")
   }
 }

@@ -112,11 +112,12 @@ class Round4dSpec extends AnyFunSuite {
     assert(df.collect().head.getLong(0) == 25)
   }
 
-  test("EXCLUDE of an unknown column is a no-op (regex semantics, unlike DuckDB's bind error)") {
+  test("EXCLUDE of an unknown column fails analysis") {
     Tables.registerAll(spark, TestSpark.sfDir)
     val ctx = DFContext(spark)
-    val df = ctx.sql("SELECT * EXCLUDE (no_such_col) FROM region")
-    assert(df.columns.length == spark.table("region").columns.length)
+    // like the reference's bind error (Spark's native `* EXCEPT`)
+    intercept[org.apache.spark.sql.AnalysisException](
+      ctx.sql("SELECT * EXCLUDE (no_such_col) FROM region"))
   }
 
   test("regex-column parsing stays off for plain queries") {

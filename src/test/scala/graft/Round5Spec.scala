@@ -42,8 +42,8 @@ class Round5Spec extends AnyFunSuite {
   }
 
   test("q12 shuffle-hash gate flips to plain AQE text past the threshold") {
-    // r11: within the bitmap gate (2×maxKey/8 under the threshold) q12
-    // plans the flag-bitmap probe — no join operator at all; past the
+    // r11: within the dense-key gate (2×maxKey/8 under the threshold) q12
+    // plans the 2-bit dense_key_probe — no join operator at all; past the
     // threshold BOTH gates release and the plain hint-free text plans.
     // (The middle SHUFFLE_HASH tier needs bitmapBytes > threshold ≥
     // estBytes/partitions, which tiny-fixture stats can't produce — it is
@@ -53,7 +53,7 @@ class Round5Spec extends AnyFunSuite {
     sSh.conf.set("spark.sql.adaptive.enabled", "false") // inspect static plan
     val planSh = graft.queries.TpchQueries.queries("q12_shipmode")(sSh, dir)
       .queryExecution.executedPlan.toString
-    assert(planSh.contains("bitmap_flag_probe") && !planSh.contains("Join"),
+    assert(planSh.contains("dense_key_probe") && !planSh.contains("Join"),
       s"expected the bitmap-probe plan (no join), got:\n$planSh")
 
     val sPlain = spark.newSession()
@@ -62,7 +62,7 @@ class Round5Spec extends AnyFunSuite {
     val planPlain = graft.queries.TpchQueries.queries("q12_shipmode")(sPlain, dir)
       .queryExecution.executedPlan.toString
     assert(!planPlain.contains("ShuffledHashJoin") &&
-      !planPlain.contains("bitmap_flag_probe"),
+      !planPlain.contains("dense_key_probe"),
       s"expected hint-free join plan past threshold, got:\n$planPlain")
     assert(planPlain.contains("Join"),
       s"expected a join operator past threshold, got:\n$planPlain")
@@ -77,16 +77,21 @@ class Round5Spec extends AnyFunSuite {
   }
 
   test("q5/q10 accept the gate on both sides and stay correct") {
-    // tiny fixture → gates all pass → broadcast form; past-threshold
-    // session → hint-free form; both must return identical rows
-    import org.apache.spark.sql.functions.col
-    for (q <- Seq("q5_multijoin", "q10_returns")) {
-      val a = graft.queries.TpchQueries.queries(q)(spark.newSession(), dir)
-        .collect().map(_.toString).toSeq
+    // tiny fixture → gates all pass → broadcast / dense-key form;
+    // past-threshold session → hint-free form; both must return identical
+    // rows. q4/q9/q21 exercise the dense-key gate's fallback side; q9 has
+    // no ORDER BY, so its rows compare as a set.
+    for (q <- Seq("q5_multijoin", "q10_returns", "q4_priority", "q9_profit",
+        "q21_waiting")) {
+      def rows(s: org.apache.spark.sql.SparkSession): Seq[String] = {
+        val r = SparkEntry.queries(q)(s, dir).collect().map(_.toString).toSeq
+        if (q == "q9_profit") r.sorted else r
+      }
+      val a = rows(spark.newSession())
       val sSh = spark.newSession()
       sSh.conf.set(BroadcastAdvisor.ThresholdConf, "1")
-      val b = graft.queries.TpchQueries.queries(q)(sSh, dir)
-        .collect().map(_.toString).toSeq
+      val b = rows(sSh)
+      assert(a.nonEmpty, s"$q returned no rows — the comparison is vacuous")
       assert(a == b, s"$q rows differ between broadcast and shuffle forms")
     }
   }

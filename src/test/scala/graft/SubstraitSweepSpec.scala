@@ -63,7 +63,8 @@ class SubstraitSweepSpec extends AnyFunSuite {
     // r14: the probe family got a wire spelling (payload as a base64
     // string literal, ProbePayloadCodec) — q4/q12/q21 roundtrip again and
     // q9's new bytemap plan joins them: floor 23 → 26, the r11-r13
-    // erosion reversed (verdict item 9)
+    // erosion reversed (verdict item 9); the three probes are now one,
+    // dense_key_probe(key, bits, payload)
     assert(ok >= 26, s"only $ok roundtripped — emit support regressed")
   }
 }

@@ -24,14 +24,14 @@ class TpchReshapePlanSpec extends AnyFunSuite {
 
   test("q4: bitmap exists-set probe — NO join node at all") {
     // r12: the EXISTS subquery is a pure orderkey SET, collapsed to a
-    // broadcast bitset probe (BitmapJoin.existsProbe) inside the orders
+    // 1-bit dense key map probe (BitmapJoin.probe) inside the orders
     // scan filter; the only exchange left is the ≤5-group aggregate
     val p = plan("q4_priority")
     assert(!p.contains("Join"), p.take(800))
-    // r13: the probe is a codegen expression (bitmap_exists_probe), no
+    // r13: the probe is a codegen expression (dense_key_probe), no
     // longer a Scala UDF — assert it sits inside the whole-stage-codegen
     // filter rather than at a BatchEvalPython/UDF boundary
-    assert(p.contains("bitmap_exists_probe"),
+    assert(p.contains("dense_key_probe"),
       s"bitmap probe filter expected:\n${p.take(800)}")
     assert(!p.contains("SortMergeJoin"), p.take(800))
   }
@@ -48,11 +48,11 @@ class TpchReshapePlanSpec extends AnyFunSuite {
   test("q9: dims broadcast, orders collapsed to a byte-map year probe") {
     // r14: orders' only contribution is o_year keyed by the PK — the
     // SHUFFLE_HASH (both sides exchanged + 1.5M-entry hash relation)
-    // became a dense bytemap_probe inside the fact scan; no orders scan,
+    // became an 8-bit dense_key_probe inside the fact scan; no orders scan,
     // no shuffled join, a single final-agg exchange.
     val p = plan("q9_profit")
     assert(p.contains("BroadcastHashJoin"), p.take(800))
-    assert(p.contains("bytemap_probe"),
+    assert(p.contains("dense_key_probe"),
       s"byte-map year probe expected:\n${p.take(800)}")
     assert(!p.contains("ShuffledHashJoin"), p.take(800))
     assert(!p.contains("SortMergeJoin"), p.take(800))
@@ -85,6 +85,8 @@ class TpchReshapePlanSpec extends AnyFunSuite {
     assert(scansOf(p, "lineitem") == 1,
       s"q21 reshape lost the single-pass shape:\n${p.take(1200)}")
     assert(p.contains("BroadcastHashJoin"), p.take(800))
+    // the F-order set is a 1-bit dense key map probed in the fact scan
+    assert(p.contains("dense_key_probe"), s"F-order probe expected:\n${p.take(1200)}")
   }
 
   test("q2: single-scan window form — partsupp semi-joined before any exchange") {
