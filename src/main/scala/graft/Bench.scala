@@ -41,6 +41,32 @@ object Bench {
     "q15_topsupplier", "q16_suppcnt", "q17_smallqty", "q18_bigorders",
     "q19_disjunct", "q20_nested_in", "q21_waiting", "q22_global")
 
+  /** The per-query JSON fields of one set of interleaved passes, from every
+    * pass's time per query (-1.0 marks a failed pass): `queries`, each
+    * query's fastest successful pass (-1.0 when none succeeded, written
+    * with `fmt`); `pass_times`, every pass; `failed`, query → failed
+    * passes for the queries with any. `total` sums the successful minima,
+    * so a query that never succeeded is absent from it and shows in
+    * `failed`. */
+  private[graft] final case class PassSet(names: Seq[String],
+      times: collection.Map[String, Vector[Double]]) {
+    private def passes(n: String) = times.getOrElse(n, Vector.empty)
+    private def json(fields: Seq[(String, Any)]) =
+      fields.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    private def min(n: String): Double = {
+      val ok = passes(n).filter(_ >= 0)
+      if (ok.isEmpty) -1.0 else ok.min
+    }
+    def total: Double = names.map(min).filter(_ >= 0).sum
+    def queries(fmt: Double => Double): String = json(names.map(n => n -> fmt(min(n))))
+    def passTimes: String =
+      json(names.map(n => n -> passes(n).map(r3).mkString("[", ",", "]")))
+    def failed: String =
+      json(names.map(n => n -> passes(n).count(_ < 0)).filter(_._2 > 0))
+  }
+
+  private[graft] def r3(d: Double): Double = math.round(d * 1000) / 1000.0
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // optional comma-separated subset (e.g. matched-scale TPC-H runs)
@@ -121,18 +147,9 @@ object Bench {
     }
     val loadAfter = loadavg
 
-    def minOf(ts: Vector[Double]): Double = {
-      val ok = ts.filter(_ >= 0)
-      if (ok.isEmpty) -1.0 else ok.min
-    }
-    val results = selected.map(n => n -> minOf(all.getOrElse(n, Vector.empty)))
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    def r3(d: Double): Double = math.round(d * 1000) / 1000.0
-    val passDetail = selected.map { n =>
-      "\"" + n + "\":" + all.getOrElse(n, Vector.empty).map(r3).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+    val suite = PassSet(selected, all)
+    val qs = suite.queries(identity)
+    val total = suite.total
 
     // Matched-scale full-22 TPC-H: self-contained (the SF1 fixture is
     // (re)built from the bench dir if absent — per-table, so a fixture
@@ -162,15 +179,10 @@ object Bench {
       val t22All = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
       for (_ <- 1 to t22Passes; nm <- tpch22)
         t22All(nm) = t22All.getOrElse(nm, Vector.empty) :+ runT(nm)
-      val t22Min = tpch22.map(nm => nm -> minOf(t22All(nm)))
-      val t22Total = t22Min.map(_._2).filter(_ >= 0).sum
-      val t22Qs = t22Min.map { case (k, v) => "\"" + k + "\":" + r3(v) }
-        .mkString("{", ",", "}")
-      val t22Pass = tpch22.map { nm =>
-        "\"" + nm + "\":" + t22All(nm).map(r3).mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-      (s""","tpch22_sf1":{"total":${r3(t22Total)},"queries":$t22Qs,"pass_times":$t22Pass,"passes":$t22Passes,"dir":"$sf1Dir"}""",
-        s""","tpch22_sf1":{"total":${r3(t22Total)},"queries":$t22Qs,"passes":$t22Passes,"dir":"$sf1Dir"}""")
+      val t22 = PassSet(tpch22, t22All)
+      val t22Qs = t22.queries(r3)
+      (s""","tpch22_sf1":{"total":${r3(t22.total)},"queries":$t22Qs,"pass_times":${t22.passTimes},"failed":${t22.failed},"passes":$t22Passes,"dir":"$sf1Dir"}""",
+        s""","tpch22_sf1":{"total":${r3(t22.total)},"queries":$t22Qs,"failed":${t22.failed},"passes":$t22Passes,"dir":"$sf1Dir"}""")
     }
 
     // The BENCH_r08 driver artifact truncated to the stdout TAIL, cutting
@@ -180,7 +192,7 @@ object Bench {
     val common = s""""unit":"sec","sf":"$sfDir","passes":$passes,""" +
       s""""loadavg_before":$loadBefore,"loadavg_after":$loadAfter"""
     val fullJson =
-      s"""{"metric":"total","value":$total,$common,"queries":$qs,"pass_times":$passDetail${t22Json._1}}"""
+      s"""{"metric":"total","value":$total,$common,"queries":$qs,"pass_times":${suite.passTimes},"failed":${suite.failed}${t22Json._1}}"""
     // r14: default OUT is a non-repo path — the committed BENCH_FULL.json
     // artifact used to be clobbered by every driver/builder run (r13
     // verdict hygiene item); point SPARK_GRAFT_BENCH_OUT at the repo
@@ -191,7 +203,7 @@ object Bench {
     catch { case e: Exception =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
-    println(s"""{"metric":"total","value":$total,$common,"queries":$qs,"full":"$outPath"${t22Json._2}}""")
+    println(s"""{"metric":"total","value":$total,$common,"queries":$qs,"failed":${suite.failed},"full":"$outPath"${t22Json._2}}""")
     spark.stop()
   }
 }

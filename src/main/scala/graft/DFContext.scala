@@ -111,7 +111,7 @@ class DFContext(val spark: SparkSession) {
     val df =
       if (path.endsWith(".csv")) spark.read.option("header", "true").option("inferSchema", "true").csv(path)
       else if (path.endsWith(".json")) spark.read.json(path)
-      else spark.read.parquet(path)
+      else Tables.readParquet(spark, path)
     df.createOrReplaceTempView(name)
   }
 

@@ -1,14 +1,17 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Catalog facade over the shared parquet fixtures.
   *
   * Plays the role of DataFusion's `ListingTable`/catalog registration
   * (reference: datafusion/catalog-listing/src/table.rs:180) — Spark's file
   * source already does partition discovery, predicate pushdown and column
-  * pruning, so "registering" a table is just reading the path and exposing a
-  * temp view for SQL access.
+  * pruning, so "registering" a table is opening the path with a schema
+  * read from its footer ([[readParquet]]) and exposing a temp view for SQL
+  * access.
   */
 object Tables {
 
@@ -16,29 +19,28 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Memoized per (session, dir, table): `spark.read.parquet` runs a footer/
-  // schema-inference job every call, which showed up as ~30 ms × n_tables of
-  // serial driver latency at the head of EVERY query. One footer read per
-  // session is the catalog behavior a real engine has anyway. Keyed WEAKLY
-  // by the session object (reference identity — SparkSession doesn't
+  // Memoized per (session, dir, table): opening a table is a driver-side
+  // footer read and a file listing, and a DataFrame built once carries its
+  // analyzed relation, so later queries of the session skip both. Keyed
+  // WEAKLY by the session object (reference identity — SparkSession doesn't
   // override equals) so stopped sessions and their plans get collected and
   // distinct sessions can never collide.
   private val cache =
     new java.util.WeakHashMap[SparkSession,
       scala.collection.concurrent.TrieMap[(String, String), DataFrame]]()
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val perSession = cache.synchronized {
-      val existing = cache.get(spark)
-      if (existing != null) existing
-      else {
-        val m = scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-        cache.put(spark, m)
-        m
-      }
+  private def sessionCache(spark: SparkSession) = cache.synchronized {
+    val existing = cache.get(spark)
+    if (existing != null) existing
+    else {
+      val m = scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
+      cache.put(spark, m)
+      m
     }
-    perSession.getOrElseUpdate((dir, name), doLoad(spark, dir, name))
   }
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    sessionCache(spark).getOrElseUpdate((dir, name), doLoad(spark, dir, name))
 
   private def doLoad(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
@@ -51,11 +53,73 @@ object Tables {
       // sessions built elsewhere, e.g. bare test harnesses.)
       if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
-      normalizeEventsTs(raw)
+      normalizeEventsTs(readParquet(spark, s"$dir/$name.parquet"))
     } else {
-      spark.read.parquet(s"$dir/$name.parquet")
+      readParquet(spark, s"$dir/$name.parquet")
     }
+
+  /** Open a parquet file or directory without a Spark job.
+    *
+    * `spark.read.parquet` infers the schema with a distributed job on every
+    * call, although its non-merging mode reads one footer: the file itself,
+    * or for a directory `_common_metadata`, then `_metadata`, then the first
+    * data part in path order. This reads that same footer on the driver and
+    * converts it with Spark's own converter under the session's conf, so the
+    * schema is the one inference would give — the footer-based schema
+    * inference of the reference's `ListingTable` (reference:
+    * datafusion/catalog-listing/src/table.rs:180). With
+    * `spark.sql.parquet.mergeSchema` on, every footer must be read, so that
+    * mode keeps Spark's inference; so does any path the footer read cannot
+    * open (missing, empty, corrupt), which then fails with Spark's error. */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val schema =
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+      else scala.util.Try(footerSchema(spark, path)).toOption
+    schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** The schema Spark's non-merging parquet inference gives `path`, read
+    * from the one footer that inference reads. */
+  private[graft] def footerSchema(spark: SparkSession, path: String): StructType = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val files = listFiles(root.getFileSystem(conf), root)
+    val file = Summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !isSummary(f)))
+      .getOrElse(throw new java.io.FileNotFoundException(s"no parquet file under $path"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** Parquet summary files — footers merged from a directory's parts — in
+    * the order Spark's schema inference prefers them. */
+  private val Summaries = Seq("_common_metadata", "_metadata")
+
+  private[graft] def isSummary(f: FileStatus): Boolean =
+    Summaries.contains(f.getPath.getName)
+
+  /** The files Spark's file index reads at `path`, in path order: the file
+    * itself, or every file under the directory, recursively, minus hidden
+    * names (`.`, and `_` outside `k=v` partition names) and in-flight
+    * (`._COPYING_`) ones; the summary files are kept. */
+  private[graft] def listFiles(fs: FileSystem, path: Path): Seq[FileStatus] = {
+    def leaves(s: FileStatus): Seq[FileStatus] =
+      if (!s.isDirectory) Seq(s)
+      else fs.listStatus(s.getPath).toSeq.filter { c =>
+        val n = c.getPath.getName
+        val hidden = (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+          n.endsWith("._COPYING_")
+        !hidden || n.startsWith("_common_metadata") || n.startsWith("_metadata")
+      }.flatMap(leaves)
+    leaves(fs.getFileStatus(path)).sortBy(_.getPath.toString)
+  }
 
   /** Normalize the events.ts column to session-tz µs TimestampType from
     * whatever the fixture stores: raw epoch-nanos longs (`div 1000` keeps
@@ -95,47 +159,66 @@ object Tables {
     * DECIMAL(12,2), so money aggregates are exact (order-independent) in
     * both engines.
     */
-  def partsupp(spark: SparkSession, dir: String): DataFrame = {
-    val f = new java.io.File(s"$dir/partsupp.parquet")
-    if (f.exists()) load(spark, dir, "partsupp")
-    else {
-      val perSession = cache.synchronized {
-        val existing = cache.get(spark)
-        if (existing != null) existing
-        else {
-          val m = scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-          cache.put(spark, m)
-          m
+  def partsupp(spark: SparkSession, dir: String): DataFrame =
+    if (new java.io.File(s"$dir/partsupp.parquet").exists()) load(spark, dir, "partsupp")
+    else sessionCache(spark).getOrElseUpdate((dir, "partsupp:derived"),
+      derivePartsupp(spark, dir,
+        footerSupplierShape(spark, dir).getOrElse(scannedSupplierShape(spark, dir))))
+
+  /** What decides derived partsupp's plan: supplier's row count, and whether
+    * `s_suppkey` is dense 0..rows-1 with no NULL. `s_suppkey` is supplier's
+    * primary key, so distinct keys are assumed, as the rank join does. */
+  private[graft] final case class SupplierShape(rows: Long, dense: Boolean)
+
+  /** The shape from supplier's footer statistics — the row count, and the
+    * `s_suppkey` null count and integer min/max that every parquet writer
+    * of the fixtures records — with no Spark job. None when the footer
+    * lacks them. */
+  private[graft] def footerSupplierShape(spark: SparkSession, dir: String): Option[SupplierShape] = {
+    val ts = graft.plans.BroadcastAdvisor.tableStats(spark, s"$dir/supplier.parquet")
+    if (ts.rows == 0) Some(SupplierShape(0, dense = false))
+    else ts.cols.get("s_suppkey").flatMap { k =>
+      k.nulls.flatMap { nulls =>
+        if (nulls == ts.rows) Some(SupplierShape(ts.rows, dense = false))
+        else k.minLong.zip(k.maxLong).map { case (mn, mx) =>
+          SupplierShape(ts.rows, nulls == 0 && mn == 0 && mx == ts.rows - 1)
         }
       }
-      perSession.getOrElseUpdate((dir, "partsupp:derived"),
-        derivePartsupp(spark, dir))
     }
   }
 
-  private def derivePartsupp(spark: SparkSession, dir: String): DataFrame = {
+  /** The shape from one aggregate over supplier, for footers without the
+    * statistics. */
+  private[graft] def scannedSupplierShape(spark: SparkSession, dir: String): SupplierShape = {
+    import org.apache.spark.sql.functions.{col, count, lit, max, min}
+    val r = load(spark, dir, "supplier")
+      .agg(count(lit(1)), count(col("s_suppkey")), min(col("s_suppkey")),
+        max(col("s_suppkey"))).head()
+    val rows = r.getLong(0)
+    SupplierShape(rows, r.getLong(1) == rows && !r.isNullAt(2) &&
+      r.getAs[Number](2).longValue == 0L && r.getAs[Number](3).longValue == rows - 1)
+  }
+
+  private[graft] def derivePartsupp(spark: SparkSession, dir: String,
+      shape: SupplierShape): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    // One dim-side aggregate decides the shape: the fixtures' s_suppkey is
-    // DENSE 0..n-1, so row_number(ORDER BY s_suppkey) = s_suppkey + 1 and
-    // the rank join collapses to a direct modular key — no global window
-    // (a single-partition WindowExec would serialize the dim at scale).
-    // Non-dense keys (never the driver's fixtures) keep the windowed rank
+    // Dense keys (the fixtures' s_suppkey is 0..n-1) make
+    // row_number(ORDER BY s_suppkey) = s_suppkey + 1, so the rank join
+    // collapses to a direct modular key — no global window (a
+    // single-partition WindowExec would serialize the dim at scale).
+    // Other keys keep the windowed rank, NULLs last as DuckDB orders them,
     // so the values stay identical to partsuppCte / tools/gen_sf1.py.
-    val stats = load(spark, dir, "supplier")
-      .agg(count(lit(1)).as("scnt"), min(col("s_suppkey")).as("smin"),
-        max(col("s_suppkey")).as("smax")).collect().head
-    val (scntV, dense) = (stats.getLong(0),
-      stats.getAs[Number](1).longValue == 0L &&
-        stats.getAs[Number](2).longValue == stats.getLong(0) - 1L)
+    val supplier = load(spark, dir, "supplier")
     val snum =
-      if (dense) load(spark, dir, "supplier")
-        .select(col("s_suppkey"), (col("s_suppkey") + 1).cast("int").as("rn"))
-      else load(spark, dir, "supplier")
-        .select(col("s_suppkey"), row_number()
-          .over(Window.orderBy("s_suppkey")).as("rn"))
+      if (shape.dense)
+        supplier.select(col("s_suppkey"), (col("s_suppkey") + 1).cast("int").as("rn"))
+      else supplier.select(col("s_suppkey"), row_number()
+        .over(Window.orderBy(col("s_suppkey").asc_nulls_last)).as("rn"))
+    // No supplier means no partsupp row, as in partsuppCte: snum is empty,
+    // so the join is. The divisor stays >= 1 so ANSI never evaluates % 0.
     load(spark, dir, "part").select(col("p_partkey"))
-      .select(col("p_partkey"), lit(scntV).as("scnt"),
+      .select(col("p_partkey"), lit(math.max(shape.rows, 1L)).as("scnt"),
         explode(array((0 to 3).map(i => lit(i)): _*)).as("i"))
       .withColumn("rn",
         ((col("p_partkey") * 7 + col("i") * 13) % col("scnt") + 1).cast("int"))

@@ -23,10 +23,10 @@ import org.apache.spark.sql.SparkSession
   * TABLE); here the footer IS the catalog.
   *
   * Scale design: only FOOTERS are read (a few KB per file, driver-side at
-  * planning time, memoized per path) — never data pages. At 100 TB the
-  * footer count grows with file count, but this advisor only ever inspects
-  * the DIMENSION tables (orders/customer at worst); the fact table's size
-  * never enters the estimate.
+  * planning time, memoized per file identity) — never data pages. At
+  * 100 TB the footer count grows with file count, but this advisor only
+  * ever inspects the DIMENSION tables (orders/customer at worst); the fact
+  * table's size never enters the estimate.
   */
 object BroadcastAdvisor {
 
@@ -49,21 +49,33 @@ object BroadcastAdvisor {
     * spans (1 for TIMESTAMP(MICROS), 1000 for MILLIS, 86.4e9 for DATE
     * days) — fixture generations have switched units between rounds, so
     * the advisor derives it from the footer's logical type annotation
-    * rather than assuming one encoding. None for non-temporal columns. */
+    * rather than assuming one encoding. None for non-temporal columns.
+    * `nulls`: the column's NULL count, None when some row group does not
+    * record it. */
   case class ColStats(avgBytes: Double, minLong: Option[Long],
-      maxLong: Option[Long], microsPerUnit: Option[Double] = None)
+      maxLong: Option[Long], microsPerUnit: Option[Double] = None,
+      nulls: Option[Long] = None)
   case class TableStats(rows: Long, cols: Map[String, ColStats])
 
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[String, TableStats]
+  /** Keyed by the path and the identity (path, length, modification time)
+    * of each of its files, so a file rewritten in place is read again. */
+  private val cache = scala.collection.concurrent.TrieMap
+    .empty[(String, Seq[(String, Long, Long)]), TableStats]
 
   /** Stats for a parquet file/dir: prefers the catalog's CBO statistics
     * (ANALYZE TABLE ... COMPUTE STATISTICS FOR COLUMNS over an external
     * table at this location — the numbers a cluster's metastore serves
     * without touching storage), falling back to a direct footer read. */
-  def tableStats(spark: SparkSession, path: String): TableStats =
-    cache.getOrElseUpdate(path,
-      catalogStats(spark, path).getOrElse(footerStats(spark, path)))
+  def tableStats(spark: SparkSession, path: String): TableStats = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new org.apache.hadoop.fs.Path(path)
+    // the data files a scan of `path` reads; a summary file repeats their row groups
+    val files = graft.Tables.listFiles(p.getFileSystem(conf), p)
+      .filterNot(graft.Tables.isSummary)
+    val identity = files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+    cache.getOrElseUpdate((path, identity),
+      catalogStats(spark, path).getOrElse(footerStats(files.map(_.getPath), conf)))
+  }
 
   /** CBO stats of a catalog table whose location is `path`, if one exists
     * and has been ANALYZEd (rowCount present). Column min/max come from
@@ -100,32 +112,26 @@ object BroadcastAdvisor {
               }
               val width = cs.avgLen.map(_.toDouble).getOrElse(8.0)
               name -> ColStats(width, cs.min.flatMap(asLong),
-                cs.max.flatMap(asLong), unit)
+                cs.max.flatMap(asLong), unit, cs.nullCount.map(_.toLong))
             }
           }
           TableStats(st.rowCount.get.toLong, cols.toMap)
         }
     }.toOption.flatten
 
-  /** Footer-only stats for a parquet file/dir: row count, per-column
-    * average uncompressed width, INT64 min/max (timestamps included). */
-  private def footerStats(spark: SparkSession, path: String): TableStats =
+  /** Footer-only stats for a parquet file/dir's files: row count,
+    * per-column average uncompressed width, INT64 min/max (timestamps
+    * included), NULL count. */
+  private def footerStats(files: Seq[org.apache.hadoop.fs.Path],
+      conf: org.apache.hadoop.conf.Configuration): TableStats =
     {
       import scala.jdk.CollectionConverters._
-      val conf = spark.sparkContext.hadoopConfiguration
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(conf)
-      val st = fs.getFileStatus(p)
-      val files =
-        if (st.isDirectory)
-          fs.listStatus(p).filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-            .map(_.getPath).toSeq
-        else Seq(st.getPath)
       var rows = 0L
       val colBytes = scala.collection.mutable.Map.empty[String, Long]
       val colMin = scala.collection.mutable.Map.empty[String, Long]
       val colMax = scala.collection.mutable.Map.empty[String, Long]
       val colUnit = scala.collection.mutable.Map.empty[String, Double]
+      val colNulls = scala.collection.mutable.Map.empty[String, Option[Long]]
       files.foreach { f =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf)
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -153,6 +159,10 @@ object BroadcastAdvisor {
               colMin(name) = colMin.get(name).fold(mn)(math.min(_, mn))
               colMax(name) = colMax.get(name).fold(mx)(math.max(_, mx))
             }
+            val chunkNulls =
+              if (s != null && s.isNumNullsSet) Some(s.getNumNulls) else None
+            colNulls(name) = colNulls.getOrElse(name, Some(0L)).zip(chunkNulls)
+              .map { case (a, b) => a + b }
             ptype.getLogicalTypeAnnotation match {
               case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
                 colUnit(name) = t.getUnit match {
@@ -169,7 +179,7 @@ object BroadcastAdvisor {
       }
       TableStats(rows, colBytes.keys.map { n =>
         n -> ColStats(if (rows == 0) 0.0 else colBytes(n).toDouble / rows,
-          colMin.get(n), colMax.get(n), colUnit.get(n))
+          colMin.get(n), colMax.get(n), colUnit.get(n), colNulls(n))
       }.toMap)
     }
 

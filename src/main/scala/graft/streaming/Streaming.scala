@@ -34,7 +34,7 @@ object Streaming {
     Files.createDirectories(stage)
     Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve("events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.readParquet(spark, s"$dir/events.parquet").schema
     graft.Tables.normalizeEventsTs(
       spark.readStream.schema(schema).parquet(stage.toString))
   }
@@ -81,7 +81,7 @@ object Streaming {
     * this costs exactly one broadcast per micro-batch. */
   def runStreamStaticJoin(spark: SparkSession, dir: String,
                           queryName: String): DataFrame = {
-    val dim = spark.read.parquet(s"$dir/customer.parquet")
+    val dim = graft.Tables.readParquet(spark, s"$dir/customer.parquet")
       .select(col("c_custkey"), col("c_mktsegment"))
     val joined = eventsStream(spark, dir)
       .join(broadcast(dim), col("user_id") === col("c_custkey"))
