@@ -17,93 +17,6 @@ import org.apache.spark.sql.functions.lit
   */
 class DFContext(val spark: SparkSession) {
 
-  // engine function-gap layer available from SQL immediately
-  graft.functions.VectorFunctions.register(spark)
-  graft.functions.TextFunctions.register(spark)
-  // the `~`/`~*`/`!~`/`!~*` operator rewrite target (Rust-regex
-  // compatible); Spark's native regexp_* functions stay untouched
-  graft.functions.RegexpCompat.registerOperatorFn(spark)
-  // arrow_typeof (reference: functions/src/core/arrowtypeof.rs) —
-  // resolved-type introspection in arrow's short Debug form
-  spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-    "arrow_typeof", { es =>
-      if (es.size != 1) throw new IllegalArgumentException(
-        s"arrow_typeof takes 1 argument, got ${es.size}")
-      graft.functions.ArrowTypeOf(es.head)
-    }, "built-in")
-  // arrow_field (reference: functions/src/core/arrow_field.rs) — field
-  // introspection struct (name, data_type, nullable, metadata)
-  spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-    "arrow_field", { es =>
-      if (es.size != 1) throw new IllegalArgumentException(
-        s"arrow_field takes 1 argument, got ${es.size}")
-      // the registry builder receives RESOLVED children — snapshot the
-      // field identity here, before the optimizer/binding rewrites it
-      val hint = es.head match {
-        case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
-          Some((a.name, a.nullable, a.metadata))
-        case _ => None
-      }
-      graft.functions.ArrowField(es.head, hint)
-    }, "built-in")
-  // Arrow Union type over the struct-carrier convention (reference:
-  // functions/src/core/union_extract.rs, union_tag.rs; a dense Union is
-  // struct<tag: string, v_<variant>: T…>): union_extract yields the
-  // variant field (NULL when another variant is selected), union_tag the
-  // tag. Engine surface — also wired into the slt dialect.
-  // Error-class fidelity (reference union_extract.rs/union_tag.rs): arity
-  // errors are PLANNING class (AnalysisException); a non-union operand, a
-  // non-literal tag, or a missing variant are EXECUTION class — raised
-  // here as runtime exceptions so error-directive conformance sees the
-  // reference's own phase split.
-  private def isUnionCarrier(e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
-    e.resolved && (e.dataType match {
-      case st: org.apache.spark.sql.types.StructType => st.fieldNames.contains("tag")
-      case _ => false
-    })
-  private def arrowTypeName(e: org.apache.spark.sql.catalyst.expressions.Expression): String =
-    if (e.resolved) graft.functions.ArrowTypeOf.arrowName(e.dataType) else "?"
-  spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-    "union_extract", { es =>
-      if (es.isEmpty) org.apache.spark.sql.GraftSqlBridge.analysisError(
-        "'union_extract' does not support zero arguments")
-      if (es.size != 2) org.apache.spark.sql.GraftSqlBridge.analysisError(
-        s"The function 'union_extract' expected 2 arguments but received ${es.size}")
-      // execution-class restrictions plan as a deferred raise (an
-      // analysis-time throw would be wrapped into the compile class)
-      if (es.head.resolved && !isUnionCarrier(es.head))
-        graft.functions.RaiseRuntime("union_extract first argument must " +
-          s"be a union, got ${arrowTypeName(es.head)} instead")
-      else es(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(s, org.apache.spark.sql.types.StringType)
-            if s != null =>
-          val name = String.valueOf(s)
-          es.head.dataType match {
-            case st: org.apache.spark.sql.types.StructType
-                if es.head.resolved && !st.fieldNames.contains("v_" + name) =>
-              graft.functions.RaiseRuntime(s"field $name not found on union")
-            case _ =>
-              org.apache.spark.sql.catalyst.analysis.UnresolvedExtractValue(
-                es.head, org.apache.spark.sql.catalyst.expressions.Literal("v_" + name))
-          }
-        case other => graft.functions.RaiseRuntime(
-          "union_extract second argument must be a non-null string " +
-            s"literal, got ${arrowTypeName(other)} instead")
-      }
-    }, "built-in")
-  spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-    "union_tag", { es =>
-      if (es.isEmpty) org.apache.spark.sql.GraftSqlBridge.analysisError(
-        "'union_tag' does not support zero arguments")
-      if (es.size != 1) org.apache.spark.sql.GraftSqlBridge.analysisError(
-        s"The function 'union_tag' expected 1 arguments but received ${es.size}")
-      if (es.head.resolved && !isUnionCarrier(es.head))
-        graft.functions.RaiseRuntime(
-          s"union_tag only support unions, got ${arrowTypeName(es.head)}")
-      else org.apache.spark.sql.catalyst.analysis.UnresolvedExtractValue(
-        es.head, org.apache.spark.sql.catalyst.expressions.Literal("tag"))
-    }, "built-in")
-
   /** Register a file-backed table; format inferred from the extension
     * (parquet/csv/json), mirroring CREATE EXTERNAL TABLE
     * (reference: sql/src/parser.rs:245). */
@@ -585,8 +498,8 @@ object DFContext {
     * `~` `~*` `!~` `!~*` regex match and `~~` `~~*` `!~~` `!~~*` LIKE
     * spellings — the regexp and string slt subtrees, predicates.slt). The LIKE
     * family is a pure operator splice onto Spark's LIKE/ILIKE; the regex
-    * family becomes a `regexp_like(lhs, rhs, flags)` call (the engine's
-    * Rust-regex-compatible compat function), which needs the operand
+    * family becomes a `graft_regexp_like(lhs, rhs, flags)` call (the
+    * engine's Rust-regex-compatible function, RegexpCompat), which needs the operand
     * bounds — a primary-expression scan over the token list on each side
     * (identifier chains, literals, balanced call/paren/bracket groups,
     * `::` cast suffixes). Unary `~` (no left primary) is left untouched. */

@@ -139,10 +139,23 @@ object Tables {
     }
   }
 
-  /** Register every fixture table as a temp view named after the table. */
-  def registerAll(spark: SparkSession, dir: String): Unit = {
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-    partsupp(spark, dir).createOrReplaceTempView("partsupp")
+  /** Register every fixture table present in `dir` as a temp view named
+    * after the table, once per (session, dir) — `createOrReplaceTempView`
+    * costs ~20-25 ms per table-triple per call (measured 139 vs 64 ms/plan
+    * on the q3 shape with registration inline), which a real engine pays
+    * once at catalog setup, not per query. A dir switch (verify at sf0.01
+    * vs bench at SF1 in one JVM) re-registers. Only the tables present are
+    * registered: the scale fixtures (gen_sf1.py) carry the TPC-H star
+    * only, not events/documents/embeddings. */
+  private val registeredDirs = new java.util.WeakHashMap[SparkSession, String]()
+  def registerAll(spark: SparkSession, dir: String): Unit = registeredDirs.synchronized {
+    if (registeredDirs.get(spark) != dir) {
+      names.filter(n => new java.io.File(s"$dir/$n.parquet").exists())
+        .foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
+      // partsupp: real file in the scale fixtures, derived elsewhere
+      partsupp(spark, dir).createOrReplaceTempView("partsupp")
+      registeredDirs.put(spark, dir)
+    }
   }
 
   /** TPC-H partsupp: read `$dir/partsupp.parquet` when the fixture ships it

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types._
 
@@ -100,24 +99,22 @@ object ArrayMathFunctions {
         ArrayTransform(arr, lam1(x => Divide(x, norm)))))
   }
 
-  /** Register SQL names on a session (idempotent). Arity is enforced at
-    * PLAN time — the reference rejects e.g. array_sum([1],[2]) during
-    * planning, not silently ignoring the extra operand. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def one(names: Seq[String], arity: Int)
-        (build: Seq[Expression] => Expression): Unit =
-      names.foreach(n => reg.createOrReplaceTempFunction(n, es => {
+  /** SQL builders. Arity is enforced at PLAN time — the reference rejects
+    * e.g. array_sum([1],[2]) during planning, not silently ignoring the
+    * extra operand. */
+  val builders: Seq[(String, Seq[Expression] => Expression)] = {
+    def one(names: Seq[String], arity: Int)(build: Seq[Expression] => Expression) =
+      names.map(n => n -> { (es: Seq[Expression]) =>
         if (es.size != arity)
           org.apache.spark.sql.GraftSqlBridge.analysisError(
             s"Function '$n' expects $arity argument(s) but received ${es.size}")
         build(es)
-      }, "built-in"))
-    one(Seq("array_sum", "list_sum"), 1)(es => sumExpr(es.head))
-    one(Seq("array_avg", "list_avg"), 1)(es => avgExpr(es.head))
-    one(Seq("array_product", "list_product"), 1)(es => productExpr(es.head))
-    one(Seq("array_add", "list_add"), 2)(es => addExpr(es.head, es(1)))
-    one(Seq("array_subtract", "list_subtract"), 2)(es => subtractExpr(es.head, es(1)))
+      })
+    one(Seq("array_sum", "list_sum"), 1)(es => sumExpr(es.head)) ++
+    one(Seq("array_avg", "list_avg"), 1)(es => avgExpr(es.head)) ++
+    one(Seq("array_product", "list_product"), 1)(es => productExpr(es.head)) ++
+    one(Seq("array_add", "list_add"), 2)(es => addExpr(es.head, es(1))) ++
+    one(Seq("array_subtract", "list_subtract"), 2)(es => subtractExpr(es.head, es(1))) ++
     one(Seq("array_scale", "list_scale"), 2) { es =>
       // a string scale factor has no numeric signature in the reference
       val isStr = try es(1).resolved &&
@@ -126,10 +123,10 @@ object ArrayMathFunctions {
       if (isStr) org.apache.spark.sql.GraftSqlBridge.analysisError(
         "Function 'array_scale' expects a numeric scale factor")
       scaleExpr(es.head, es(1))
-    }
-    one(Seq("array_normalize", "list_normalize"), 1)(es => normalizeExpr(es.head))
+    } ++
+    one(Seq("array_normalize", "list_normalize"), 1)(es => normalizeExpr(es.head)) ++
     // reference aliases over existing kernels
-    one(Seq("array_has_any"), 2)(es => ArraysOverlap(es.head, es(1)))
+    one(Seq("array_has_any"), 2)(es => ArraysOverlap(es.head, es(1))) ++
     one(Seq("dot_product"), 2)(es => InnerProduct(es.head, es(1)))
   }
 }

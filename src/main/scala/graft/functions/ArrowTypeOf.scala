@@ -188,3 +188,79 @@ object ArrowTypeOf {
     case other => other.simpleString
   }
 }
+
+/** The arrow introspection and Arrow Union SQL builders, injected by
+  * GraftExtensions. */
+object ArrowFunctions {
+  import org.apache.spark.sql.GraftSqlBridge.analysisError
+  import org.apache.spark.sql.catalyst.analysis.UnresolvedExtractValue
+  import org.apache.spark.sql.catalyst.expressions.AttributeReference
+
+  // Arrow Union type over the struct-carrier convention (reference:
+  // functions/src/core/union_extract.rs, union_tag.rs; a dense Union is
+  // struct<tag: string, v_<variant>: T…>): union_extract yields the
+  // variant field (NULL when another variant is selected), union_tag the
+  // tag. Error-class fidelity (reference union_extract.rs/union_tag.rs):
+  // arity errors are PLANNING class (AnalysisException); a non-union
+  // operand, a non-literal tag, or a missing variant are EXECUTION class —
+  // planned as a deferred RaiseRuntime (an analysis-time throw would be
+  // wrapped into the compile class), so error-directive conformance sees
+  // the reference's own phase split.
+  private def isUnionCarrier(e: Expression): Boolean =
+    e.resolved && (e.dataType match {
+      case st: StructType => st.fieldNames.contains("tag")
+      case _ => false
+    })
+  private def arrowTypeName(e: Expression): String =
+    if (e.resolved) ArrowTypeOf.arrowName(e.dataType) else "?"
+
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    // arrow_typeof (reference: functions/src/core/arrowtypeof.rs) —
+    // resolved-type introspection in arrow's short Debug form
+    "arrow_typeof" -> { es =>
+      if (es.size != 1) throw new IllegalArgumentException(
+        s"arrow_typeof takes 1 argument, got ${es.size}")
+      ArrowTypeOf(es.head)
+    },
+    // arrow_field (reference: functions/src/core/arrow_field.rs) — field
+    // introspection struct (name, data_type, nullable, metadata)
+    "arrow_field" -> { es =>
+      if (es.size != 1) throw new IllegalArgumentException(
+        s"arrow_field takes 1 argument, got ${es.size}")
+      // the registry builder receives RESOLVED children — snapshot the
+      // field identity here, before the optimizer/binding rewrites it
+      val hint = es.head match {
+        case a: AttributeReference => Some((a.name, a.nullable, a.metadata))
+        case _ => None
+      }
+      ArrowField(es.head, hint)
+    },
+    "union_extract" -> { es =>
+      if (es.isEmpty) analysisError("'union_extract' does not support zero arguments")
+      if (es.size != 2) analysisError(
+        s"The function 'union_extract' expected 2 arguments but received ${es.size}")
+      if (es.head.resolved && !isUnionCarrier(es.head))
+        RaiseRuntime("union_extract first argument must " +
+          s"be a union, got ${arrowTypeName(es.head)} instead")
+      else es(1) match {
+        case Literal(s, StringType) if s != null =>
+          val name = String.valueOf(s)
+          es.head.dataType match {
+            case st: StructType if es.head.resolved && !st.fieldNames.contains("v_" + name) =>
+              RaiseRuntime(s"field $name not found on union")
+            case _ => UnresolvedExtractValue(es.head, Literal("v_" + name))
+          }
+        case other => RaiseRuntime(
+          "union_extract second argument must be a non-null string " +
+            s"literal, got ${arrowTypeName(other)} instead")
+      }
+    },
+    "union_tag" -> { es =>
+      if (es.isEmpty) analysisError("'union_tag' does not support zero arguments")
+      if (es.size != 1) analysisError(
+        s"The function 'union_tag' expected 1 arguments but received ${es.size}")
+      if (es.head.resolved && !isUnionCarrier(es.head))
+        RaiseRuntime(s"union_tag only support unions, got ${arrowTypeName(es.head)}")
+      else UnresolvedExtractValue(es.head, Literal("tag"))
+    })
+}

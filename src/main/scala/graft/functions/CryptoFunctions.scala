@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Md5, Sha1, Sha2}
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
@@ -34,17 +33,14 @@ object CryptoFunctions {
     org.apache.spark.sql.catalyst.expressions.Unhex(hexStr)
   }
 
-  /** Register on a session (idempotent). Besides `digest`, the reference
-    * exposes each SHA-2 width as a standalone function
-    * (functions/src/crypto/sha224.rs … sha512.rs) whose binary digest
-    * renders as lowercase hex — exactly Spark's `sha2(x, N)` string, so
-    * each name resolves to the native codegen'd Sha2. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("digest", build, "built-in")
-    for ((name, bits) <- Seq("sha224" -> 224, "sha256" -> 256,
-        "sha384" -> 384, "sha512" -> 512))
-      reg.createOrReplaceTempFunction(name,
-        es => Sha2(es.head, Literal(bits)), "built-in")
-  }
+  /** SQL builders. Besides `digest`, the reference exposes each SHA-2
+    * width as a standalone function (functions/src/crypto/sha224.rs …
+    * sha512.rs) whose binary digest renders as lowercase hex — exactly
+    * Spark's `sha2(x, N)` string, so each name resolves to the native
+    * codegen'd Sha2. */
+  val builders: Seq[(String, Seq[Expression] => Expression)] =
+    ("digest" -> (build _)) +: Seq("sha224" -> 224, "sha256" -> 256,
+      "sha384" -> 384, "sha512" -> 512).map { case (name, bits) =>
+        name -> ((es: Seq[Expression]) => Sha2(es.head, Literal(bits)))
+      }
 }

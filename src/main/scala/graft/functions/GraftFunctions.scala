@@ -1,7 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.CountMinSketch
 
 /** Function-gap layer: reference scalar functions Spark lacks as builtins,
   * expressed as pure Column arithmetic so they stay inside whole-stage
@@ -37,4 +39,15 @@ object GraftFunctions {
   def arrayResize(arr: Column, n: Int, fill: Column): Column =
     when(size(arr) >= n, slice(arr, 1, n))
       .otherwise(concat(arr, array_repeat(fill, lit(n) - size(arr))))
+}
+
+/** Sketch probes over Spark's built-in sketch aggregates, injected by
+  * GraftExtensions. `cms_estimate(sketch, key)` reads a `count_min_sketch`
+  * aggregate's serialized bytes and estimates `key`'s count. A named
+  * function (not an anonymous UDF object), so a plan that calls it
+  * re-resolves by name when its unparsed SQL re-executes. */
+object SketchFunctions {
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    GraftSqlBridge.udfBuilder("cms_estimate", udf((b: Array[Byte], key: String) =>
+      CountMinSketch.readFrom(b).estimateCount(key))))
 }

@@ -94,15 +94,14 @@ object GraftMath {
   /** iszero(x): true iff x is ±0 (NaN-safe: NaN = 0 is false). */
   def iszero(x: Column): Column = x === lit(0.0)
 
-  /** SQL registration (gcd/lcm; nanvl is already a Spark builtin).
+  /** SQL builders (gcd/lcm; nanvl is already a Spark builtin).
     * Narrower integer inputs are widened with an explicit Cast — the
     * expressions evaluate on Long, and SQL int literals would otherwise
     * arrive as Integer and fail the eval cast (found by running the
     * reference's math.slt through SltRunner). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
+  val builders: Seq[(String, Seq[Expression] => Expression)] = {
     def asLong(e: Expression): Expression = Cast(e, LongType)
-    reg.createOrReplaceTempFunction("gcd", es => Gcd(asLong(es.head), asLong(es(1))), "built-in")
-    reg.createOrReplaceTempFunction("lcm", es => Lcm(asLong(es.head), asLong(es(1))), "built-in")
+    Seq("gcd" -> (es => Gcd(asLong(es.head), asLong(es(1)))),
+      "lcm" -> (es => Lcm(asLong(es.head), asLong(es(1)))))
   }
 }

@@ -41,16 +41,14 @@ case class NGramsExplode(child: Expression, n: Int)
 }
 
 object NGramsExplode {
-  /** SQL registration: `ngrams_explode(text, 2)` — n must be a literal. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("ngrams_explode", es => {
+  /** SQL builder: `ngrams_explode(text, 2)` — n must be a literal. */
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "ngrams_explode" -> { es =>
       val n = es(1) match {
         case Literal(v: Int, IntegerType) => v
         case other => throw new IllegalArgumentException(
           s"ngrams_explode: n must be an INT literal, got $other")
       }
       NGramsExplode(es.head, n)
-    }, "built-in")
-  }
+    })
 }

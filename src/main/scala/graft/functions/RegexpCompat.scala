@@ -1,7 +1,9 @@
 package graft.functions
 
 import java.util.regex.{Matcher, Pattern}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.functions.udf
 
 /** The reference's regex function dialect (functions/src/regex/ — Postgres
   * conventions): optional `flags` argument ('i','s','m','x'; 'g' only for
@@ -151,16 +153,18 @@ object RegexpCompat {
       case None => s
     }
 
-  /** Register ONLY the operator-rewrite target under a graft-prefixed
-    * name: DFContext's `~`/`~*` rewrite calls graft_regexp_like, leaving
-    * Spark's native regexp_* functions untouched on the engine surface
-    * (the full dialect overrides below are slt-runner-only). */
-  def registerOperatorFn(spark: SparkSession): Unit =
-    spark.udf.register("graft_regexp_like",
-      (s: String, p: String, f: String) => like(s, p, f))
+  /** The engine surface holds ONLY the operator-rewrite target, under a
+    * graft-prefixed name: DFContext's `~`/`~*` rewrite calls
+    * graft_regexp_like, leaving Spark's native regexp_* functions untouched
+    * (the dialect overrides in [[register]] are opt-in per session). */
+  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    GraftSqlBridge.udfBuilder("graft_regexp_like",
+      udf((s: String, p: String, f: String) => like(s, p, f))))
 
+  /** The slt dialect: temp functions that override Spark's own
+    * regexp_like/regexp_count/regexp_instr/regexp_replace, and add
+    * regexp_match, in ONE session. */
   def register(spark: SparkSession): Unit = {
-    registerOperatorFn(spark)
     spark.udf.register("regexp_like",
       (s: String, p: String, f: String) => like(s, p, f))
     spark.udf.register("regexp_match",

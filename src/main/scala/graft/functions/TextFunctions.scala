@@ -96,11 +96,8 @@ object TextFunctions {
     * Column API: tokens / token_count / lang_id / quality_score /
     * doc_fingerprint / scrub_pii / shingles3, plus minhash_sig(text, k)
     * over the fused one-pass kernel (it shingles internally). Each
-    * resolves to the same expressions the operators use — no UDF layer. */
-  /** (name, expression-builder) pairs — shared by per-session registration
-    * and `SparkSessionExtensions.injectFunction` (GraftExtensions), so the
-    * names exist in EVERY session built with the extension, DFContext or
-    * not. */
+    * resolves to the same expressions the operators use — no UDF layer.
+    * (name, expression-builder) pairs, injected by GraftExtensions. */
   def builders: Seq[(String,
       Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
         org.apache.spark.sql.catalyst.expressions.Expression)] = {
@@ -139,11 +136,5 @@ object TextFunctions {
       // and Substrait round-trips of the q4/q9/q12/q21 plans rebuild the
       // exact codegen expression
       DenseKeyProbe.Name -> DenseKeyProbe.fromArgs)
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (n, b) =>
-      reg.createOrReplaceTempFunction(n, b, "built-in") }
   }
 }

@@ -585,10 +585,4 @@ object TimeFunctions {
         timePart(field, es(1))
       })
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (n, b) =>
-      reg.createOrReplaceTempFunction(n, b, "built-in") }
-  }
 }

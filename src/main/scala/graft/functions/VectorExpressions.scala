@@ -222,7 +222,7 @@ case class L2Distance(left: Expression, right: Expression) extends VectorBinaryE
     copy(left = l, right = r)
 }
 
-/** Column-level API + SQL registration. */
+/** Column-level API + SQL builders. */
 object VectorFunctions {
   private def c(e: Expression): Column = GraftSqlBridge.column(e)
   private def e(col: Column): Expression = GraftSqlBridge.expression(col)
@@ -231,17 +231,9 @@ object VectorFunctions {
   def cosine_distance(a: Column, b: Column): Column = c(CosineDistance(e(a), e(b)))
   def l2_distance(a: Column, b: Column): Column = c(L2Distance(e(a), e(b)))
 
-  /** (name, builder) pairs — shared by per-session registration and
-    * extension injection (see TextFunctions.builders). */
+  /** (name, builder) pairs, injected by GraftExtensions. */
   def builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "inner_product" -> (es => InnerProduct(es.head, es(1))),
     "cosine_distance" -> (es => CosineDistance(es.head, es(1))),
     "l2_distance" -> (es => L2Distance(es.head, es(1))))
-
-  /** Register as SQL functions on a session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (n, b) =>
-      reg.createOrReplaceTempFunction(n, b, "built-in") }
-  }
 }

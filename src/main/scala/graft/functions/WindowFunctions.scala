@@ -63,8 +63,6 @@ object GraftWindowFunctions {
       GraftSqlBridge.column(PositionWeightedAvg(GraftSqlBridge.expression(x))),
       partitionBy, orderBy)
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("pwavg", es => PositionWeightedAvg(es.head), "built-in")
-  }
+  val builders: Seq[(String, Seq[Expression] => Expression)] =
+    Seq("pwavg" -> (es => PositionWeightedAvg(es.head)))
 }

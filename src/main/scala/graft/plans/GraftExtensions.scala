@@ -1,7 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Expression, Or}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Expression, ExpressionInfo, Or}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Distinct, Filter, LogicalPlan, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
 
@@ -83,16 +84,25 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => UnionsToFilter)
     GenerateSeriesTVF.register(e)
-    // the engine's SQL function surface (vector kernels + text pipeline) in
-    // EVERY session built with the extension — no DFContext needed; session
-    // temp functions (the slt dialect layers) still shadow these names
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    (graft.functions.VectorFunctions.builders ++
-        graft.functions.TextFunctions.builders ++
-        graft.functions.TimeFunctions.builders).foreach { case (n, b) =>
-      e.injectFunction((FunctionIdentifier(n),
-        new ExpressionInfo("graft.functions", n), b))
+    GraftExtensions.functions.foreach { case (n, b) =>
+      e.injectFunction((FunctionIdentifier(n), new ExpressionInfo("graft.functions", n), b))
     }
+  }
+}
+
+object GraftExtensions {
+
+  /** The engine's SQL function surface — the one registry, installed in
+    * EVERY session built with the extension (no DFContext, no per-query
+    * registration). Injected names replace a same-named Spark built-in in
+    * the session: `make_time` and `to_time` (TimeFunctions) do, and
+    * ExtensionsSpec pins that set. A session temp function (the slt dialect
+    * layers, RegexpCompat.register) still shadows any of these names. */
+  val functions: Seq[(String, Seq[Expression] => Expression)] = {
+    import graft.functions._
+    VectorFunctions.builders ++ TextFunctions.builders ++ TimeFunctions.builders ++
+      ArrayMathFunctions.builders ++ CryptoFunctions.builders ++ GraftMath.builders ++
+      GraftWindowFunctions.builders ++ NGramsExplode.builders ++ RegexpCompat.builders ++
+      ArrowFunctions.builders ++ SketchFunctions.builders
   }
 }

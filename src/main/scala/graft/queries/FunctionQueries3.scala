@@ -67,7 +67,7 @@ object FunctionQueries3 extends QuerySet {
       val bc = shouldBroadcast(s0,
         estimateBytes(p, p.rows * EqSelectivity,
           Seq("p_partkey", "p_brand", "p_type")))
-      fixtureViews(s0, dir)
+      graft.Tables.registerAll(s0, dir)
       if (!bc) s0.sql(TpchPartsuppSql.q16)
       else {
         s0.sql(

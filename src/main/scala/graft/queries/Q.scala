@@ -113,25 +113,6 @@ object Q {
       "org.apache.spark.sql.catalyst.optimizer.TransposeWindow",
       "org.apache.spark.sql.catalyst.optimizer.InferWindowGroupLimit").mkString(","))
 
-  /** Register the fixture tables as temp views once per (session, dir) —
-    * `createOrReplaceTempView` costs ~20-25 ms per table-triple per call
-    * (measured 139 vs 64 ms/plan on the q3 shape with registration inline),
-    * which a real engine pays once at catalog setup, not per query. A dir
-    * switch (verify at sf0.01 vs bench at SF1 in one JVM) re-registers. */
-  private val registeredDirs = new java.util.WeakHashMap[SparkSession, String]()
-  def fixtureViews(s: SparkSession, dir: String): Unit = registeredDirs.synchronized {
-    if (registeredDirs.get(s) != dir) {
-      // only tables present in the dir — scale fixtures (gen_sf1.py) carry
-      // the TPC-H star only, not events/documents/embeddings
-      graft.Tables.names
-        .filter(n => new java.io.File(s"$dir/$n.parquet").exists())
-        .foreach(n => graft.Tables.load(s, dir, n).createOrReplaceTempView(n))
-      // partsupp: real file in the scale fixtures, derived elsewhere
-      graft.Tables.partsupp(s, dir).createOrReplaceTempView("partsupp")
-      registeredDirs.put(s, dir)
-    }
-  }
-
   /** Cross-engine-stable rounding.
     *
     * Two failure modes make naive `round` un-comparable across engines:

@@ -63,8 +63,7 @@ object Round10Queries extends QuerySet {
     // price Union<big: double, small: double> built per order, extracted
     // back per variant. The oracle mirrors the carrier semantics directly.
     "fn_union" -> { (s, dir) =>
-      graft.DFContext(s) // registers union_extract/union_tag
-      fixtureViews(s, dir)
+      Tables.registerAll(s, dir)
       s.sql(
         """SELECT o_orderkey,
           |  union_tag(u) AS tag,

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.functions.{GraftMath, GraftWindowFunctions}
+import graft.functions.GraftMath
 import graft.operators.RecursiveCte
 import org.apache.spark.sql.expressions.Window
 import Q._
@@ -148,7 +148,6 @@ object Round2Queries extends QuerySet {
     // Custom table function (UDTF): ngrams_explode as a native Generator,
     // used with select-list generator syntax like explode. Top bigrams.
     "text_ngrams_udtf" -> { (s, dir) =>
-      graft.functions.NGramsExplode.register(s)
       t(s, dir, "documents").createOrReplaceTempView("r2_docs")
       s.sql("""
         SELECT ngram, CAST(count(*) AS BIGINT) AS n
@@ -193,10 +192,9 @@ object Round2Queries extends QuerySet {
         .orderBy("c_mktsegment")
     },
 
-    // Custom window function (AggregateWindowFunction), SQL-registered and
+    // Custom window function (AggregateWindowFunction), SQL-callable and
     // used with standard OVER syntax: position-weighted running average.
     "win_custom_pwavg" -> { (s, dir) =>
-      GraftWindowFunctions.register(s)
       val over = "over (partition by l_orderkey order by l_linenumber, l_quantity, l_extendedprice)"
       t(s, dir, "lineitem").filter(col("l_orderkey") <= 2000)
         .selectExpr("l_orderkey",

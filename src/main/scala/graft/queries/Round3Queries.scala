@@ -45,7 +45,7 @@ object Round3Queries extends QuerySet {
       val supOk = shouldBroadcast(s0,
         supplierComplexBytes(s0, dir, "nation", Seq("s_suppkey")))
       val s = if (supOk) staticPlanSession(s0) else s0
-      fixtureViews(s, dir)
+      graft.Tables.registerAll(s, dir)
       if (!supOk) s.sql(TpchPartsuppSql.q11)
       else s.sql(
         """WITH g AS (

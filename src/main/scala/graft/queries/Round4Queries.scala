@@ -36,7 +36,6 @@ object Round4Queries extends QuerySet {
     // literals (DuckDB has no sha224/384/512 to compute them with).
     "fn_crypto2" -> { (s, _) =>
       import s.implicits._
-      graft.functions.CryptoFunctions.register(s)
       Seq("abc", "", "The quick brown fox jumps over the lazy dog").toDF("s")
         .select(col("s"),
           sha2(col("s").cast("binary"), 224).as("sha224_hex"),

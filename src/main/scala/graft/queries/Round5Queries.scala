@@ -173,7 +173,7 @@ object Round5Queries extends QuerySet {
     // pins result equivalence under the injection.
     "join_runtime_filter" -> { (s, dir) =>
       val ss = runtimeFilterSession(s)
-      fixtureViews(ss, dir)
+      graft.Tables.registerAll(ss, dir)
       ss.sql(
         """SELECT p_brand, CAST(COUNT(*) AS BIGINT) AS n,
           |  CAST(FLOOR((SUM(l_extendedprice * (1 - l_discount)) + 1.37e-4) * 100 + 0.5) AS DOUBLE) / 100 AS rev

@@ -65,12 +65,7 @@ object Round5bQueries extends QuerySet {
     // Both checks evaluate in-plan against exact per-key counts; the
     // exact counts are the engine-comparable output.
     "agg_countmin" -> { (s, dir) =>
-      // registered by name (not an anonymous UDF object) so the plan
-      // survives the unparser sweep: `cms_estimate(...)` re-resolves when
-      // the unparsed SQL re-executes on the session
-      s.udf.register("cms_estimate", (b: Array[Byte], key: String) =>
-        org.apache.spark.util.sketch.CountMinSketch.readFrom(b)
-          .estimateCount(key))
+      // cms_estimate: SketchFunctions, injected in every graft session
       val od = t(s, dir, "orders")
       val sk = od.agg(
         expr("count_min_sketch(o_orderpriority, 0.001d, 0.99d, 42)").as("cms"),
@@ -178,12 +173,12 @@ object Round5bQueries extends QuerySet {
           (col("n_hit").cast("double") / col("n_exact") >= 0.8).as("recall_ok"))
     },
 
-    // The text-pipeline surface through pure SQL (TextFunctions.register
-    // on DFContext): a SQL-only user runs the corpus operators with no
-    // Column API — the registered names resolve to the same codegen
+    // The text-pipeline surface through pure SQL (TextFunctions.builders,
+    // injected by GraftExtensions): a SQL-only user runs the corpus
+    // operators with no Column API — the names resolve to the same codegen
     // expressions the Column path uses, proven by the shared oracle.
     "text_sql_surface" -> { (s, dir) =>
-      fixtureViews(s, dir)
+      graft.Tables.registerAll(s, dir)
       val ctx = graft.DFContext(s)
       ctx.sql(
         """SELECT lang_id(text) AS lang, count(*) AS n,

@@ -338,7 +338,7 @@ object TpcdsQueries extends QuerySet {
 
   val queries: Map[String, QueryFn] = sql.map { case (name, text) =>
     name -> ((s: org.apache.spark.sql.SparkSession, dir: String) => {
-      fixtureViews(s, dir); s.sql(text)
+      graft.Tables.registerAll(s, dir); s.sql(text)
     })
   }
 

@@ -254,7 +254,7 @@ object TpcdsQueries2 extends QuerySet {
 
   val queries: Map[String, QueryFn] = sql.map { case (name, text) =>
     name -> ((s: org.apache.spark.sql.SparkSession, dir: String) => {
-      fixtureViews(s, dir); s.sql(text)
+      graft.Tables.registerAll(s, dir); s.sql(text)
     })
   }
 

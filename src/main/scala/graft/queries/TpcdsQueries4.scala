@@ -132,7 +132,7 @@ object TpcdsQueries4 extends QuerySet {
 
   val queries: Map[String, QueryFn] = sql.map { case (name, text) =>
     name -> ((s: org.apache.spark.sql.SparkSession, dir: String) => {
-      fixtureViews(s, dir); s.sql(text)
+      graft.Tables.registerAll(s, dir); s.sql(text)
     })
   }
 

@@ -62,7 +62,7 @@ object TpchQueries extends QuerySet {
       import graft.plans.BroadcastAdvisor
       val bc = BroadcastAdvisor.shouldBroadcast(s0, BroadcastAdvisor.q3CmplxBytes(s0, dir))
       val s = if (bc) staticPlanSession(s0) else s0
-      fixtureViews(s, dir)
+      graft.Tables.registerAll(s, dir)
       val hint = if (bc) "/*+ BROADCAST(cmplx) */ " else ""
       s.sql(
         s"""SELECT ${hint}l_orderkey,
@@ -104,7 +104,7 @@ object TpchQueries extends QuerySet {
         estimateBytes(supStats, supStats.rows.toDouble, Seq("s_suppkey", "s_nationkey")))
       val all = aoOk && custOk && supOk
       val s = if (all) staticPlanSession(s0) else s0
-      fixtureViews(s, dir)
+      graft.Tables.registerAll(s, dir)
       val outerHints = Seq(if (aoOk) Some("BROADCAST(ao)") else None,
         if (supOk) Some("BROADCAST(sup)") else None).flatten
       val outer = if (outerHints.nonEmpty) outerHints.mkString("/*+ ", ", ", " */ ") else ""
@@ -160,7 +160,7 @@ object TpchQueries extends QuerySet {
       import graft.plans.BroadcastAdvisor
       val bc = BroadcastAdvisor.shouldBroadcast(s0, BroadcastAdvisor.q10PcBytes(s0, dir))
       val s = if (bc) staticPlanSession(s0) else s0
-      fixtureViews(s, dir)
+      graft.Tables.registerAll(s, dir)
       val pcHint = if (bc) "/*+ BROADCAST(pc) */ " else ""
       val o2Hint = if (bc) "/*+ BROADCAST(o2) */ " else ""
       s.sql(
@@ -204,7 +204,7 @@ object TpchQueries extends QuerySet {
       // r5-measured SHUFFLE_HASH/AQE chain is unchanged.
       if (graft.operators.BitmapJoin.gate(s0, o.cols.get("o_orderkey"), 2)) {
         val s = staticWideSession(s0)
-        fixtureViews(s, dir)
+        graft.Tables.registerAll(s, dir)
         val orders = s.table("orders").select(col("o_orderkey"),
           col("o_orderpriority").isin("1-URGENT", "2-HIGH").as("hi"))
         val probe = graft.operators.BitmapJoin.probe(graft.operators.BitmapJoin
@@ -229,7 +229,7 @@ object TpchQueries extends QuerySet {
       // ORDER BY's range exchange and sampling job vanish (same argument as
       // q22's tiny-result form)
       val s = if (sh) staticWideSession(s0) else s0
-      fixtureViews(s, dir)
+      graft.Tables.registerAll(s, dir)
       val hint = if (sh) "/*+ SHUFFLE_HASH(os) */ " else ""
       val body =
         s"""SELECT ${hint}l_linestatus,

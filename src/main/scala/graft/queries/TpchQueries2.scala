@@ -28,17 +28,8 @@ object TpchQueries2 extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
     // Q4: EXISTS-decorrelated semi join + group on priority.
-    // Reshape (stats-gated): the 3-month order window is the selective
-    // side — broadcast it into the lineitem scan, dedup (orderkey,
-    // priority) with partial agg BELOW the exchange, and count per
-    // priority. EXISTS(σ lineitem) ≡ "≥1 matching line per order", which
-    // the inner GROUP BY reproduces exactly; the fact table is never
-    // exchanged. Past the threshold the original EXISTS text runs on the
-    // AQE session (Spark decorrelates it to the shuffled semi join).
     "q4_priority" -> { (s0, dir) =>
-      import graft.plans.BroadcastAdvisor._
-      val o = tableStats(s0, s"$dir/orders.parquet")
-      val l = tableStats(s0, s"$dir/lineitem.parquet")
+      val l = graft.plans.BroadcastAdvisor.tableStats(s0, s"$dir/lineitem.parquet")
       // r12: EXISTS(σ lineitem) carries NO payload — it is a pure SET of
       // orderkeys, so the whole subquery collapses to ONE dense bitset
       // over l_orderkey (a 1-bit BitmapJoin key map; duplicates are
@@ -48,11 +39,12 @@ object TpchQueries2 extends QuerySet {
       // r12 (SF1, interleaved min-of-8): bitmap 0.225 s vs shipped bcast-window
       // 0.323 vs broadcast-semi 0.417 vs plain AQE EXISTS 0.826,
       // identical results. Gated on footer maxKey (maxKey/8 ≤ broadcast
-      // threshold, minKey ≥ 0); past the gate the prior measured
-      // broadcast-window/AQE chain below is unchanged.
+      // threshold, minKey ≥ 0); past the gate the original EXISTS text
+      // runs on the AQE session (Spark decorrelates it to the shuffled
+      // semi join).
       if (graft.operators.BitmapJoin.gate(s0, l.cols.get("l_orderkey"), 1)) {
         val s = staticWideSession(s0)
-        fixtureViews(s, dir)
+        Tables.registerAll(s, dir)
         val keys = s.table("lineitem")
           .filter(col("l_quantity") > 45)
           .select(col("l_orderkey"))
@@ -66,33 +58,16 @@ object TpchQueries2 extends QuerySet {
           .agg(count(lit(1)).as("order_count"))
           .coalesce(1).sortWithinPartitions("o_orderpriority")
       } else {
-      val winRows = o.rows * rangeSelectivity(o, "o_orderdate",
-        Some(dateBound(o, "o_orderdate", "1996-07-01")),
-        Some(dateBound(o, "o_orderdate", "1996-10-01")))
-      val bc = shouldBroadcast(s0,
-        estimateBytes(o, winRows, Seq("o_orderkey", "o_orderpriority")))
-      val s = if (bc) staticPlanSession(s0) else s0
-      fixtureViews(s, dir)
-      if (bc) s.sql("""
-        SELECT o_orderpriority, count(*) AS order_count FROM (
-          SELECT /*+ BROADCAST(ow) */ ow.o_orderpriority, l_orderkey
-          FROM lineitem,
-            (SELECT o_orderkey, o_orderpriority FROM orders
-             WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
-               AND o_orderdate < TIMESTAMP '1996-10-01 00:00:00') ow
-          WHERE l_orderkey = ow.o_orderkey AND l_quantity > 45
-          GROUP BY ow.o_orderpriority, l_orderkey)
-        GROUP BY o_orderpriority ORDER BY o_orderpriority
-      """)
-      else s.sql("""
-        SELECT o_orderpriority, count(*) AS order_count
-        FROM orders
-        WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
-          AND o_orderdate < TIMESTAMP '1996-10-01 00:00:00'
-          AND EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey
-                      AND l_quantity > 45)
-        GROUP BY o_orderpriority ORDER BY o_orderpriority
-      """)
+        Tables.registerAll(s0, dir)
+        s0.sql("""
+          SELECT o_orderpriority, count(*) AS order_count
+          FROM orders
+          WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
+            AND o_orderdate < TIMESTAMP '1996-10-01 00:00:00'
+            AND EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey
+                        AND l_quantity > 45)
+          GROUP BY o_orderpriority ORDER BY o_orderpriority
+        """)
       }
     },
 
@@ -112,7 +87,7 @@ object TpchQueries2 extends QuerySet {
       val bc = shouldBroadcast(s0,
         estimateBytes(o, o.rows * twoNationSel, Seq("o_orderkey", "o_custkey")))
       val s = if (bc) staticPlanSession(s0) else s0
-      fixtureViews(s, dir)
+      Tables.registerAll(s, dir)
       val hint = if (bc) "/*+ BROADCAST(ocx), BROADCAST(sn) */ " else ""
       val innerHint = if (bc) "/*+ BROADCAST(cn) */ " else ""
       s.sql(
@@ -149,7 +124,7 @@ object TpchQueries2 extends QuerySet {
       val bc = shouldBroadcast(s0,
         estimateBytes(o, o.rows * regionSel, Seq("o_orderkey", "o_orderdate")))
       val s = if (bc) staticPlanSession(s0) else s0
-      fixtureViews(s, dir)
+      Tables.registerAll(s, dir)
       val hint = if (bc) "/*+ BROADCAST(ocx), BROADCAST(px), BROADCAST(sn) */ " else ""
       val innerHint = if (bc) "/*+ BROADCAST(cn) */ " else ""
       s.sql(
@@ -222,7 +197,7 @@ object TpchQueries2 extends QuerySet {
       if (bc && yearsOk &&
           graft.operators.BitmapJoin.gate(s0, o.cols.get("o_orderkey"), 8)) {
         val s = staticPlanSession(s0)
-        fixtureViews(s, dir)
+        Tables.registerAll(s, dir)
         val oyear = graft.operators.BitmapJoin.probe(graft.operators.BitmapJoin.build(
           s.table("orders").select(col("o_orderkey"), col("o_orderdate")),
           "o_orderkey", year(col("o_orderdate")) - 1900, 8), 8)
@@ -247,7 +222,7 @@ object TpchQueries2 extends QuerySet {
           .agg((floor((sum(col("amount")) + lit(1.37e-4)) * 100 + 0.5)
             .cast("double") / 100).as("profit"))
       } else {
-      fixtureViews(s0, dir)
+      Tables.registerAll(s0, dir)
       // r13: fold the amount expression BELOW the fact-side exchange
       // (guide: project before the exchange). The SHUFFLE_HASH fact side
       // used to carry (l_quantity, l_extendedprice, l_discount,
@@ -296,7 +271,7 @@ object TpchQueries2 extends QuerySet {
       val bc = shouldBroadcast(s0,
         estimateBytes(c, c.rows.toDouble, Seq("c_custkey")))
       val s = if (bc) staticPlanSession(s0) else s0
-      fixtureViews(s, dir)
+      Tables.registerAll(s, dir)
       val hint = if (bc) "/*+ BROADCAST(oc) */ " else ""
       val grouped = s.sql(
         s"""SELECT c_count, count(*) AS custdist FROM (
@@ -329,7 +304,7 @@ object TpchQueries2 extends QuerySet {
       val bc = shouldBroadcast(s0,
         estimateBytes(sup, sup.rows.toDouble, Seq("s_suppkey")))
       val s = if (bc) staticPlanSession(s0) else s0
-      fixtureViews(s, dir)
+      Tables.registerAll(s, dir)
       val hint = if (bc) "/*+ BROADCAST(r) */ " else ""
       s.sql(
         s"""SELECT ${hint}s_suppkey, s_name,
@@ -347,9 +322,6 @@ object TpchQueries2 extends QuerySet {
     },
 
     // Q17: small-quantity revenue vs per-part average (correlated agg).
-    // fixtureViews (not registerAll): the scale fixtures carry only the
-    // TPC-H star, and registerAll's unconditional events/documents load
-    // fails there — q17 only needs lineitem + part.
     //
     // r13 reshape (stats-gated): Spark decorrelates the scalar subquery to
     // a SECOND full lineitem scan (no part pre-filter reaches it — the
@@ -369,7 +341,7 @@ object TpchQueries2 extends QuerySet {
       val bc = shouldBroadcast(s0,
         estimateBytes(p, p.rows * EqSelectivity, Seq("p_partkey")))
       val s = if (bc) staticWideSession(s0) else s0
-      fixtureViews(s, dir)
+      Tables.registerAll(s, dir)
       if (bc) s.sql("""
         SELECT floor((sum(l_extendedprice) / 7.0 + 1.37e-4) * 100 + 0.5) / 100 AS avg_yearly
         FROM (
@@ -409,7 +381,7 @@ object TpchQueries2 extends QuerySet {
     // 0.5*sum(l_quantity) availability threshold — the reference's actual
     // shape and input volume.
     "q20_nested_in" -> { (s, dir) =>
-      fixtureViews(s, dir)
+      Tables.registerAll(s, dir)
       s.sql(TpchPartsuppSql.q20)
     },
 
@@ -432,8 +404,7 @@ object TpchQueries2 extends QuerySet {
     // BEFORE the only shuffle (halves it); supplier resolves names via
     // broadcast at the very end. One fact scan, one narrow shuffle.
     "q21_waiting" -> { (s0, dir) =>
-      import graft.plans.BroadcastAdvisor._
-      val o = tableStats(s0, s"$dir/orders.parquet")
+      val o = graft.plans.BroadcastAdvisor.tableStats(s0, s"$dir/orders.parquet")
       // r13: the F-order filter carries NO payload — it is a pure SET of
       // orderkeys (the q4/q12 diagnosis transfers), so the broadcast-semi
       // hash relation collapses to ONE dense bitset over o_orderkey
@@ -447,10 +418,11 @@ object TpchQueries2 extends QuerySet {
       // stacking both 3M-entry hash builds into one stage loses more
       // than the second, well-combined exchange costs. Gated on footer
       // maxKey (maxKey/8 ≤ broadcast threshold, minKey ≥ 0); past the
-      // gate the prior measured broadcast/AQE chain below is unchanged.
+      // gate the hint-free per-order statistics text runs on the AQE
+      // session.
       if (graft.operators.BitmapJoin.gate(s0, o.cols.get("o_orderkey"), 1)) {
         val s = staticPlanSession(s0)
-        fixtureViews(s, dir)
+        Tables.registerAll(s, dir)
         val keys = s.table("orders")
           .filter(col("o_orderstatus") === "F").select(col("o_orderkey"))
         val isF = graft.operators.BitmapJoin.probe(
@@ -467,30 +439,23 @@ object TpchQueries2 extends QuerySet {
           .filter(col("n_supp") >= 2 && col("n_high") === 1)
         return21(l2, s)
       } else {
-      // o_orderstatus has 3 values — EqSelectivity (0.2) under-estimates;
-      // gate on the conservative 1/2 of the key column
-      val bcO = shouldBroadcast(s0,
-        estimateBytes(o, o.rows * 0.5, Seq("o_orderkey")))
-      val s = if (bcO) staticPlanSession(s0) else s0
-      fixtureViews(s, dir)
-      val hintO = if (bcO) "/*+ BROADCAST(of) */ " else ""
-      val hintS = if (bcO) "/*+ BROADCAST(supplier) */ " else ""
-      s.sql(
-        s"""SELECT ${hintS}s_name, CAST(sum(nlines) AS BIGINT) AS numwait
-          |FROM (
-          |  SELECT max(CASE WHEN high_lines > 0 THEN l_suppkey END) AS high_supp,
-          |         sum(high_lines) AS nlines
-          |  FROM (SELECT ${hintO}l_orderkey, l_suppkey,
-          |               sum(CASE WHEN l_quantity > 30 THEN 1 ELSE 0 END) AS high_lines
-          |        FROM lineitem,
-          |          (SELECT o_orderkey FROM orders WHERE o_orderstatus = 'F') of
-          |        WHERE l_orderkey = of.o_orderkey
-          |        GROUP BY l_orderkey, l_suppkey)
-          |  GROUP BY l_orderkey
-          |  HAVING count(*) >= 2
-          |     AND sum(CASE WHEN high_lines > 0 THEN 1 ELSE 0 END) = 1) c
-          |JOIN supplier ON c.high_supp = s_suppkey
-          |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin)
+        Tables.registerAll(s0, dir)
+        s0.sql(
+          """SELECT s_name, CAST(sum(nlines) AS BIGINT) AS numwait
+            |FROM (
+            |  SELECT max(CASE WHEN high_lines > 0 THEN l_suppkey END) AS high_supp,
+            |         sum(high_lines) AS nlines
+            |  FROM (SELECT l_orderkey, l_suppkey,
+            |               sum(CASE WHEN l_quantity > 30 THEN 1 ELSE 0 END) AS high_lines
+            |        FROM lineitem,
+            |          (SELECT o_orderkey FROM orders WHERE o_orderstatus = 'F') of
+            |        WHERE l_orderkey = of.o_orderkey
+            |        GROUP BY l_orderkey, l_suppkey)
+            |  GROUP BY l_orderkey
+            |  HAVING count(*) >= 2
+            |     AND sum(CASE WHEN high_lines > 0 THEN 1 ELSE 0 END) = 1) c
+            |JOIN supplier ON c.high_supp = s_suppkey
+            |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin)
       }
     },
 
@@ -515,7 +480,7 @@ object TpchQueries2 extends QuerySet {
       // task's output at the group count), so one reducer is exact at any
       // scale and the ORDER BY's range exchange disappears entirely
       val s = if (bc) tinyResultSession(s0) else s0
-      fixtureViews(s, dir)
+      Tables.registerAll(s, dir)
       if (bc)
         // Broadcast form, latency-shaped (r9): the scalar average becomes a
         // broadcast 1-row CROSS JOIN — identical semantics (NULL gavg over

@@ -64,7 +64,7 @@ object WindowQueries2 extends QuerySet {
       val euOk = shouldBroadcast(s0, supplierComplexBytes(s0, dir, "region",
         Seq("s_suppkey", "s_name", "s_acctbal")))
       val s = if (pOk && euOk) staticPlanSession(s0) else s0
-      fixtureViews(s, dir)
+      Tables.registerAll(s, dir)
       if (!(pOk && euOk)) s.sql(TpchPartsuppSql.q2)
       else s.sql(
         """SELECT s_acctbal, s_name, n_name, p_partkey, s_suppkey

@@ -210,7 +210,7 @@ object WorkloadQueries extends QuerySet {
 
   val queries: Map[String, QueryFn] = sql.map { case (name, text) =>
     name -> ((s: org.apache.spark.sql.SparkSession, dir: String) => {
-      fixtureViews(s, dir); s.sql(text)
+      graft.Tables.registerAll(s, dir); s.sql(text)
     })
   } + ("external_aggr_hicard" -> externalAggrSpread _)
 
@@ -227,7 +227,7 @@ object WorkloadQueries extends QuerySet {
     * Same result rows: only the exchange placement moves. */
   private def externalAggrSpread(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    fixtureViews(s, dir)
+    graft.Tables.registerAll(s, dir)
     val under = graft.Tables.load(s, dir, "lineitem")
       .rdd.getNumPartitions < s.sparkContext.defaultParallelism
     if (!under) s.sql(sql("external_aggr_hicard"))

@@ -24,6 +24,20 @@ object GraftSqlBridge {
   def expressionEager(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** A Scala closure as a (name, function-registry builder) pair: the
+    * named ScalaUDF, arity check included, that `spark.udf.register(name,
+    * f)` installs — as a builder, so GraftExtensions can inject it. */
+  def udfBuilder(name: String, f: expressions.UserDefinedFunction)
+      : (String, Seq[Expression] => Expression) = {
+    val named = f.withName(name).asInstanceOf[expressions.SparkUserDefinedFunction]
+    val arity = named.inputEncoders.size
+    name -> { es =>
+      if (es.size != arity) throw errors.QueryCompilationErrors.wrongNumArgsError(
+        name, Seq(arity), es.size)
+      classic.UserDefinedFunctionUtils.toScalaUDF(named, es)
+    }
+  }
+
   /** Raise a genuine AnalysisException (planning-phase error class) from
     * library code — the constructor is private[sql] in Spark 4. */
   def analysisError(msg: String): Nothing =

@@ -113,7 +113,7 @@ class BitmapJoinSpec extends AnyFunSuite {
     val dir = sfDir
     val viaBitmap = SparkEntry.queries("q12_shipmode")(spark, dir)
       .collect().map(_.toString).sorted.toSeq
-    graft.queries.Q.fixtureViews(spark, dir)
+    graft.Tables.registerAll(spark, dir)
     val viaJoin = spark.sql(
       """SELECT l_linestatus,
         |  sum(CASE WHEN os.hi THEN 1 ELSE 0 END) AS high_line_count,

@@ -105,7 +105,6 @@ class CodegenFuzzSpec extends AnyFunSuite {
     val sessions = modes.map { case (name, confs) =>
       val ss = spark.newSession()
       confs.foreach { case (k, v) => ss.conf.set(k, v) }
-      graft.functions.GraftMath.register(ss) // gcd/lcm are temp functions
       (name, Tables.load(ss, dir, "lineitem"))
     }
     var nonEmpty = 0

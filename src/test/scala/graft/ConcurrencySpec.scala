@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Concurrent query execution on one SparkContext: a real deployment runs
   * many sessions in parallel, and the library keeps per-session caches
-  * (fixtureViews registration, staticPlanSession, runtimeFilterSession —
+  * (Tables.registerAll, staticPlanSession, runtimeFilterSession —
   * all WeakHashMap-backed). Eight threads running a mixed slice of the
   * inventory simultaneously must each get the exact rows a serial run
   * gets: a race in view registration or session reuse shows up as a

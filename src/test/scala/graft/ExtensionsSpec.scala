@@ -4,22 +4,16 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.AsyncBatch
-import graft.plans.UnionsToFilter
+import graft.plans.GraftExtensions
 
 class ExtensionsSpec extends AnyFunSuite {
 
-  // `withExtensions` only applies to a freshly built session; the suites
-  // share one, so install the rule at runtime — the equivalent public API.
-  lazy val extSpark: SparkSession = {
-    val s = TestSpark.spark
-    if (!s.experimental.extraOptimizations.contains(UnionsToFilter))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ UnionsToFilter
-    s
-  }
+  // GraftSession's session carries GraftExtensions: the UnionsToFilter
+  // tests below see the injected rule fire on its own
+  private lazy val spark = TestSpark.spark
 
   test("UnionsToFilter collapses same-source DISTINCT union branches into one scan") {
-    val li = Tables.load(extSpark, TestSpark.sfDir, "lineitem")
+    val li = Tables.load(spark, TestSpark.sfDir, "lineitem")
     val a = li.filter(col("l_quantity") < 5)
     val b = li.filter(col("l_quantity") > 45)
     val unioned = a.unionAll(b).distinct()
@@ -31,7 +25,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("UnionsToFilter preserves UNION ALL duplicates (overlapping predicates)") {
-    val li = Tables.load(extSpark, TestSpark.sfDir, "lineitem")
+    val li = Tables.load(spark, TestSpark.sfDir, "lineitem")
     // overlap: rows with 5 < l_quantity < 10 satisfy BOTH branches and must
     // be emitted twice by UNION ALL — the rule must not fire on a bare union
     val a = li.filter(col("l_quantity") < 10)
@@ -43,7 +37,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("UnionsToFilter skips non-deterministic predicates") {
-    val li = Tables.load(extSpark, TestSpark.sfDir, "lineitem")
+    val li = Tables.load(spark, TestSpark.sfDir, "lineitem")
     val a = li.filter(rand(1) < 0.5)
     val b = li.filter(rand(2) < 0.5)
     val unioned = a.unionAll(b).distinct()
@@ -52,8 +46,8 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("rule leaves different-source unions alone") {
-    val li = Tables.load(extSpark, TestSpark.sfDir, "lineitem")
-    val o = Tables.load(extSpark, TestSpark.sfDir, "orders")
+    val li = Tables.load(spark, TestSpark.sfDir, "lineitem")
+    val o = Tables.load(spark, TestSpark.sfDir, "orders")
     val u = li.select(col("l_orderkey").as("k")).filter(col("k") < 100)
       .unionAll(o.select(col("o_orderkey").as("k")).filter(col("k") > 200))
     assert(u.queryExecution.optimizedPlan.toString.contains("Union"))
@@ -61,7 +55,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("AsyncBatch.mapAsync preserves order and values") {
-    val s = extSpark
+    val s = spark
     import s.implicits._
     val ds = s.range(0, 1000).as[Long]
     val out = AsyncBatch.mapAsync(ds, concurrency = 8) { x =>
@@ -70,5 +64,33 @@ class ExtensionsSpec extends AnyFunSuite {
       x * 2
     }.collect()
     assert(out.sorted.sameElements((0L until 1000L).map(_ * 2)))
+  }
+
+  private val injected = GraftExtensions.functions.map(_._1)
+
+  private def tempFunctions(s: SparkSession): Set[String] =
+    s.catalog.listFunctions().collect().filter(_.isTemporary).map(_.name).toSet
+
+  test("GraftExtensions is the one function registry: no session-local registration") {
+    assert(injected.distinct == injected, "a name injected twice keeps only its last builder")
+    // every injected name resolves on a fresh session, no DFContext built
+    val fresh = TestSpark.spark.newSession()
+    assert(injected.filterNot(fresh.catalog.functionExists).isEmpty)
+    // building a DFContext leaves the session's function table as it was
+    val before = tempFunctions(fresh)
+    def changed = (tempFunctions(fresh) diff before) ++ (before diff tempFunctions(fresh))
+    DFContext(fresh)
+    assert(changed.isEmpty, "DFContext changed functions")
+    // so does running the inventory lines that call engine functions
+    for (q <- Seq("text_ngrams_udtf", "win_custom_pwavg", "fn_crypto2", "agg_countmin")) {
+      assert(SparkEntry.queries(q)(fresh, TestSpark.sfDir).collect().nonEmpty, q)
+      assert(changed.isEmpty, s"$q changed functions")
+    }
+  }
+
+  test("injected names replace exactly the Spark built-ins make_time and to_time") {
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    val builtin = FunctionRegistry.builtin.listFunction().map(_.funcName).toSet
+    assert(injected.toSet.intersect(builtin) == Set("make_time", "to_time"))
   }
 }

@@ -29,7 +29,6 @@ class PipelineSpec extends AnyFunSuite {
 
   test("SQL-registered text surface agrees with the Column path") {
     val s = spark; import s.implicits._
-    graft.functions.TextFunctions.register(s)
     import graft.functions.TextFunctions
     val df = Seq((1L, "the cat and the hat is a cat"),
       (2L, "der hund ist ein hund und das haus")).toDF("id", "text")
@@ -95,7 +94,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("vector kernels registered as SQL functions") {
-    graft.functions.VectorFunctions.register(spark)
     emb.createOrReplaceTempView("emb_t")
     val v = spark.sql(
       "SELECT inner_product(embedding, embedding) FROM emb_t LIMIT 1")

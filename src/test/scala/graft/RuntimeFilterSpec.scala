@@ -78,7 +78,7 @@ class RuntimeFilterSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     def factShuffleBytes(ss: org.apache.spark.sql.SparkSession): Long = {
-      graft.queries.Q.fixtureViews(ss, dir)
+      graft.Tables.registerAll(ss, dir)
       val df = ss.sql(
         """SELECT p_brand, SUM(l_extendedprice) AS amt
           |FROM lineitem JOIN part ON l_partkey = p_partkey

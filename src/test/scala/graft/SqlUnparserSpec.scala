@@ -44,7 +44,7 @@ class SqlUnparserSpec extends AnyFunSuite {
       val fn = SparkEntry.queries.getOrElse(name, fail(s"no inventory entry $name"))
       val df = fn(spark, dir)
       val sql = SqlUnparser.unparse(df)
-      // execute on the DataFrame's own session: temp views (fixtureViews)
+      // execute on the DataFrame's own session: temp views (registerAll)
       // are session-scoped and some queries build on a child session
       val re = df.sparkSession.sql(sql)
       assert(rows(re) == rows(df), s"roundtrip mismatch for $name; sql:\n$sql")

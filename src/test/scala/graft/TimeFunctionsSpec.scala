@@ -11,7 +11,6 @@ class TimeFunctionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def frame(n: Int) = {
-    graft.functions.TimeFunctions.register(spark)
     spark.range(n).selectExpr(
       "cast(id % 24 as int) as h",
       "cast((id * 7) % 60 as int) as m",
@@ -48,7 +47,6 @@ class TimeFunctionsSpec extends AnyFunSuite {
   }
 
   test("to_time rejects out-of-range components; keeps labeled walls") {
-    graft.functions.TimeFunctions.register(spark)
     val r = spark.sql(
       """SELECT to_time('24:01:02') a, to_time('12:99:00') b,
           to_time('2024-03-20T09:15:30-07:00') c,
@@ -58,7 +56,6 @@ class TimeFunctionsSpec extends AnyFunSuite {
   }
 
   test("ns TIME-of-day parse/format and ns binning (r9)") {
-    graft.functions.TimeFunctions.register(spark)
     val r = spark.sql(
       """SELECT graft_time_ns_format(graft_time_ns('08:09:10.123456789')) a,
                 graft_time_ns_format(graft_time_ns('13:14:15')) b,
@@ -74,7 +71,6 @@ class TimeFunctionsSpec extends AnyFunSuite {
   }
 
   test("MonthDayNano interval parse/arith/render at ns precision (r9)") {
-    graft.functions.TimeFunctions.register(spark)
     def one(sql: String): String = spark.sql(sql).head.getString(0)
     def sub(a: String, b: String): String = one(
       s"""SELECT graft_iv_text(x.months - y.months, x.days - y.days, x.ns - y.ns)
@@ -93,7 +89,6 @@ class TimeFunctionsSpec extends AnyFunSuite {
   }
 
   test("duration render and ns timestamp shift (r9)") {
-    graft.functions.TimeFunctions.register(spark)
     def one(sql: String): String = spark.sql(sql).head.getString(0)
     assert(one("""SELECT graft_dur_render(
         graft_ns_epoch('2023-03-15T15:00:20.000000123') -
@@ -119,7 +114,6 @@ class TimeFunctionsSpec extends AnyFunSuite {
   }
 
   test("to_local_time strips the zone label, keeps the wall") {
-    graft.functions.TimeFunctions.register(spark)
     val r = spark.sql(
       """SELECT cast(to_local_time('2024-04-01T00:00:20+05:00') as string) a,
                 cast(to_local_time(timestamp'2024-04-01 07:08:09') as string) b""").head

@@ -24,7 +24,6 @@ class WindowFnSpec extends AnyFunSuite {
 
   test("pwavg SQL path agrees with programmatic path") {
     val s = spark; import s.implicits._
-    GraftWindowFunctions.register(s)
     val df = Seq((1L, 1, 10.0), (1L, 2, 20.0), (1L, 3, 30.0)).toDF("g", "i", "x")
     df.createOrReplaceTempView("pw_t")
     val viaSql = s.sql(

@@ -5801,8 +5801,6 @@ object SltRunner {
     } finally spark.conf.set("spark.sql.session.timeZone", prev)
   }
 
-  /** The engine's own SQL-function compat layer (the same packs the
-    * oracle inventory exercises), plus `iszero` (math/iszero.rs). */
   /** The datafusion-spark compat crate exposes helpers under names Spark
     * itself doesn't have; on actual Spark they ARE builtin semantics, so
     * the spark-dialect session registers thin aliases instead of skipping
@@ -5836,9 +5834,11 @@ object SltRunner {
       "bitwise_not", es => BitwiseNot(es.head), "built-in")
   }
 
+  /** The DataFusion dialect's display and semantics shims over the
+    * engine's functions (GraftExtensions installs those in every session),
+    * plus the opt-in regex dialect (RegexpCompat.register) and reference
+    * functions Spark lacks, such as `iszero` (math/iszero.rs). */
   private def registerCompat(spark: SparkSession): Unit = {
-    graft.functions.GraftMath.register(spark)
-    graft.functions.TimeFunctions.register(spark)
     // Rust f64 Display (the reference renders array-joined floats through
     // it): shortest round-trip digits, plain notation at any magnitude,
     // integral values without the trailing .0, inf/-inf/NaN spellings
@@ -5852,14 +5852,6 @@ object SltRunner {
           .stripTrailingZeros.toPlainString
         if (s == "-0") "0" else s
       })
-    // arrow_typeof (r9): resolved-type introspection in arrow's short
-    // Debug form — graft.functions.ArrowTypeOf
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "arrow_typeof", { es =>
-        if (es.size != 1) throw new IllegalArgumentException(
-          s"arrow_typeof takes 1 argument, got ${es.size}")
-        graft.functions.ArrowTypeOf(es.head)
-      }, "built-in")
     // slt display shim: the engine's TIME-of-day convention is a µs-long
     // (TimeFunctions.makeTime); the reference renders TIME as HH:MM:SS —
     // in the dialect layer make_time returns the formatted string so the
@@ -6014,63 +6006,11 @@ object SltRunner {
           Literal.create(null, org.apache.spark.sql.types.StringType),
           graft.functions.TimeFunctions.timeFormat(us))
       }, "built-in")
-    graft.functions.VectorFunctions.register(spark)
-    graft.functions.ArrayMathFunctions.register(spark)
-    graft.functions.CryptoFunctions.register(spark)
     graft.functions.RegexpCompat.register(spark)
-    graft.functions.NGramsExplode.register(spark)
-    graft.functions.GraftWindowFunctions.register(spark)
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.types.{DoubleType, StringType}
     val reg = spark.sessionState.functionRegistry
     def dbl(e: Expression): Expression = Cast(e, DoubleType)
-    // Arrow Union type over the struct-carrier convention (reference:
-    // functions/src/core/union_extract.rs, union_tag.rs; a dense Union is
-    // modeled as struct<tag: string, v_<variant>: T…> — same carrier
-    // pattern as the MonthDayNano interval structs). union_extract yields
-    // the variant field (NULL when another variant is selected, since
-    // carriers null out unselected fields); union_tag reads the tag.
-    // error-class fidelity (r11): arity errors stay planning-class; a
-    // non-union operand, non-literal tag, or missing variant are the
-    // reference's EXECUTION class — planned as a deferred RaiseRuntime
-    def isUnionCarrier(e: Expression): Boolean =
-      e.resolved && (e.dataType match {
-        case st: org.apache.spark.sql.types.StructType => st.fieldNames.contains("tag")
-        case _ => false
-      })
-    def arrowNm(e: Expression): String =
-      if (e.resolved) graft.functions.ArrowTypeOf.arrowName(e.dataType) else "?"
-    reg.createOrReplaceTempFunction("union_extract", es => {
-      if (es.size != 2) org.apache.spark.sql.GraftSqlBridge.analysisError(
-        s"The function 'union_extract' expected 2 arguments but received ${es.size}")
-      if (es.head.resolved && !isUnionCarrier(es.head))
-        graft.functions.RaiseRuntime("union_extract first argument must " +
-          s"be a union, got ${arrowNm(es.head)} instead")
-      else es(1) match {
-        case Literal(s, StringType) if s != null =>
-          val name = String.valueOf(s)
-          es.head.dataType match {
-            case st: org.apache.spark.sql.types.StructType
-                if es.head.resolved && !st.fieldNames.contains("v_" + name) =>
-              graft.functions.RaiseRuntime(s"field $name not found on union")
-            case _ =>
-              org.apache.spark.sql.catalyst.analysis.UnresolvedExtractValue(
-                es.head, Literal("v_" + name))
-          }
-        case other => graft.functions.RaiseRuntime(
-          "union_extract second argument must be a non-null string " +
-            s"literal, got ${arrowNm(other)} instead")
-      }
-    }, "built-in")
-    reg.createOrReplaceTempFunction("union_tag", es => {
-      if (es.size != 1) org.apache.spark.sql.GraftSqlBridge.analysisError(
-        s"The function 'union_tag' expected 1 arguments but received ${es.size}")
-      if (es.head.resolved && !isUnionCarrier(es.head))
-        graft.functions.RaiseRuntime(
-          s"union_tag only support unions, got ${arrowNm(es.head)}")
-      else org.apache.spark.sql.catalyst.analysis.UnresolvedExtractValue(
-        es.head, Literal("tag"))
-    }, "built-in")
     reg.createOrReplaceTempFunction(
       "iszero", es => EqualTo(es.head, Literal(0.0d)), "built-in")
     // reference chr() takes any unicode codepoint; Spark's stops at 255
