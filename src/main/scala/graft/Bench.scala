@@ -67,6 +67,41 @@ object Bench {
 
   private[graft] def r3(d: Double): Double = math.round(d * 1000) / 1000.0
 
+  /** What else the machine ran during one pass: the 1-minute load average
+    * at its start and end, and the CPU steal ticks (all CPUs, the 8th
+    * value of /proc/stat's `cpu` line) it spanned. A pass with high load or
+    * steal measured the neighbours as well as the engine. */
+  private[graft] final case class PassLoad(loadavgStart: Double, loadavgEnd: Double,
+      stealTicks: Long) {
+    def json: String =
+      s"""{"loadavg_start":$loadavgStart,"loadavg_end":$loadavgEnd,"steal_ticks":$stealTicks}"""
+  }
+
+  private[graft] object PassLoad {
+    def loadavg: Double = {
+      val la = java.lang.management.ManagementFactory
+        .getOperatingSystemMXBean.getSystemLoadAverage
+      math.round(la * 100) / 100.0
+    }
+
+    /** Cumulative steal ticks; 0 where /proc/stat is unreadable. */
+    def stealTicks(): Long = scala.util.Try {
+      val f = java.nio.file.Files.readAllLines(java.nio.file.Paths.get("/proc/stat"))
+        .get(0).trim.split("\\s+")
+      if (f.length > 8) f(8).toLong else 0L
+    }.getOrElse(0L)
+
+    /** Runs one pass and reads the machine around it (outside any query's
+      * timed region). */
+    def around(pass: => Unit): PassLoad = {
+      val (la0, st0) = (loadavg, stealTicks())
+      pass
+      PassLoad(la0, loadavg, stealTicks() - st0)
+    }
+
+    def json(passes: Seq[PassLoad]): String = passes.map(_.json).mkString("[", ",", "]")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // optional comma-separated subset (e.g. matched-scale TPC-H runs)
@@ -111,11 +146,7 @@ object Bench {
     // enough passes that an ambient load spike can't touch all of them —
     // the same argument that set tpch22's default (r8 VERDICT nit #3)
     val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES").map(_.toInt).getOrElse(8)
-    def loadavg: Double = {
-      val la = java.lang.management.ManagementFactory
-        .getOperatingSystemMXBean.getSystemLoadAverage
-      math.round(la * 100) / 100.0
-    }
+    def loadavg: Double = PassLoad.loadavg
     // bench hygiene (r10 verdict): numbers taken on a loaded box are
     // measurement noise. Warn always; wait for a quiet window (up to
     // SPARK_GRAFT_BENCH_WAIT_QUIET seconds, default 300) and then proceed
@@ -141,10 +172,12 @@ object Bench {
     // every pass is recorded (not just the minimum) so a loaded-machine
     // artifact — one pass 10× the others — is self-diagnosing in the JSON
     val all = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
-    for (_ <- 1 to passes; n <- selected) {
-      val t = runOnce(n)
-      all(n) = all.getOrElse(n, Vector.empty) :+ t
-    }
+    val suiteLoad = (1 to passes).map(_ => PassLoad.around {
+      for (n <- selected) {
+        val t = runOnce(n)
+        all(n) = all.getOrElse(n, Vector.empty) :+ t
+      }
+    })
     val loadAfter = loadavg
 
     val suite = PassSet(selected, all)
@@ -177,11 +210,12 @@ object Bench {
         (System.nanoTime() - t0) / 1e9
       }
       val t22All = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
-      for (_ <- 1 to t22Passes; nm <- tpch22)
-        t22All(nm) = t22All.getOrElse(nm, Vector.empty) :+ runT(nm)
+      val t22Load = (1 to t22Passes).map(_ => PassLoad.around {
+        for (nm <- tpch22) t22All(nm) = t22All.getOrElse(nm, Vector.empty) :+ runT(nm)
+      })
       val t22 = PassSet(tpch22, t22All)
       val t22Qs = t22.queries(r3)
-      (s""","tpch22_sf1":{"total":${r3(t22.total)},"queries":$t22Qs,"pass_times":${t22.passTimes},"failed":${t22.failed},"passes":$t22Passes,"dir":"$sf1Dir"}""",
+      (s""","tpch22_sf1":{"total":${r3(t22.total)},"queries":$t22Qs,"pass_times":${t22.passTimes},"pass_load":${PassLoad.json(t22Load)},"failed":${t22.failed},"passes":$t22Passes,"dir":"$sf1Dir"}""",
         s""","tpch22_sf1":{"total":${r3(t22.total)},"queries":$t22Qs,"failed":${t22.failed},"passes":$t22Passes,"dir":"$sf1Dir"}""")
     }
 
@@ -192,7 +226,7 @@ object Bench {
     val common = s""""unit":"sec","sf":"$sfDir","passes":$passes,""" +
       s""""loadavg_before":$loadBefore,"loadavg_after":$loadAfter"""
     val fullJson =
-      s"""{"metric":"total","value":$total,$common,"queries":$qs,"pass_times":${suite.passTimes},"failed":${suite.failed}${t22Json._1}}"""
+      s"""{"metric":"total","value":$total,$common,"queries":$qs,"pass_times":${suite.passTimes},"pass_load":${PassLoad.json(suiteLoad)},"failed":${suite.failed}${t22Json._1}}"""
     // r14: default OUT is a non-repo path — the committed BENCH_FULL.json
     // artifact used to be clobbered by every driver/builder run (r13
     // verdict hygiene item); point SPARK_GRAFT_BENCH_OUT at the repo

@@ -128,7 +128,9 @@ class DFContext(val spark: SparkSession) {
     * (post-AQE) with each operator's runtime SQL metrics — rows produced,
     * spill/shuffle bytes, timings — the reference's AnalyzeExec surface
     * (physical-plan/src/analyze.rs:46). Execution runs distributed
-    * (`toRdd.foreach`); only metric values come back to the driver. */
+    * (`toRdd.foreach`); only metric values come back to the driver. A
+    * query run under the small-input profile prints the profile's line,
+    * then its statically planned inner plan. */
   def explainAnalyze(query: String): String = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -140,6 +142,9 @@ class DFContext(val spark: SparkSession) {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan, depth)
       case q: QueryStageExec =>
         walk(q.plan, depth)
+      case s: graft.plans.SmallInputExec =>
+        sb.append("  " * depth).append(s.nodeName).append(" [").append(s.profile).append("]\n")
+        walk(s.executed, depth + 1)
       case _ =>
         val ms = p.metrics.toSeq.sortBy(_._1)
           .map { case (k, m) => s"$k=${m.value}" }.mkString(", ")

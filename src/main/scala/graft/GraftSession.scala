@@ -8,10 +8,14 @@ import org.apache.spark.sql.SparkSession
   * (reference: datafusion/core/src/execution/context/mod.rs:611) but delegates
   * everything to Spark: one `SparkSession` configured for deterministic,
   * oracle-comparable execution (UTC session time zone) and for local[N]
-  * throughput (shuffle partitions = cores, AQE on).
+  * throughput (shuffle partitions = cores, AQE above the small-input bound).
   *
-  * At cluster scale the same settings hold: AQE handles runtime coalescing /
-  * skew; shuffle partition count would be tuned to cluster cores instead.
+  * Below that bound — a query whose summed input bytes fit
+  * `spark.sql.autoBroadcastJoinThreshold` — the `GraftExtensions` planner
+  * runs the query statically with one shuffle partition instead
+  * (`graft.plans.SmallInput`). At cluster scale the same settings hold: AQE
+  * handles runtime coalescing / skew; shuffle partition count would be
+  * tuned to cluster cores instead.
   */
 object GraftSession {
 

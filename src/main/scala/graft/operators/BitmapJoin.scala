@@ -74,43 +74,46 @@ object BitmapJoin {
     checkBits(bits)
     val shift = Integer.numberOfTrailingZeros(64 / bits) // log2(slots per word)
     val maxV = (1L << bits) - 1
-    org.apache.spark.sql.GraftSqlBridge.internalRdd(
-      df.select(col(key).cast("long"), value.cast("long")))
-      .mapPartitions { it =>
-        var arr = new Array[Long](1 << 10)
-        var maxW = -1
-        it.foreach { r =>
-          if (!r.isNullAt(0) && !r.isNullAt(1)) {
-            val k = r.getLong(0)
-            val v = r.getLong(1)
-            require(k >= 0, s"dense key map: negative key $k")
-            require((k >>> shift) < Int.MaxValue - 8, s"dense key map: key $k out of dense range")
-            require(v >= 1 && v <= maxV, s"dense key map: value $v out of 1..$maxV")
-            val w = (k >>> shift).toInt
-            if (w >= arr.length) {
-              var n = arr.length
-              while (n <= w) n <<= 1
-              arr = java.util.Arrays.copyOf(arr, n)
+    JobDescription.describe(df.sparkSession, "BitmapJoin.build",
+        s"dense key map on $key, $bits-bit slots") {
+      org.apache.spark.sql.GraftSqlBridge.internalRdd(
+        df.select(col(key).cast("long"), value.cast("long")))
+        .mapPartitions { it =>
+          var arr = new Array[Long](1 << 10)
+          var maxW = -1
+          it.foreach { r =>
+            if (!r.isNullAt(0) && !r.isNullAt(1)) {
+              val k = r.getLong(0)
+              val v = r.getLong(1)
+              require(k >= 0, s"dense key map: negative key $k")
+              require((k >>> shift) < Int.MaxValue - 8, s"dense key map: key $k out of dense range")
+              require(v >= 1 && v <= maxV, s"dense key map: value $v out of 1..$maxV")
+              val w = (k >>> shift).toInt
+              if (w >= arr.length) {
+                var n = arr.length
+                while (n <= w) n <<= 1
+                arr = java.util.Arrays.copyOf(arr, n)
+              }
+              val off = (k & ((1L << shift) - 1)) * bits
+              val old = (arr(w) >>> off) & maxV
+              if (old == 0L) arr(w) |= v << off
+              else if (old != v) conflict(k, old, v)
+              if (w > maxW) maxW = w
             }
-            val off = (k & ((1L << shift) - 1)) * bits
-            val old = (arr(w) >>> off) & maxV
-            if (old == 0L) arr(w) |= v << off
-            else if (old != v) conflict(k, old, v)
-            if (w > maxW) maxW = w
           }
+          if (maxW < 0) Iterator.empty
+          else Iterator.single(java.util.Arrays.copyOf(arr, maxW + 1))
         }
-        if (maxW < 0) Iterator.empty
-        else Iterator.single(java.util.Arrays.copyOf(arr, maxW + 1))
-      }
-      .fold(Array.emptyLongArray) { (a, b) =>
-        val (big, small) = if (a.length >= b.length) (a, b) else (b, a)
-        var i = 0
-        while (i < small.length) {
-          big(i) = mergeWord(big(i), small(i), bits, i.toLong << shift)
-          i += 1
+        .fold(Array.emptyLongArray) { (a, b) =>
+          val (big, small) = if (a.length >= b.length) (a, b) else (b, a)
+          var i = 0
+          while (i < small.length) {
+            big(i) = mergeWord(big(i), small(i), bits, i.toLong << shift)
+            i += 1
+          }
+          big
         }
-        big
-      }
+    }
   }
 
   /** Codegen lookup probe over a [[build]] result: NULL when the key is

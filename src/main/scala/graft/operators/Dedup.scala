@@ -245,9 +245,12 @@ object Dedup {
       col(textCol).as("text"))
     val spread = if (d0.rdd.getNumPartitions < par)
       d0.repartition(par, col("doc_id")) else d0
-    val prepped = spread.select(col("doc_id"), col("bucket"),
-      array_distinct(transform(TextFunctions.shingles3(col("text")), xxhash64(_))).as("sh"))
-      .localCheckpoint(true)
+    val prepped = JobDescription.describe(spark, "Dedup.ngramJaccardPairs",
+        "checkpoint of the hashed shingles") {
+      spread.select(col("doc_id"), col("bucket"),
+        array_distinct(transform(TextFunctions.shingles3(col("text")), xxhash64(_))).as("sh"))
+        .localCheckpoint(true)
+    }
     // r14 hot-bucket triangle split (guide §2.5): a bucket with B docs is
     // ONE join key, so its whole B² set-probe pass lands on a single task —
     // at corpus scale one hot (source, lang, band) bucket is a job-killing
@@ -270,7 +273,8 @@ object Dedup {
     // is one job over the checkpointed rows (map size ≤ |buckets|, bounded
     // by |sources × langs × bands| at any scale). A NULL bucket never
     // equi-joins, so its rows are skipped (as BitmapJoin skips NULL keys).
-    val maxBn = {
+    val maxBn = JobDescription.describe(spark, "Dedup.ngramJaccardPairs",
+        s"bucket-cap gate: largest bucket vs cap $cap") {
       import scala.jdk.CollectionConverters._
       org.apache.spark.sql.GraftSqlBridge.internalRdd(
         prepped.select(col("bucket"))).mapPartitions { it =>
@@ -337,8 +341,11 @@ object Dedup {
                           maxRounds: Int = 50): DataFrame = {
     val fwd = edges.select(col(srcCol).cast("long").as("src"),
                            col(dstCol).cast("long").as("dst"))
-    val sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
+    val spark = edges.sparkSession
+    val sym = JobDescription.describe(spark, "Dedup.connectedComponents",
+        "checkpoint of the symmetric edges") {
+      fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst"))).localCheckpoint(true)
+    }
     // r13: no separate identity-label init. Round 0's propagation over
     // identity labels is just the edge list itself — (dst ← src) messages
     // unioned with (src ← src) self-labels, grouped by min — so the
@@ -372,15 +379,18 @@ object Dedup {
       // (QueriesSpec stream_tws_profile failed with Task not serializable
       // once dedup_cluster had run first in the shared test session). One
       // small job per round is not worth a session-wide landmine.
-      val next = (if (round == 0) prop
-        else {
-          val lk = prop.select(col("node").as("l_node"), col("component").as("l_comp"))
-          prop.join(lk, prop("component") === lk("l_node"), "left")
-            .select(prop("node"),
-              coalesce(col("l_comp"), prop("component")).as("component"))
-        }).localCheckpoint(true)
-      val s = Option(next.agg(sum(col("component").cast("decimal(30,0)")))
-        .first().getDecimal(0)).map(BigDecimal(_)).getOrElse(BigDecimal(-2))
+      val (next, s) = JobDescription.describe(spark, "Dedup.connectedComponents",
+          s"fixpoint round $round: label checkpoint and convergence sum") {
+        val next = (if (round == 0) prop
+          else {
+            val lk = prop.select(col("node").as("l_node"), col("component").as("l_comp"))
+            prop.join(lk, prop("component") === lk("l_node"), "left")
+              .select(prop("node"),
+                coalesce(col("l_comp"), prop("component")).as("component"))
+          }).localCheckpoint(true)
+        (next, Option(next.agg(sum(col("component").cast("decimal(30,0)")))
+          .first().getDecimal(0)).map(BigDecimal(_)).getOrElse(BigDecimal(-2)))
+      }
       done = s == prevSum
       prevSum = s
       labels = next
@@ -464,7 +474,10 @@ object Dedup {
     // 0.9 s of duplicate shingling removed. Eager, so lifecycle ends with
     // the session; never cached across invocations (a persist() would be
     // dedup-cached by canonical plan and make re-runs measure cache hits).
-    val w = ngramWindows(docs, idCol, textCol, n).localCheckpoint()
+    val w = JobDescription.describe(docs.sparkSession, "Dedup.cutRepeatedSpans",
+        "checkpoint of the n-gram windows") {
+      ngramWindows(docs, idCol, textCol, n).localCheckpoint()
+    }
     val stats = w.groupBy("win").agg(
       countDistinct(col("doc_id")).as("nd"),
       min(struct(col("doc_id"), col("pos"))).as("keep"))

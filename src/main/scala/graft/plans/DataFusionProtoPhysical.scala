@@ -135,6 +135,8 @@ object DataFusionProtoPhysical {
   }
 
   private def emitPlan(plan: SparkPlan, w: W): Unit = plan match {
+    // the small-input profile's subtree, as planned (before its exchanges)
+    case s: SmallInputExec => emitPlan(s.planned, w)
     case scan: FileSourceScanExec =>
       def conf(c: W): Unit = { // FileScanExecConf (:1235)
         scan.relation.location.inputFiles.foreach { f =>

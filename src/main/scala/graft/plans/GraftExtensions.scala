@@ -83,6 +83,8 @@ object UnionsToFilter extends Rule[LogicalPlan] {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => UnionsToFilter)
+    e.injectPlannerStrategy(s =>
+      SmallInputStrategy(s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))
     GenerateSeriesTVF.register(e)
     GraftExtensions.functions.foreach { case (n, b) =>
       e.injectFunction((FunctionIdentifier(n), new ExpressionInfo("graft.functions", n), b))

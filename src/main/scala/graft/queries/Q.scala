@@ -35,17 +35,31 @@ object Q {
 
   /** One cached child session per (parent, profile): weak on the parent,
     * so it is collected with it; it shares the SparkContext, so executors
-    * and caches are common and only the session conf differs. */
-  private val childSessions =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, SparkSession]]()
+    * and caches are common and only the session conf differs.
+    *
+    * The child starts from the parent's CURRENT SQL conf (ANSI mode, time
+    * zone, `spark.graft.*` gates set with `spark.conf.set`), then the
+    * profile's settings go on top. A parent whose settings changed since
+    * the child was built gets a new child; a child is never changed in
+    * place, since a query running on it concurrently may be planning. */
+  private val childSessions = new java.util.WeakHashMap[SparkSession,
+    scala.collection.mutable.Map[String, (Map[String, String], SparkSession)]]()
   private def childSession(s: SparkSession, profile: String)(
-      confs: (String, String)*): SparkSession = childSessions.synchronized {
-    childSessions.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
-      .getOrElseUpdate(profile, {
-        val ss = s.newSession()
-        confs.foreach { case (k, v) => ss.conf.set(k, v) }
-        ss
-      })
+      confs: (String, String)*): SparkSession = {
+    val parentConf = s.sessionState.conf.getAllConfs
+    childSessions.synchronized {
+      val byProfile =
+        childSessions.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
+      byProfile.get(profile) match {
+        case Some((built, child)) if built == parentConf => child
+        case _ =>
+          val ss = s.newSession()
+          val c = ss.sessionState.conf
+          (parentConf ++ confs).foreach { case (k, v) => c.setConfString(k, v) }
+          byProfile(profile) = (parentConf, ss)
+          ss
+      }
+    }
   }
 
   /** Fast-path session for short static-plan queries: AQE disabled.

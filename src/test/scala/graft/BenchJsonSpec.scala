@@ -31,4 +31,23 @@ class BenchJsonSpec extends AnyFunSuite {
     assert(passes.queries(Bench.r3) == """{"q1_agg":1.0}""")
     assert(passes.passTimes == """{"q1_agg":[1.235,1.0]}""")
   }
+
+  test("per-pass load: loadavg at start and end plus steal ticks, one object a pass") {
+    val load = Bench.PassLoad.json(Seq(Bench.PassLoad(0.5, 1.25, 3L), Bench.PassLoad(2.0, 0.0, 0L)))
+    val arr = mapper.readTree(load)
+    assert(arr.isArray && arr.size == 2)
+    for (i <- 0 until arr.size) {
+      val p = arr.get(i)
+      assert(p.size == 3, p)
+      assert(p.get("loadavg_start").isNumber && p.get("loadavg_end").isNumber, p)
+      assert(p.get("steal_ticks").isIntegralNumber, p)
+    }
+    assert(arr.get(0).get("loadavg_end").asDouble == 1.25)
+    assert(arr.get(0).get("steal_ticks").asLong == 3L)
+    // a measured pass reads the machine around its body
+    var ran = false
+    val measured = Bench.PassLoad.around { ran = true }
+    assert(ran && measured.stealTicks >= 0 && measured.loadavgStart >= 0, measured)
+    assert(mapper.readTree(measured.json).size == 3)
+  }
 }

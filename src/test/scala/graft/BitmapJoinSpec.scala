@@ -127,4 +127,24 @@ class BitmapJoinSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     assert(viaBitmap == viaJoin)
   }
+
+  test("q9's dense key map build job carries its description") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(seen.add)
+    }
+    val want = "BitmapJoin.build: dense key map on o_orderkey, 8-bit slots"
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // building q9 runs the build eagerly; the description is restored after
+      SparkEntry.queries("q9_profit")(spark, sfDir)
+      assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
+      val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
+      while (!seen.contains(want) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains(want), seen)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

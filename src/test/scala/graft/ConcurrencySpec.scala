@@ -46,4 +46,24 @@ class ConcurrencySpec extends AnyFunSuite {
       }
     } finally pool.shutdown()
   }
+
+  test("Q child sessions start from the caller's runtime SQL conf") {
+    import graft.queries.Q
+    val s = spark.newSession()
+    s.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    s.conf.set("spark.graft.ngramPairs.bucketCap", "17")
+    val child = Q.staticPlanSession(s)
+    assert(child ne s)
+    assert(child.conf.get("spark.sql.session.timeZone") == "America/Los_Angeles")
+    assert(child.conf.get("spark.graft.ngramPairs.bucketCap") == "17")
+    // the profile still goes on top of the caller's conf
+    assert(child.conf.get("spark.sql.adaptive.enabled") == "false")
+    assert(Q.staticPlanSession(s) eq child, "unchanged settings reuse the child")
+    // a changed setting builds a new child; the old one is left as it was
+    s.conf.set("spark.graft.ngramPairs.bucketCap", "18")
+    val rebuilt = Q.staticPlanSession(s)
+    assert(rebuilt ne child)
+    assert(rebuilt.conf.get("spark.graft.ngramPairs.bucketCap") == "18")
+    assert(child.conf.get("spark.graft.ngramPairs.bucketCap") == "17")
+  }
 }

@@ -163,6 +163,21 @@ class DFContextSpec extends AnyFunSuite {
     assert(rowCounts.exists(_ > 0), s"all-zero metrics:\n$out")
   }
 
+  test("explainAnalyze names the small-input profile and walks its inner plan") {
+    val q = "SELECT n_regionkey, count(*) AS n FROM nation GROUP BY 1"
+    val out = ctx.explainAnalyze(q)
+    val lines = out.linesIterator.toSeq
+    assert(lines.head.startsWith("SmallInput [small-input profile: input "), out)
+    assert(lines.head.contains("adaptive off, 1 shuffle partition"), out)
+    // inner operators, indented under the profile line, with live metrics
+    assert(lines.tail.nonEmpty && lines.tail.forall(_.startsWith("  ")), out)
+    assert(out.contains("HashAggregate") && out.contains("Exchange"), out)
+    assert("numOutputRows=(\\d+)".r.findAllMatchIn(out).exists(_.group(1).toLong > 0), out)
+    // the plan string lists the inner operators too
+    val plan = ctx.sql(q).queryExecution.executedPlan.toString
+    assert(plan.contains("small-input profile") && plan.contains("HashAggregate"), plan)
+  }
+
   test("pipe operator: WHERE / ORDER BY / LIMIT / SELECT") {
     // mirrors sqllogictest/test_files/pipe_operator.slt shapes
     val rows = ctx.sql(

@@ -57,6 +57,7 @@ class DataLayoutSpec extends AnyFunSuite {
           case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
             Seq(a.executedPlan)
           case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
+          case s: graft.plans.SmallInputExec => Seq(s.executed)
           case _ => p.children
         }
         self ++ kids.flatMap(scans)

@@ -137,6 +137,7 @@ class RuntimeFilterSpec extends AnyFunSuite {
         case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
           Seq(a.executedPlan)
+        case s: graft.plans.SmallInputExec => Seq(s.executed)
         case _ => p.children
       }
       self ++ kids.flatMap(scans)
