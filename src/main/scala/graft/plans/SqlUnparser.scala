@@ -197,7 +197,8 @@ object SqlUnparser {
         // non-global (partition-local) sorts render as ORDER BY too: SQL
         // has no partition-local sort, and a total order is a sound
         // refinement (the library emits local sorts only over
-        // single-partition children — q12/q22's tiny-result forms —
+        // single-partition children — the coalesce(1) forms of q4, q12,
+        // q13 and q22 —
         // where local IS total)
         order = s.order; cur = s.child
       case _ => done = true

@@ -38,13 +38,12 @@ object Round3Queries extends QuerySet {
     // share the identical aggregate subtree, so the shuffle materializes
     // once (ReusedExchange — plan-asserted in TpchReshapePlanSpec). The
     // supplier-complex broadcast is footer-gated; past threshold the
-    // reference-shaped text runs on the AQE session. 0.0001 parses as
+    // reference-shaped text runs instead. 0.0001 parses as
     // DECIMAL(4,4) in both engines, so the HAVING comparison stays exact.
-    "q11_partsupp" -> { (s0, dir) =>
+    "q11_partsupp" -> { (s, dir) =>
       import graft.plans.BroadcastAdvisor._
-      val supOk = shouldBroadcast(s0,
-        supplierComplexBytes(s0, dir, "nation", Seq("s_suppkey")))
-      val s = if (supOk) staticPlanSession(s0) else s0
+      val supOk = shouldBroadcast(s,
+        supplierComplexBytes(s, dir, "nation", Seq("s_suppkey")))
       graft.Tables.registerAll(s, dir)
       if (!supOk) s.sql(TpchPartsuppSql.q11)
       else s.sql(

@@ -20,20 +20,11 @@ object Round5Queries extends QuerySet {
     * size-independent). At 100 TB the DEFAULT thresholds make this same
     * plan transformation kick in without any tuning — this pins the
     * behavior so an engine upgrade can't silently lose it. */
-  private val rfSessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
-  def runtimeFilterSession(s: SparkSession): SparkSession = rfSessions.synchronized {
-    val existing = rfSessions.get(s)
-    if (existing != null) existing
-    else {
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      ss.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      ss.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      ss.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      rfSessions.put(s, ss)
-      ss
-    }
-  }
+  def runtimeFilterSession(s: SparkSession): SparkSession = childSession(s, "runtimeFilter")(
+    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
 
   /** The unparser surface (reference: datafusion/sql/src/unparser/ —
     * plan_to_sql) proven end-to-end under the DuckDB differential: build

@@ -205,20 +205,10 @@ object Round5bQueries extends QuerySet {
 
   /** Child session with the DSv2 parquet path + aggregate pushdown on
     * (v1 FileFormat has no aggregate-pushdown hook). */
-  private val apSessions = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession, org.apache.spark.sql.SparkSession]()
   def aggPushdownSession(s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
-    apSessions.synchronized {
-      val existing = apSessions.get(s)
-      if (existing != null) existing
-      else {
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-        ss.conf.set("spark.sql.sources.useV1SourceList", "")
-        apSessions.put(s, ss)
-        ss
-      }
-    }
+    childSession(s, "aggPushdown")(
+      "spark.sql.parquet.aggregatePushdown" -> "true",
+      "spark.sql.sources.useV1SourceList" -> "")
 
   val oracleSql: Map[String, String] = Map(
     "text_sql_surface" ->

@@ -54,14 +54,13 @@ object TpchQueries extends QuerySet {
     // DataFrame DSL costs ~2× the single parse+analyze of the equivalent
     // text (measured 96 vs 50 ms/plan on this shape — NOTES_r4.md),
     // which is a real fraction of a 1 s query. Same plan either way.
-    "q3_join_topk" -> { (s0, dir) =>
+    "q3_join_topk" -> { (s, dir) =>
       // Stats-gated reshape (BroadcastAdvisor): the broadcast form is only
       // emitted when the footer-estimated complex fits the threshold; past
-      // it, the hint-free text runs on the AQE session and join selection
+      // it, the hint-free text runs and join selection
       // happens at runtime from actual sizes.
       import graft.plans.BroadcastAdvisor
-      val bc = BroadcastAdvisor.shouldBroadcast(s0, BroadcastAdvisor.q3CmplxBytes(s0, dir))
-      val s = if (bc) staticPlanSession(s0) else s0
+      val bc = BroadcastAdvisor.shouldBroadcast(s, BroadcastAdvisor.q3CmplxBytes(s, dir))
       graft.Tables.registerAll(s, dir)
       val hint = if (bc) "/*+ BROADCAST(cmplx) */ " else ""
       s.sql(
@@ -89,21 +88,20 @@ object TpchQueries extends QuerySet {
     // side scales with the filtered order window, not |orders|; the same
     // reduction is what a stats-aware CBO picks here (the reference's
     // planner does the equivalent CollectLeft chain from its estimates).
-    "q5_multijoin" -> { (s0, dir) =>
+    "q5_multijoin" -> { (s, dir) =>
       // Stats-gated (BroadcastAdvisor): ao (the filtered order complex) and
       // the slim customer projection both scale with SF — each hint is
       // gated on its own footer estimate; nr (nation⋈region) is constant-
-      // size and sup tracks the supplier table. Any gate off → AQE session.
+      // size and sup tracks the supplier table.
       import graft.plans.BroadcastAdvisor._
-      val aoOk = shouldBroadcast(s0, q5AoBytes(s0, dir))
-      val custStats = tableStats(s0, s"$dir/customer.parquet")
-      val custOk = shouldBroadcast(s0,
+      val aoOk = shouldBroadcast(s, q5AoBytes(s, dir))
+      val custStats = tableStats(s, s"$dir/customer.parquet")
+      val custOk = shouldBroadcast(s,
         estimateBytes(custStats, custStats.rows.toDouble, Seq("c_custkey", "c_nationkey")))
-      val supStats = tableStats(s0, s"$dir/supplier.parquet")
-      val supOk = shouldBroadcast(s0,
+      val supStats = tableStats(s, s"$dir/supplier.parquet")
+      val supOk = shouldBroadcast(s,
         estimateBytes(supStats, supStats.rows.toDouble, Seq("s_suppkey", "s_nationkey")))
       val all = aoOk && custOk && supOk
-      val s = if (all) staticPlanSession(s0) else s0
       graft.Tables.registerAll(s, dir)
       val outerHints = Seq(if (aoOk) Some("BROADCAST(ao)") else None,
         if (supOk) Some("BROADCAST(sup)") else None).flatten
@@ -153,13 +151,12 @@ object TpchQueries extends QuerySet {
     // in one streamed pass (no fact shuffle), then broadcast the small
     // per-customer totals back over the customer/nation dims — the wide
     // c_name/c_acctbal rows never shuffle either.
-    "q10_returns" -> { (s0, dir) =>
+    "q10_returns" -> { (s, dir) =>
       // Stats-gated (BroadcastAdvisor): pc (per-customer totals) and o2
       // (the 3-month order window) are both bounded by the window's order
       // count — one footer estimate gates both hints.
       import graft.plans.BroadcastAdvisor
-      val bc = BroadcastAdvisor.shouldBroadcast(s0, BroadcastAdvisor.q10PcBytes(s0, dir))
-      val s = if (bc) staticPlanSession(s0) else s0
+      val bc = BroadcastAdvisor.shouldBroadcast(s, BroadcastAdvisor.q10PcBytes(s, dir))
       graft.Tables.registerAll(s, dir)
       val pcHint = if (bc) "/*+ BROADCAST(pc) */ " else ""
       val o2Hint = if (bc) "/*+ BROADCAST(o2) */ " else ""
@@ -190,9 +187,9 @@ object TpchQueries extends QuerySet {
     // LOSING 1.5M-row broadcast — driver-side build hides ~0.7 s). The
     // residual vs the reference is exchange materialization itself — the
     // component-floor study in BENCH_NOTES pins it.
-    "q12_shipmode" -> { (s0, dir) =>
+    "q12_shipmode" -> { (s, dir) =>
       import graft.plans.BroadcastAdvisor._
-      val o = tableStats(s0, s"$dir/orders.parquet")
+      val o = tableStats(s, s"$dir/orders.parquet")
       // r11: the orders side carries exactly ONE boolean per key, so the
       // whole build collapses to a dense 2-bit key map over o_orderkey
       // (BitmapJoin; slot 1 = low, 2 = high, 0 = absent) — 375 KB at SF1
@@ -202,9 +199,8 @@ object TpchQueries extends QuerySet {
       // AQE 0.857 vs broadcast 0.814, identical results. Gated on footer
       // maxKey (2×maxKey/8 ≤ broadcast threshold, minKey ≥ 0); past it, the
       // r5-measured SHUFFLE_HASH/AQE chain is unchanged.
-      if (graft.operators.BitmapJoin.gate(s0, o.cols.get("o_orderkey"), 2)) {
-        val s = staticWideSession(s0)
-        graft.Tables.registerAll(s, dir)
+      graft.Tables.registerAll(s, dir)
+      if (graft.operators.BitmapJoin.gate(s, o.cols.get("o_orderkey"), 2)) {
         val orders = s.table("orders").select(col("o_orderkey"),
           col("o_orderpriority").isin("1-URGENT", "2-HIGH").as("hi"))
         val probe = graft.operators.BitmapJoin.probe(graft.operators.BitmapJoin
@@ -220,16 +216,12 @@ object TpchQueries extends QuerySet {
             sum(when(col("hi"), 0).otherwise(1)).as("low_line_count"))
           .coalesce(1).sortWithinPartitions("l_linestatus")
       } else {
-      val sh = shouldShuffleHash(s0,
+      val sh = shouldShuffleHash(s,
         estimateBytes(o, o.rows.toDouble, Seq("o_orderkey")))
-      // static-plan session when the SHUFFLE_HASH gate decides the join at
-      // planning time: the 3-stage shape is fully known, so AQE's per-stage
-      // materialize→replan handoffs (~70-80 ms on this shape) are pure tax;
-      // the ≤2-group final aggregate rides coalesce(1) + local sort, so the
+      // when the SHUFFLE_HASH gate decides the join at planning time, the
+      // ≤2-group final aggregate rides coalesce(1) + local sort, so the
       // ORDER BY's range exchange and sampling job vanish (same argument as
-      // q22's tiny-result form)
-      val s = if (sh) staticWideSession(s0) else s0
-      graft.Tables.registerAll(s, dir)
+      // q22's broadcast form)
       val hint = if (sh) "/*+ SHUFFLE_HASH(os) */ " else ""
       val body =
         s"""SELECT ${hint}l_linestatus,

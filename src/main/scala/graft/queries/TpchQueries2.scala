@@ -28,8 +28,8 @@ object TpchQueries2 extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
     // Q4: EXISTS-decorrelated semi join + group on priority.
-    "q4_priority" -> { (s0, dir) =>
-      val l = graft.plans.BroadcastAdvisor.tableStats(s0, s"$dir/lineitem.parquet")
+    "q4_priority" -> { (s, dir) =>
+      val l = graft.plans.BroadcastAdvisor.tableStats(s, s"$dir/lineitem.parquet")
       // r12: EXISTS(σ lineitem) carries NO payload — it is a pure SET of
       // orderkeys, so the whole subquery collapses to ONE dense bitset
       // over l_orderkey (a 1-bit BitmapJoin key map; duplicates are
@@ -40,11 +40,10 @@ object TpchQueries2 extends QuerySet {
       // 0.323 vs broadcast-semi 0.417 vs plain AQE EXISTS 0.826,
       // identical results. Gated on footer maxKey (maxKey/8 ≤ broadcast
       // threshold, minKey ≥ 0); past the gate the original EXISTS text
-      // runs on the AQE session (Spark decorrelates it to the shuffled
+      // runs on the caller's session (Spark decorrelates it to the shuffled
       // semi join).
-      if (graft.operators.BitmapJoin.gate(s0, l.cols.get("l_orderkey"), 1)) {
-        val s = staticWideSession(s0)
-        Tables.registerAll(s, dir)
+      Tables.registerAll(s, dir)
+      if (graft.operators.BitmapJoin.gate(s, l.cols.get("l_orderkey"), 1)) {
         val keys = s.table("lineitem")
           .filter(col("l_quantity") > 45)
           .select(col("l_orderkey"))
@@ -58,8 +57,7 @@ object TpchQueries2 extends QuerySet {
           .agg(count(lit(1)).as("order_count"))
           .coalesce(1).sortWithinPartitions("o_orderpriority")
       } else {
-        Tables.registerAll(s0, dir)
-        s0.sql("""
+        s.sql("""
           SELECT o_orderpriority, count(*) AS order_count
           FROM orders
           WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
@@ -79,14 +77,13 @@ object TpchQueries2 extends QuerySet {
     // suppliers) straight into partial aggregation — the fact table and
     // orders are never exchanged. The nation-PAIR predicate applies after
     // both joins, on the already-reduced rows.
-    "q7_volume" -> { (s0, dir) =>
+    "q7_volume" -> { (s, dir) =>
       import graft.plans.BroadcastAdvisor._
-      val o = tableStats(s0, s"$dir/orders.parquet")
-      val n = tableStats(s0, s"$dir/nation.parquet")
+      val o = tableStats(s, s"$dir/orders.parquet")
+      val n = tableStats(s, s"$dir/nation.parquet")
       val twoNationSel = if (n.rows > 0) 2.0 / n.rows else 1.0
-      val bc = shouldBroadcast(s0,
+      val bc = shouldBroadcast(s,
         estimateBytes(o, o.rows * twoNationSel, Seq("o_orderkey", "o_custkey")))
-      val s = if (bc) staticPlanSession(s0) else s0
       Tables.registerAll(s, dir)
       val hint = if (bc) "/*+ BROADCAST(ocx), BROADCAST(sn) */ " else ""
       val innerHint = if (bc) "/*+ BROADCAST(cn) */ " else ""
@@ -116,14 +113,13 @@ object TpchQueries2 extends QuerySet {
     // ECONOMY parts are a 1/|p_type| key set; the supplier→nation lookup
     // is dimension-sized. All three broadcast, lineitem streams through
     // them into a 2-group partial aggregation — zero fact/orders exchange.
-    "q8_share" -> { (s0, dir) =>
+    "q8_share" -> { (s, dir) =>
       import graft.plans.BroadcastAdvisor._
-      val o = tableStats(s0, s"$dir/orders.parquet")
-      val r = tableStats(s0, s"$dir/region.parquet")
+      val o = tableStats(s, s"$dir/orders.parquet")
+      val r = tableStats(s, s"$dir/region.parquet")
       val regionSel = if (r.rows > 0) 1.0 / r.rows else 1.0
-      val bc = shouldBroadcast(s0,
+      val bc = shouldBroadcast(s,
         estimateBytes(o, o.rows * regionSel, Seq("o_orderkey", "o_orderdate")))
-      val s = if (bc) staticPlanSession(s0) else s0
       Tables.registerAll(s, dir)
       val hint = if (bc) "/*+ BROADCAST(ocx), BROADCAST(px), BROADCAST(sn) */ " else ""
       val innerHint = if (bc) "/*+ BROADCAST(cn) */ " else ""
@@ -160,19 +156,19 @@ object TpchQueries2 extends QuerySet {
     // that join is a SHUFFLE_HASH of two slim projections — scale-safe
     // (no build-size ceiling, no sort of either side). Past the psx
     // threshold the plain reference text runs under AQE (spillable SMJ).
-    "q9_profit" -> { (s0, dir) =>
+    "q9_profit" -> { (s, dir) =>
       import graft.plans.BroadcastAdvisor._
-      val p = tableStats(s0, s"$dir/part.parquet")
-      val sup = tableStats(s0, s"$dir/supplier.parquet")
+      val p = tableStats(s, s"$dir/part.parquet")
+      val sup = tableStats(s, s"$dir/supplier.parquet")
       // psx rows = |part| × name-word selectivity × 4 suppliers/part;
       // EqSelectivity (0.2) over-estimates the measured 1/8, so the gate
       // errs toward the shuffle plan. Widths: two int64 keys + decimal cost
       // ≈ the part key width ×3.
       val psxRows = p.rows * EqSelectivity * 4.0
-      val bc = shouldBroadcast(s0,
+      val bc = shouldBroadcast(s,
         estimateBytes(p, psxRows,
           Seq("p_partkey", "p_partkey", "p_retailprice"))) &&
-        shouldBroadcast(s0,
+        shouldBroadcast(s,
           estimateBytes(sup, sup.rows.toDouble, Seq("s_suppkey")))
       // r14: orders' ONLY contribution to q9 is o_year = year(o_orderdate)
       // looked up by the PK o_orderkey — a 1-byte payload per key. Past the
@@ -188,16 +184,15 @@ object TpchQueries2 extends QuerySet {
       // fits 1..255 (at 100 TB maxKey trips the gate and the exchange
       // plan below is unchanged). o_orderkey unique + o_orderdate non-null
       // are schema knowledge (TPC-H PK/NOT NULL), same as q12/q21.
-      val o = tableStats(s0, s"$dir/orders.parquet")
+      val o = tableStats(s, s"$dir/orders.parquet")
       def yearOf(v: Long, unit: Double): Int = java.time.LocalDate
         .ofEpochDay(math.floor(v * unit / 86.4e9).toLong).getYear
       val yearsOk = o.cols.get("o_orderdate").exists(c => (for {
         mn <- c.minLong; mx <- c.maxLong; u <- c.microsPerUnit
       } yield yearOf(mn, u) >= 1901 && yearOf(mx, u) <= 2155).getOrElse(false))
+      Tables.registerAll(s, dir)
       if (bc && yearsOk &&
-          graft.operators.BitmapJoin.gate(s0, o.cols.get("o_orderkey"), 8)) {
-        val s = staticPlanSession(s0)
-        Tables.registerAll(s, dir)
+          graft.operators.BitmapJoin.gate(s, o.cols.get("o_orderkey"), 8)) {
         val oyear = graft.operators.BitmapJoin.probe(graft.operators.BitmapJoin.build(
           s.table("orders").select(col("o_orderkey"), col("o_orderdate")),
           "o_orderkey", year(col("o_orderdate")) - 1900, 8), 8)
@@ -222,7 +217,6 @@ object TpchQueries2 extends QuerySet {
           .agg((floor((sum(col("amount")) + lit(1.37e-4)) * 100 + 0.5)
             .cast("double") / 100).as("profit"))
       } else {
-      Tables.registerAll(s0, dir)
       // r13: fold the amount expression BELOW the fact-side exchange
       // (guide: project before the exchange). The SHUFFLE_HASH fact side
       // used to carry (l_quantity, l_extendedprice, l_discount,
@@ -234,7 +228,7 @@ object TpchQueries2 extends QuerySet {
       val hint = if (bc) "/*+ SHUFFLE_HASH(ox) */ " else ""
       val factHint = if (bc) "/*+ BROADCAST(psx), BROADCAST(sn) */ " else ""
       val innerHint = if (bc) "/*+ BROADCAST(pn) */ " else ""
-      s0.sql(
+      s.sql(
         s"""SELECT ${hint}n_name, CAST(year(o_orderdate) AS BIGINT) AS o_year,
           |  CAST(FLOOR((sum(amount) + 1.37e-4) * 100 + 0.5) AS DOUBLE) / 100 AS profit
           |FROM
@@ -265,12 +259,11 @@ object TpchQueries2 extends QuerySet {
     // customers with no matching orders), and the histogram re-aggregates.
     // Neither base table is exchanged; the old shape shuffled the full
     // customer AND orders tables into a join keyed on c_custkey.
-    "q13_custdist" -> { (s0, dir) =>
+    "q13_custdist" -> { (s, dir) =>
       import graft.plans.BroadcastAdvisor._
-      val c = tableStats(s0, s"$dir/customer.parquet")
-      val bc = shouldBroadcast(s0,
+      val c = tableStats(s, s"$dir/customer.parquet")
+      val bc = shouldBroadcast(s,
         estimateBytes(c, c.rows.toDouble, Seq("c_custkey")))
-      val s = if (bc) staticPlanSession(s0) else s0
       Tables.registerAll(s, dir)
       val hint = if (bc) "/*+ BROADCAST(oc) */ " else ""
       val grouped = s.sql(
@@ -298,12 +291,11 @@ object TpchQueries2 extends QuerySet {
     // (bounded by |supplier| rows) computes the same maximum-with-ties in
     // the same pass, and the tiny result broadcasts over supplier. One
     // fact scan, no fact exchange, identical semantics (ties kept).
-    "q15_topsupplier" -> { (s0, dir) =>
+    "q15_topsupplier" -> { (s, dir) =>
       import graft.plans.BroadcastAdvisor._
-      val sup = tableStats(s0, s"$dir/supplier.parquet")
-      val bc = shouldBroadcast(s0,
+      val sup = tableStats(s, s"$dir/supplier.parquet")
+      val bc = shouldBroadcast(s,
         estimateBytes(sup, sup.rows.toDouble, Seq("s_suppkey")))
-      val s = if (bc) staticPlanSession(s0) else s0
       Tables.registerAll(s, dir)
       val hint = if (bc) "/*+ BROADCAST(r) */ " else ""
       s.sql(
@@ -335,12 +327,11 @@ object TpchQueries2 extends QuerySet {
     // one window: no second scan, no fact sort-merge. The DuckDB oracle
     // keeps the correlated text, so the selfcheck proves the equivalence.
     // Past the broadcast gate the original text runs under AQE unchanged.
-    "q17_smallqty" -> { (s0, dir) =>
+    "q17_smallqty" -> { (s, dir) =>
       import graft.plans.BroadcastAdvisor._
-      val p = tableStats(s0, s"$dir/part.parquet")
-      val bc = shouldBroadcast(s0,
+      val p = tableStats(s, s"$dir/part.parquet")
+      val bc = shouldBroadcast(s,
         estimateBytes(p, p.rows * EqSelectivity, Seq("p_partkey")))
-      val s = if (bc) staticWideSession(s0) else s0
       Tables.registerAll(s, dir)
       if (bc) s.sql("""
         SELECT floor((sum(l_extendedprice) / 7.0 + 1.37e-4) * 100 + 0.5) / 100 AS avg_yearly
@@ -403,8 +394,8 @@ object TpchQueries2 extends QuerySet {
     // the fact at all. The F-order keys broadcast-semi-filter the scan
     // BEFORE the only shuffle (halves it); supplier resolves names via
     // broadcast at the very end. One fact scan, one narrow shuffle.
-    "q21_waiting" -> { (s0, dir) =>
-      val o = graft.plans.BroadcastAdvisor.tableStats(s0, s"$dir/orders.parquet")
+    "q21_waiting" -> { (s, dir) =>
+      val o = graft.plans.BroadcastAdvisor.tableStats(s, s"$dir/orders.parquet")
       // r13: the F-order filter carries NO payload — it is a pure SET of
       // orderkeys (the q4/q12 diagnosis transfers), so the broadcast-semi
       // hash relation collapses to ONE dense bitset over o_orderkey
@@ -420,9 +411,8 @@ object TpchQueries2 extends QuerySet {
       // maxKey (maxKey/8 ≤ broadcast threshold, minKey ≥ 0); past the
       // gate the hint-free per-order statistics text runs on the AQE
       // session.
-      if (graft.operators.BitmapJoin.gate(s0, o.cols.get("o_orderkey"), 1)) {
-        val s = staticPlanSession(s0)
-        Tables.registerAll(s, dir)
+      Tables.registerAll(s, dir)
+      if (graft.operators.BitmapJoin.gate(s, o.cols.get("o_orderkey"), 1)) {
         val keys = s.table("orders")
           .filter(col("o_orderstatus") === "F").select(col("o_orderkey"))
         val isF = graft.operators.BitmapJoin.probe(
@@ -439,8 +429,7 @@ object TpchQueries2 extends QuerySet {
           .filter(col("n_supp") >= 2 && col("n_high") === 1)
         return21(l2, s)
       } else {
-        Tables.registerAll(s0, dir)
-        s0.sql(
+        s.sql(
           """SELECT s_name, CAST(sum(nlines) AS BIGINT) AS numwait
             |FROM (
             |  SELECT max(CASE WHEN high_lines > 0 THEN l_suppkey END) AS high_supp,
@@ -468,18 +457,13 @@ object TpchQueries2 extends QuerySet {
     // both sides). The scalar average stays a scalar subquery — one tiny
     // driver-shared job, exactly like the reference's
     // ScalarSubqueryExec sharing.
-    "q22_global" -> { (s0, dir) =>
+    "q22_global" -> { (s, dir) =>
       import graft.plans.BroadcastAdvisor._
-      val o = tableStats(s0, s"$dir/orders.parquet")
+      val o = tableStats(s, s"$dir/orders.parquet")
       // o_totalprice is a double column (no INT64 footer stats) — gate on
       // the conservative full key set
-      val bc = shouldBroadcast(s0,
+      val bc = shouldBroadcast(s,
         estimateBytes(o, o.rows.toDouble, Seq("o_custkey")))
-      // tiny-result session: the only exchanges left in the broadcast form
-      // feed a ≤|segments|-group aggregate (partial agg caps every map
-      // task's output at the group count), so one reducer is exact at any
-      // scale and the ORDER BY's range exchange disappears entirely
-      val s = if (bc) tinyResultSession(s0) else s0
       Tables.registerAll(s, dir)
       if (bc)
         // Broadcast form, latency-shaped (r9): the scalar average becomes a
@@ -487,9 +471,11 @@ object TpchQueries2 extends QuerySet {
         // an empty positive-balance set filters everything either way) but
         // it skips Catalyst's scalar-subquery planning machinery (84 → 39
         // ms/plan measured, BENCH_NOTES.md r9) and its build runs CONCURRENTLY
-        // with the oh broadcast. Single reducer (tinyResultSession) →
-        // sortWithinPartitions IS the total order: no range exchange, no
-        // sampling job. customer is still never exchanged.
+        // with the oh broadcast. The only exchanges left feed a
+        // ≤|segments|-group aggregate (partial agg caps every map task's
+        // output at the group count), so coalesce(1) is exact at any scale
+        // and sortWithinPartitions IS the total order: no range exchange,
+        // no sampling job. customer is still never exchanged.
         s.sql(
           """SELECT /*+ BROADCAST(oh), BROADCAST(av) */ c_mktsegment AS cntrycode,
             |       count(*) AS numcust,
@@ -501,7 +487,7 @@ object TpchQueries2 extends QuerySet {
             |  ON o_custkey = c_custkey
             |WHERE c_acctbal > gavg
             |GROUP BY c_mktsegment""".stripMargin)
-          .sortWithinPartitions("cntrycode")
+          .coalesce(1).sortWithinPartitions("cntrycode")
       else s.sql(
         """SELECT c_mktsegment AS cntrycode, count(*) AS numcust,
           |       floor((sum(c_acctbal) + 1.37e-4) * 100 + 0.5) / 100 AS totacctbal

@@ -57,13 +57,12 @@ object WindowQueries2 extends QuerySet {
     // (the oracle runs the un-reshaped reference text). This is the
     // filter-pushdown-through-correlation a CBO derives from the equi-join;
     // both broadcasts are footer-gated (BroadcastAdvisor) — past threshold
-    // the reference-shaped text runs on the AQE session instead.
-    "q2_mincost" -> { (s0, dir) =>
+    // the reference-shaped text runs instead.
+    "q2_mincost" -> { (s, dir) =>
       import graft.plans.BroadcastAdvisor._
-      val pOk = shouldBroadcast(s0, q2PartBytes(s0, dir))
-      val euOk = shouldBroadcast(s0, supplierComplexBytes(s0, dir, "region",
+      val pOk = shouldBroadcast(s, q2PartBytes(s, dir))
+      val euOk = shouldBroadcast(s, supplierComplexBytes(s, dir, "region",
         Seq("s_suppkey", "s_name", "s_acctbal")))
-      val s = if (pOk && euOk) staticPlanSession(s0) else s0
       Tables.registerAll(s, dir)
       if (!(pOk && euOk)) s.sql(TpchPartsuppSql.q2)
       else s.sql(

@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Concurrent query execution on one SparkContext: a real deployment runs
   * many sessions in parallel, and the library keeps per-session caches
-  * (Tables.registerAll, staticPlanSession, runtimeFilterSession —
-  * all WeakHashMap-backed). Eight threads running a mixed slice of the
+  * (Tables.registerAll and Q.childSession, behind runtimeFilterSession
+  * and aggPushdownSession — all WeakHashMap-backed). Eight threads running a mixed slice of the
   * inventory simultaneously must each get the exact rows a serial run
   * gets: a race in view registration or session reuse shows up as a
   * missing-table error or cross-talk rows.
@@ -48,20 +48,21 @@ class ConcurrencySpec extends AnyFunSuite {
   }
 
   test("Q child sessions start from the caller's runtime SQL conf") {
-    import graft.queries.Q
+    import graft.queries.Round5Queries.runtimeFilterSession
     val s = spark.newSession()
     s.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
     s.conf.set("spark.graft.ngramPairs.bucketCap", "17")
-    val child = Q.staticPlanSession(s)
+    val child = runtimeFilterSession(s)
     assert(child ne s)
     assert(child.conf.get("spark.sql.session.timeZone") == "America/Los_Angeles")
     assert(child.conf.get("spark.graft.ngramPairs.bucketCap") == "17")
     // the profile still goes on top of the caller's conf
-    assert(child.conf.get("spark.sql.adaptive.enabled") == "false")
-    assert(Q.staticPlanSession(s) eq child, "unchanged settings reuse the child")
+    assert(child.conf.get("spark.sql.optimizer.runtime.bloomFilter.enabled") == "true")
+    assert(child.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1")
+    assert(runtimeFilterSession(s) eq child, "unchanged settings reuse the child")
     // a changed setting builds a new child; the old one is left as it was
     s.conf.set("spark.graft.ngramPairs.bucketCap", "18")
-    val rebuilt = Q.staticPlanSession(s)
+    val rebuilt = runtimeFilterSession(s)
     assert(rebuilt ne child)
     assert(rebuilt.conf.get("spark.graft.ngramPairs.bucketCap") == "18")
     assert(child.conf.get("spark.graft.ngramPairs.bucketCap") == "17")

@@ -122,4 +122,38 @@ class SmallInputSpec extends AnyFunSuite {
       assert(rows(s.read.parquet(s"$out/q3")) == rows(df))
     } finally s.listenerManager.unregister(listener)
   }
+
+  test("(h) the queries once routed to per-query profiles run on the caller's session, wrapped") {
+    // the bodies with a static (broadcast or dense-key) form: at this
+    // scale the profile node gives each its static plan
+    val s = TestSpark.spark.newSession()
+    for (q <- Seq("q2_mincost", "q3_join_topk", "q4_priority", "q5_multijoin",
+        "q7_volume", "q8_share", "q9_profit", "q10_returns", "q11_partsupp",
+        "q12_shipmode", "q13_custdist", "q15_topsupplier", "q17_smallqty",
+        "q21_waiting", "q22_global")) {
+      val df = SparkEntry.queries(q)(s, dir)
+      assert(df.sparkSession eq s, s"$q left the caller's session")
+      val plan = df.queryExecution.executedPlan
+      assert(plan.isInstanceOf[SmallInputExec], s"$q is not wrapped at the root:\n$plan")
+    }
+  }
+
+  test("(i) q22's broadcast form is in cntrycode order without the profile") {
+    // adaptive, 4 shuffle partitions, no coalescing: the order comes from
+    // the query itself, not from a single-partition plan. sf0.1 is the
+    // smallest fixture where q22 returns more than one segment.
+    val larger = TestSpark.fixtureDir("sf0.1")
+    val s = TestSpark.spark.newSession()
+    Seq("spark.sql.adaptive.forceApply" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "4").foreach { case (k, v) => s.conf.set(k, v) }
+    val df = SparkEntry.queries("q22_global")(s, larger)
+    assert(df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec])
+    val got = df.collect().toSeq
+    val codes = got.map(_.getString(0))
+    assert(codes.size > 1, "too few rows to show an order")
+    assert(codes == codes.sorted, codes)
+    assert(got.map(_.toString) == SparkEntry.queries("q22_global")(
+      TestSpark.spark.newSession(), larger).collect().map(_.toString).toSeq)
+  }
 }
