@@ -154,7 +154,7 @@ object RegexpCompat {
     }
 
   /** The engine surface holds ONLY the operator-rewrite target, under a
-    * graft-prefixed name: DFContext's `~`/`~*` rewrite calls
+    * graft-prefixed name: DialectParser's `~`/`~*` splice calls
     * graft_regexp_like, leaving Spark's native regexp_* functions untouched
     * (the dialect overrides in [[register]] are opt-in per session). */
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(

@@ -982,8 +982,8 @@ object DataFusionProto {
         val selectExprs = subs(node, 2).map(e => consumeExpr(e, scope))
         val sortExprs = subs(node, 3).map(se => consumeSortExpr(se, scope))
         // first row per ON group in sort order — the reference's
-        // DISTINCT ON semantics (row_number window, like DFContext's
-        // textual rewrite of the SQL form)
+        // DISTINCT ON semantics (row_number window, like DialectParser's
+        // plan rewrite of the SQL form)
         val spec = org.apache.spark.sql.expressions.Window
           .partitionBy(onExprs: _*)
           .orderBy((if (sortExprs.nonEmpty) sortExprs else onExprs.map(_.asc)): _*)

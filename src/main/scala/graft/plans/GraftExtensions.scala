@@ -82,6 +82,7 @@ object UnionsToFilter extends Rule[LogicalPlan] {
 /** Entry point: SparkSession.builder().withExtensions(new GraftExtensions). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
+    e.injectParser((_, parser) => new DialectParser(parser))
     e.injectOptimizerRule(_ => UnionsToFilter)
     e.injectPlannerStrategy(s =>
       SmallInputStrategy(s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))

@@ -104,7 +104,7 @@ object SqlUnparser {
       }
     // transformDown so InSubquery/Exists are seen before their child plan
     // wrappers (ListQuery would otherwise hit the catch-all first).
-    def rewrite(e0: Expression): Expression = e0.transformDown {
+    def withRawLeaves(e0: Expression): Expression = e0.transformDown {
       case OuterReference(a) => RawSql(resolve(a), a.dataType)
       case a: AttributeReference => RawSql(resolve(a), a.dataType)
       // higher-order function bodies: `.sql` prints the unparseable
@@ -115,7 +115,7 @@ object SqlUnparser {
         val args = lf.arguments.map(a => quoteIfNeeded(a.name))
         val argTxt = if (args.size == 1) args.head
                      else args.mkString("(", ", ", ")")
-        val body = rewrite(lf.function).transformDown {
+        val body = withRawLeaves(lf.function).transformDown {
           case v: NamedLambdaVariable => RawSql(quoteIfNeeded(v.name), v.dataType)
         }
         RawSql(s"$argTxt -> ${body.sql}", lf.dataType)
@@ -139,7 +139,7 @@ object SqlUnparser {
       // expression on re-parse (payload size is bounded by the same
       // broadcast-threshold gate that admits the probe)
       case p: graft.functions.DenseKeyProbe =>
-        RawSql(graft.functions.DenseKeyProbe.wireArgs(p).map(rewrite(_).sql)
+        RawSql(graft.functions.DenseKeyProbe.wireArgs(p).map(withRawLeaves(_).sql)
           .mkString(s"${graft.functions.DenseKeyProbe.Name}(", ", ", ")"), p.dataType)
       // PIVOT analyzes into the internal PivotFirst aggregate, which has
       // no SQL spelling — fail loudly rather than emit "pivotfirst(...)"
@@ -150,11 +150,11 @@ object SqlUnparser {
       // on re-parse — always spell the named form
       case cns: CreateNamedStruct =>
         val parts = cns.children.grouped(2).map { case Seq(n, v) =>
-          s"${rewrite(n).sql}, ${rewrite(v).sql}"
+          s"${withRawLeaves(n).sql}, ${withRawLeaves(v).sql}"
         }.mkString(", ")
         RawSql(s"named_struct($parts)", cns.dataType)
     }
-    rewrite(norm).sql
+    withRawLeaves(norm).sql
   }
 
   /** Assign unique output names for a SELECT list. */

@@ -108,7 +108,7 @@ object Round4Queries extends QuerySet {
     },
 
     // Pipe-operator SQL (reference: sqllogictest/test_files/pipe_operator.slt)
-    // through DFContext's |> rewriter: WHERE, AGGREGATE..GROUP BY, EXTEND,
+    // through Spark 4.1's native |> parser: WHERE, AGGREGATE..GROUP BY, EXTEND,
     // post-aggregation WHERE, ORDER BY + LIMIT in one pipeline.
     "pipe_sql" -> { (s, dir) =>
       val ctx = DFContext(s)

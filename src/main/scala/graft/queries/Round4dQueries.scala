@@ -67,7 +67,7 @@ object Round4dQueries extends QuerySet {
     },
 
     // Wildcard EXCLUDE (reference: wildcard.slt `SELECT * EXCLUDE(col)`):
-    // rewritten by DFContext onto Spark's regex-quoted-column expansion.
+    // the session's DialectParser reads it as Spark's native `* EXCEPT`.
     "select_exclude" -> { (s, dir) =>
       Tables.registerAll(s, dir)
       DFContext(s).sql(

@@ -7,9 +7,10 @@ import graft.{DFContext, GraftSession}
 /** Minimal SQL REPL/CLI front-end — the Spark-side counterpart of
   * `datafusion-cli` (reference: datafusion-cli/src/main.rs:181 →
   * exec::exec_from_repl, exec.rs:129). Reads `;`-terminated statements from
-  * stdin (interactive or piped), runs them through [[DFContext]] — so the
-  * QUALIFY / DISTINCT ON / pipe-operator rewrites and the engine's SQL
-  * functions all work — and prints result tables.
+  * stdin (interactive or piped), runs them through [[DFContext]] on a graft
+  * session — so the dialect the session's parser reads (QUALIFY, DISTINCT
+  * ON, `~`, `* EXCLUDE`), Spark's pipe operators, prepared statements and
+  * the engine's SQL functions all work — and prints result tables.
   *
   * Usage:
   *   sbt "runMain graft.tools.Repl [sfDir]"        # fixture tables pre-registered

@@ -13,7 +13,7 @@ class DFContextSpec extends AnyFunSuite {
   }
 
   test("postgres regex operators: textual rewrite shapes") {
-    import DFContext.{rewriteRegexOps => rw}
+    import graft.plans.DialectParser.{rewriteRegexOps => rw}
     assert(rw("select 'abc' ~ 'a.c'") == "select graft_regexp_like('abc', 'a.c', '')")
     assert(rw("select 'abc' ~* 'A.C'") == "select graft_regexp_like('abc', 'A.C', 'i')")
     assert(rw("select col !~ '.*' AS c FROM t") ==
@@ -88,14 +88,58 @@ class DFContextSpec extends AnyFunSuite {
   }
 
   test("QUALIFY predicate containing an inline window spec is not split") {
-    // the predicate's window sees the select-list columns (documented
-    // limitation of the textual rewrite: reference QUALIFY may also see
-    // non-selected base columns)
+    // the predicate is a hidden item of the query's own select list, so its
+    // window sees every FROM-scope column, selected or not (next cases)
     val rows = ctx.sql("""
       SELECT s_nationkey, s_suppkey, s_acctbal FROM supplier
       QUALIFY row_number() OVER (PARTITION BY s_nationkey ORDER BY s_acctbal DESC) = 1
       LIMIT 3""").collect()
     assert(rows.length == 3)
+  }
+
+  test("QUALIFY inside a string literal is text, not a clause") {
+    val r = ctx.sql("SELECT 'x QUALIFY y' AS s").collect().map(_.getString(0))
+    assert(r.toSeq == Seq("x QUALIFY y"))
+  }
+
+  test("QUALIFY predicate over a backticked identifier containing limit") {
+    val rows = ctx.sql("""
+      SELECT c_nationkey,
+             row_number() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC) AS `my limit`
+      FROM customer
+      QUALIFY `my limit` = 1""").collect()
+    val nations = ctx.sql("SELECT count(DISTINCT c_nationkey) FROM customer").collect().head.getLong(0)
+    assert(rows.length == nations && rows.forall(_.getInt(1) == 1))
+  }
+
+  test("QUALIFY window ordered by a column that is not selected") {
+    val got = ctx.sql("""
+      SELECT c_custkey FROM customer
+      QUALIFY row_number() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey) = 1
+      ORDER BY c_acctbal""").collect().map(_.getLong(0)).toSeq
+    val want = ctx.sql("""
+      SELECT c_custkey FROM (
+        SELECT c_custkey, c_acctbal, row_number() OVER (
+          PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey) AS rn
+        FROM customer) WHERE rn = 1
+      ORDER BY c_acctbal""").collect().map(_.getLong(0)).toSeq
+    assert(got.length > 1 && got == want)
+  }
+
+  test("PREPARE / EXECUTE / DEALLOCATE bind $n outside literals and quoted identifiers") {
+    ctx.sql("""PREPARE cost_of(STRING, INT) AS
+      SELECT $1 AS a, $2 * 10 AS b, "cost $1" AS s, 'cost $2' AS t, $2 AS `$1`""")
+    val df = ctx.sql("EXECUTE cost_of(concat('x,', 'y'), 4)")
+    val r = df.collect().head
+    assert((r.getString(0), r.getInt(1), r.getString(2), r.getString(3), r.getInt(4)) ==
+      (("x,y", 40, "cost $1", "cost $2", 4)))
+    assert(df.columns.toSeq == Seq("a", "b", "s", "t", "$1"))
+    ctx.sql("DEALLOCATE cost_of")
+    intercept[IllegalArgumentException](ctx.sql("EXECUTE cost_of('z', 1)"))
+    // a declared type with its own parens and comma
+    ctx.sql("PREPARE dec_of(DECIMAL(4, 1)) AS SELECT $1 AS d")
+    assert(ctx.sql("EXECUTE dec_of(2.25)").collect().head.getDecimal(0) ==
+      new java.math.BigDecimal("2.3"))
   }
 
   test("DISTINCT ON with parenthesized key expressions") {
@@ -143,6 +187,17 @@ class DFContextSpec extends AnyFunSuite {
       "SELECT count(*) AS n FROM customer WHERE c_acctbal > 5000.0 AND c_mktsegment = 'BUILDING'")
       .collect().head.getLong(0)
     assert(n == direct && n > 0)
+  }
+
+  test("sqlWithParams binds a named parameter inside the QUALIFY predicate") {
+    val n = ctx.sqlWithParams("""
+      SELECT c_nationkey, c_custkey FROM customer
+      QUALIFY row_number() OVER (PARTITION BY c_nationkey ORDER BY c_custkey) <= :k""",
+      Map("k" -> 2)).count()
+    val want = ctx.sql("""SELECT count(*) FROM (SELECT row_number() OVER (
+      PARTITION BY c_nationkey ORDER BY c_custkey) AS rn FROM customer) WHERE rn <= 2""")
+      .collect().head.getLong(0)
+    assert(n == want && want > 0)
   }
 
   test("information_schema surfaces") {

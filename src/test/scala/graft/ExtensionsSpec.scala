@@ -93,4 +93,19 @@ class ExtensionsSpec extends AnyFunSuite {
     val builtin = FunctionRegistry.builtin.listFunction().map(_.funcName).toSet
     assert(injected.toSet.intersect(builtin) == Set("make_time", "to_time"))
   }
+
+  test("plain spark.sql reads the dialect through the injected parser (no DFContext)") {
+    val s = TestSpark.spark
+    Tables.registerAll(s, TestSpark.sfDir)
+    val firstPerRegion = s.sql("""SELECT n_regionkey, n_name FROM nation
+      QUALIFY row_number() OVER (PARTITION BY n_regionkey ORDER BY n_name DESC) = 1""")
+      .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+    val distinctOn = s.sql("""SELECT DISTINCT ON (n_regionkey) n_regionkey, n_name FROM nation
+      ORDER BY n_regionkey, n_name DESC""").collect().map(r => r.getInt(0) -> r.getString(1))
+    assert(firstPerRegion.size == 5 && distinctOn.toMap == firstPerRegion)
+    assert(distinctOn.map(_._1).toSeq == (0 until 5))
+    assert(s.sql("SELECT n_name FROM nation WHERE n_name ~ '^NATION_2[0-2]$'").count() == 3)
+    assert(s.sql("SELECT * EXCLUDE (n_name) FROM nation").columns.toSeq ==
+      Seq("n_nationkey", "n_regionkey"))
+  }
 }

@@ -5189,9 +5189,9 @@ object SltRunner {
         case None => skipped += ((rec.line, "EXPLAIN over untranslatable surface"))
         case Some(sql) =>
           try {
-            // same front-door rewrites the executed directives get
-            // (QUALIFY/DISTINCT ON/regex operators) before planning
-            val qe = spark.sql(DFContext.rewrite(sql)).queryExecution
+            // the session's parser reads the same dialect (QUALIFY/DISTINCT
+            // ON/regex operators) the executed directives get
+            val qe = spark.sql(sql).queryExecution
             val sparkPlan = qe.optimizedPlan.toString + "\n" + qe.executedPlan.toString
             val want = rec.expected.mkString("\n")
             val missing = planFamilies.collect {
