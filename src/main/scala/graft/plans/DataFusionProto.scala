@@ -1,22 +1,26 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And => CAnd, Attribute, AttributeReference, BinaryOperator, Cast => CCast, CurrentRow, DenseRank, EqualNullSafe, EqualTo, Expression => CExpr, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal => CLiteral, Not, PercentRank, Rank, RangeFrame, RowFrame, RowNumber, SortOrder, SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding, UnspecifiedFrame, WindowExpression, WindowSpecDefinition}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And => CAnd, Ascending, Attribute, AttributeReference, BinaryOperator, Cast => CCast, CurrentRow, EqualNullSafe, EqualTo, Expression => CExpr, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal => CLiteral, Not, NullsFirst, RangeFrame, RowFrame, SortOrder, SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding, UnspecifiedFrame, WindowExpression, WindowFrame, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.{Cross, FullOuter, Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.expressions.WindowSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import PlanVocabulary.stripAlias
 
 /** datafusion-proto BINARY plan exchange: the reference's own protobuf
   * wire format for logical plans (`datafusion-proto` crate), emitted and
   * consumed directly as length-delimited protobuf bytes — no generated
   * stubs, just the wire encoding (varint tags, length-delimited nested
   * messages) against the field numbers of the reference's checked-in
-  * schema. This closes the plan-exchange triple: Substrait protobuf-JSON
-  * (SubstraitSerde), the engine-native JSON IR (PlanSerde), and now the
-  * reference's binary wire.
+  * schema. Beside Substrait protobuf-JSON ([[SubstraitSerde]]) it is the
+  * engine's second plan wire; [[DataFusionProtoPhysical]] carries physical
+  * plans over the same encoding and imports this object's wire helpers, and
+  * the Catalyst names all three codecs share live in [[PlanVocabulary]].
   *
   * Schema ground truth (field numbers cited per message below):
   *  - datafusion/proto-models/proto/datafusion.proto:31-67 LogicalPlanNode
@@ -120,13 +124,13 @@ object DataFusionProto {
     out.toSeq
   }
 
-  private def sub(b: Array[Byte], field: Int): Option[Array[Byte]] =
+  private[plans] def sub(b: Array[Byte], field: Int): Option[Array[Byte]] =
     fields(b).collectFirst { case (`field`, PBytes(v)) => v }
-  private def subs(b: Array[Byte], field: Int): Seq[Array[Byte]] =
+  private[plans] def subs(b: Array[Byte], field: Int): Seq[Array[Byte]] =
     fields(b).collect { case (`field`, PBytes(v)) => v }
-  private def vint(b: Array[Byte], field: Int): Option[Long] =
+  private[plans] def vint(b: Array[Byte], field: Int): Option[Long] =
     fields(b).collectFirst { case (`field`, PVarint(v)) => v }
-  private def strOf(b: Array[Byte]): String = new String(b, "UTF-8")
+  private[plans] def strOf(b: Array[Byte]): String = new String(b, "UTF-8")
 
   // ------------------------------------------------------------------ emit
 
@@ -236,10 +240,7 @@ object DataFusionProto {
       n.str(3, fileType.toUpperCase)
       n.msg(4) { ds => // DfSchema{columns=1(DfField{field=1})}
         schema.fields.foreach { f =>
-          ds.msg(1)(_.msg(1) { fld =>
-            fld.str(1, f.name); fld.msg(2)(arrowType(f.dataType, _))
-            fld.bool(3, f.nullable)
-          })
+          ds.msg(1)(_.msg(1)(arrowField(f.name, f.dataType, f.nullable, _)))
         }
       }
       partitionCols.foreach(n.str(5, _))
@@ -333,14 +334,7 @@ object DataFusionProto {
       // reference's CteWorkTableScanNode (datafusion.proto:1600)
       w.msg(32) { c =>
         c.str(1, id.name)
-        c.msg(2) { schema =>
-          plan.output.foreach { a =>
-            schema.msg(1) { f =>
-              f.str(1, a.name); f.msg(2)(arrowType(a.dataType, _))
-              f.bool(3, a.nullable)
-            }
-          }
-        }
+        c.msg(2)(arrowSchema(plan.output, _))
       }
     case SubqueryAlias(id, child: LogicalRelation)
         if id.name.equalsIgnoreCase(tableNameOf(child)) =>
@@ -379,15 +373,7 @@ object DataFusionProto {
         scan.msg(14)(tr => tr.msg(1)(_.str(1, name)))
         scan.str(2, path)
         scan.str(3, ".parquet")
-        scan.msg(5) { schema => // Schema (datafusion_common.proto:106)
-          lr.output.foreach { a =>
-            schema.msg(1) { f => // Field (:111)
-              f.str(1, a.name)
-              f.msg(2)(arrowType(a.dataType, _))
-              f.bool(3, a.nullable)
-            }
-          }
-        }
+        scan.msg(5)(arrowSchema(lr.output, _))
         scan.msg(11)(_ => ()) // ParquetFormat{} — options omitted
       }
     // explode over a list column: the reference's UnnestNode (:382) unnests
@@ -571,7 +557,7 @@ object DataFusionProto {
     case Sort(order, true, child, _) =>
       w.msg(8) { s => // SortNode (:139)
         s.msg(1)(emitPlan(child, _))
-        order.foreach(so => s.msg(2)(emitSortExpr(so, _)))
+        order.foreach(so => s.msg(2)(emitSort(so, _)(emitExpr)))
         s.int64(3, -1L)
       }
     case GlobalLimit(CLiteral(n: Int, IntegerType), LocalLimit(_, child)) =>
@@ -583,19 +569,8 @@ object DataFusionProto {
       s"dfproto emit: unsupported plan node ${other.nodeName}")
   }
 
-  private def stripAlias(e: CExpr): CExpr = e match {
-    case Alias(c, _) => c; case x => x
-  }
-
-  /** The logical table name a file relation scans (catalog name when
-    * registered, else the basename of the root path sans extension). */
-  private def tableNameOf(lr: LogicalRelation): String = lr.relation match {
-    case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-      val base = fs.location.rootPaths.headOption.map(_.getName).getOrElse("t")
-      lr.catalogTable.map(_.identifier.table).getOrElse(
-        if (base.contains('.')) base.substring(0, base.lastIndexOf('.')) else base)
-    case _ => "t"
-  }
+  private def tableNameOf(lr: LogicalRelation): String =
+    PlanVocabulary.relationName(lr).getOrElse("t")
 
   private def splitAnd(e: CExpr): Seq[CExpr] = e match {
     case CAnd(l, r) => splitAnd(l) ++ splitAnd(r)
@@ -620,9 +595,9 @@ object DataFusionProto {
     }
   }
 
-  private def joinTypeCode(jt: JoinType): Long = jt match {
+  private[plans] def joinTypeCode(jt: JoinType): Long = jt match {
     // datafusion_common.proto:80 JoinType
-    case Inner => 0L
+    case Inner | Cross => 0L
     case LeftOuter => 1L
     case RightOuter => 2L
     case FullOuter => 3L
@@ -690,66 +665,73 @@ object DataFusionProto {
     case ae: AggregateExpression =>
       // AggregateUDFExprNode (:648) — the reference models every agg
       // (sum/count/min/max/avg) as a UDAF on the wire
-      val (name, args) = aggNameArgs(ae.aggregateFunction)
+      val (name, args, distinct) = udaf(ae)
       w.msg(19) { an =>
         an.str(1, name)
         args.foreach(a => an.msg(2)(emitExpr(a, _)))
-        if (ae.isDistinct) an.bool(5, true)
+        if (distinct) an.bool(5, true)
       }
     case WindowExpression(fn, WindowSpecDefinition(parts, orders, frame)) =>
       w.msg(18) { wn => // WindowExprNode (datafusion.proto:680)
         fn match {
           case ae: AggregateExpression =>
-            val (name, args) = aggNameArgs(ae.aggregateFunction)
+            val (name, args, _) = udaf(ae)
             wn.str(3, name) // udaf
             args.foreach(a => wn.msg(4)(emitExpr(a, _)))
-          case _: RowNumber => wn.str(9, "row_number") // udwf
-          case _: Rank => wn.str(9, "rank")
-          case _: DenseRank => wn.str(9, "dense_rank")
-          case _: PercentRank => wn.str(9, "percent_rank")
-          case other => throw new IllegalArgumentException(
-            s"dfproto emit: unsupported window function ${other.nodeName}")
+          case other => wn.str(9, PlanVocabulary.rankingName(other).getOrElse( // udwf
+            throw new IllegalArgumentException(
+              s"dfproto emit: unsupported window function ${other.nodeName}")))
         }
         parts.foreach(p => wn.msg(5)(emitExpr(p, _)))
-        orders.foreach(so => wn.msg(6)(emitSortExpr(so, _)))
-        frame match {
-          case SpecifiedWindowFrame(ft, lower, upper) =>
-            wn.msg(8) { fr => // WindowFrame (:762)
-              fr.int64(1, ft match { case RowFrame => 0L; case RangeFrame => 1L })
-              fr.msg(2)(emitBound(lower, _))
-              fr.msg(3)(emitBound(upper, _))
-            }
-          case UnspecifiedFrame => ()
-        }
+        orders.foreach(so => wn.msg(6)(emitSort(so, _)(emitExpr)))
+        emitFrame(frame, 8, wn)
       }
     case other => throw new IllegalArgumentException(
       s"dfproto emit: unsupported expression ${other.nodeName}")
   }
 
-  private def aggNameArgs(af: org.apache.spark.sql.catalyst.expressions
-      .aggregate.AggregateFunction): (String, Seq[CExpr]) = af match {
-    case Sum(c, _) => ("sum", Seq(c))
-    case Count(cs) if cs.isEmpty ||
-      cs == Seq(CLiteral(1, IntegerType)) => ("count", Seq(CLiteral(1L, LongType)))
-    case Count(cs) => ("count", cs)
-    case Min(c) => ("min", Seq(c))
-    case Max(c) => ("max", Seq(c))
-    case Average(c, _) => ("avg", Seq(c))
-    case other => throw new IllegalArgumentException(
-      s"dfproto emit: unsupported aggregate ${other.nodeName}")
+  /** An aggregate call on both proto wires: the reference spells
+    * `count(*)` as `count(1)` (an Int64 literal). */
+  private[plans] def udaf(ae: AggregateExpression): (String, Seq[CExpr], Boolean) =
+    PlanVocabulary.aggregate(ae) match {
+      case ("count", cs, d) if cs.isEmpty || cs == Seq(CLiteral(1, IntegerType)) =>
+        ("count", Seq(CLiteral(1L, LongType)), d)
+      case a => a
+    }
+
+  /** SortExprNode (datafusion.proto:750) and PhysicalSortExprNode (:1156)
+    * alike: expr=1, asc=2, nulls_first=3. */
+  private[plans] def emitSort(so: SortOrder, w: W)(expr: (CExpr, W) => Unit): Unit = {
+    w.msg(1)(expr(so.child, _))
+    w.bool(2, so.direction == Ascending)
+    w.bool(3, so.nullOrdering == NullsFirst)
   }
 
-  /** SortExprNode (datafusion.proto:750). */
-  private def emitSortExpr(so: SortOrder, w: W): Unit = {
-    w.msg(1)(emitExpr(so.child, _))
-    w.bool(2, so.direction == org.apache.spark.sql.catalyst.expressions.Ascending)
-    w.bool(3, so.nullOrdering == org.apache.spark.sql.catalyst.expressions.NullsFirst)
+  /** The asc=2 / nulls_first=3 fields of a sort node, applied to `c`. */
+  private[plans] def sortOf(c: Column, node: Array[Byte]): Column =
+    (vint(node, 2).contains(1L), vint(node, 3).contains(1L)) match {
+      case (true, true) => c.asc_nulls_first
+      case (true, false) => c.asc_nulls_last
+      case (false, true) => c.desc_nulls_first
+      case (false, false) => c.desc_nulls_last
+    }
+
+  /** WindowFrame (datafusion.proto:762) at `field`: units=1 (ROWS=0,
+    * RANGE=1), start_bound=2, end_bound=3; an unspecified frame is absent. */
+  private[plans] def emitFrame(frame: WindowFrame, field: Int, w: W): Unit = frame match {
+    case SpecifiedWindowFrame(ft, lower, upper) =>
+      w.msg(field) { fr =>
+        fr.int64(1, ft match { case RowFrame => 0L; case RangeFrame => 1L })
+        fr.msg(2)(emitBound(lower, _))
+        fr.msg(3)(emitBound(upper, _))
+      }
+    case UnspecifiedFrame => ()
   }
 
   /** WindowFrameBound (datafusion.proto:778): type=1, bound_value=2.
     * Unbounded = PRECEDING/FOLLOWING with no bound_value, matching the
     * reference's ScalarValue-null convention for unbounded frames. */
-  private[plans] def emitBound(b: CExpr, w: W): Unit = b match {
+  private def emitBound(b: CExpr, w: W): Unit = b match {
     case CurrentRow => w.int64(1, 0L)
     case UnboundedPreceding => w.int64(1, 1L)
     case UnboundedFollowing => w.int64(1, 2L)
@@ -816,31 +798,16 @@ object DataFusionProto {
     case dt: DecimalType =>
       w.msg(24)(d => { d.int64(3, dt.precision.toLong); d.int64(4, dt.scale.toLong) })
     case ArrayType(elem, containsNull) =>
-      w.msg(25) { l => // List (common:163): field_type=1 (Field :111)
-        l.msg(1) { f =>
-          f.str(1, "item"); f.msg(2)(arrowType(elem, _))
-          f.bool(3, containsNull)
-        }
-      }
+      w.msg(25)(_.msg(1)(arrowField("item", elem, containsNull, _))) // List (common:163)
     case st: StructType =>
-      w.msg(28) { s => // Struct (common:177): repeated sub_field_types=1
-        st.fields.foreach { f =>
-          s.msg(1) { fd =>
-            fd.str(1, f.name); fd.msg(2)(arrowType(f.dataType, _))
-            fd.bool(3, f.nullable)
-          }
-        }
-      }
+      w.msg(28)(arrowSchema(DataTypeUtils.toAttributes(st), _)) // Struct (common:177)
     case MapType(kt, vt, valueNulls) =>
       w.msg(33) { m => // Map (common:181): field_type = entries struct
         m.msg(1) { fd =>
           fd.str(1, "entries")
           fd.msg(2)(_.msg(28) { s =>
-            s.msg(1) { k =>
-              k.str(1, "key"); k.msg(2)(arrowType(kt, _)); k.bool(3, false) }
-            s.msg(1) { v =>
-              v.str(1, "value"); v.msg(2)(arrowType(vt, _))
-              v.bool(3, valueNulls) }
+            s.msg(1)(arrowField("key", kt, nullable = false, _))
+            s.msg(1)(arrowField("value", vt, valueNulls, _))
           })
           fd.bool(3, false)
         }
@@ -848,6 +815,22 @@ object DataFusionProto {
     case other => throw new IllegalArgumentException(
       s"dfproto emit: unsupported type $other")
   }
+
+  /** Field (datafusion_common.proto:111): name=1, arrow_type=2, nullable=3. */
+  private[plans] def arrowField(name: String, t: DataType, nullable: Boolean, w: W): Unit = {
+    w.str(1, name); w.msg(2)(arrowType(t, _)); w.bool(3, nullable)
+  }
+
+  /** Schema (datafusion_common.proto:106) / Struct: one Field per column. */
+  private[plans] def arrowSchema(attrs: Seq[Attribute], w: W): Unit =
+    attrs.foreach(a => w.msg(1)(arrowField(a.name, a.dataType, a.nullable, _)))
+
+  private[plans] def fieldOf(f: Array[Byte]): StructField =
+    StructField(sub(f, 1).map(strOf).getOrElse("c"), consumeType(sub(f, 2).get),
+      vint(f, 3).contains(1L))
+
+  private[plans] def schemaOf(s: Option[Array[Byte]]): StructType =
+    StructType(s.toSeq.flatMap(subs(_, 1)).map(fieldOf))
 
   // --------------------------------------------------------------- consume
 
@@ -870,9 +853,8 @@ object DataFusionProto {
     val (field, PBytes(node)) = (fs.head._1, fs.head._2): @unchecked
     field match {
       case 1 => // ListingTableScanNode
-        val name = sub(node, 14).flatMap(tr => sub(tr, 1)).flatMap(b => sub(b, 1))
-          .map(strOf).getOrElse(
-            throw new IllegalArgumentException("dfproto: scan without table name"))
+        val name = tableRefName(sub(node, 14)).getOrElse(
+          throw new IllegalArgumentException("dfproto: scan without table name"))
         // resolve by name first (the re-plan contract); a reference-emitted
         // node also carries its own paths(2) + FileFormatType — readable
         // directly when the receiver has no binding for the name
@@ -916,13 +898,8 @@ object DataFusionProto {
         (input.filter(consumeExpr(sub(node, 2).get, scope)), scope)
       case 6 => // AggregateNode
         val (input, scope) = rec(sub(node, 1).get)
-        val keys = subs(node, 2).map(e => consumeExpr(e, scope))
-        val aggs = subs(node, 3).map(e => consumeExpr(e, scope))
-        val out =
-          if (keys.isEmpty) input.agg(aggs.head, aggs.tail: _*)
-          else if (aggs.isEmpty) input.select(keys: _*).distinct() // group-only
-          else input.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
-        (out, scope)
+        (aggregated(input, subs(node, 2).map(e => consumeExpr(e, scope)),
+          subs(node, 3).map(e => consumeExpr(e, scope))), scope)
       case 7 => // JoinNode
         val (left, lScope) = rec(sub(node, 1).get)
         val (right, rScope) = rec(sub(node, 2).get)
@@ -980,7 +957,7 @@ object DataFusionProto {
         val (input, scope) = rec(sub(node, 4).get)
         val onExprs = subs(node, 1).map(e => consumeExpr(e, scope))
         val selectExprs = subs(node, 2).map(e => consumeExpr(e, scope))
-        val sortExprs = subs(node, 3).map(se => consumeSortExpr(se, scope))
+        val sortExprs = subs(node, 3).map(se => sortOf(consumeExpr(sub(se, 1).get, scope), se))
         // first row per ON group in sort order — the reference's
         // DISTINCT ON semantics (row_number window, like DialectParser's
         // plan rewrite of the SQL form)
@@ -994,8 +971,7 @@ object DataFusionProto {
         (out, scope)
       case 21 => // SubqueryAliasNode: input=1, alias=3 (TableReference)
         val (input, scope) = rec(sub(node, 1).get)
-        sub(node, 3).flatMap(tr => sub(tr, 1)).flatMap(b => sub(b, 1))
-          .map(strOf) match {
+        tableRefName(sub(node, 3)) match {
           case Some(n) =>
             val aliased = input.alias(n)
             (aliased, scope + (n.toLowerCase -> aliased))
@@ -1007,8 +983,8 @@ object DataFusionProto {
         (input.select(col("*") +: winCols: _*), scope)
       case 8 => // SortNode
         val (input, scope) = rec(sub(node, 1).get)
-        (input.orderBy(subs(node, 2).map(se => consumeSortExpr(se, scope)): _*),
-          scope)
+        (input.orderBy(subs(node, 2).map(se =>
+          sortOf(consumeExpr(sub(se, 1).get, scope), se)): _*), scope)
       case 5 => // LimitNode
         val (input, scope) = rec(sub(node, 1).get)
         val skip = vint(node, 2).getOrElse(0L)
@@ -1019,8 +995,7 @@ object DataFusionProto {
         val (input, scope) = rec(sub(node, 2).getOrElse(
           throw new IllegalArgumentException(
             "dfproto consume: ViewTableScanNode without input")))
-        sub(node, 6).flatMap(tr => sub(tr, 1)).flatMap(b => sub(b, 1))
-          .map(strOf) match {
+        tableRefName(sub(node, 6)) match {
           case Some(n) =>
             val aliased = input.alias(n)
             (aliased, scope + (n.toLowerCase -> aliased))
@@ -1094,9 +1069,8 @@ object DataFusionProto {
             s"dfproto consume: work table $nm outside a recursive query"))
         (df, Map.empty[String, DataFrame])
       case 33 => // DmlNode over session temp tables (MemTable emulation)
-        val name = sub(node, 3).flatMap(tr => sub(tr, 1)).flatMap(b => sub(b, 1))
-          .map(strOf).getOrElse(throw new IllegalArgumentException(
-            "dfproto consume: DmlNode without table_name"))
+        val name = tableRefName(sub(node, 3)).getOrElse(throw new IllegalArgumentException(
+          "dfproto consume: DmlNode without table_name"))
         val input = sub(node, 2).map(b => rec(b)._1)
         def register(df: DataFrame): DataFrame = {
           // materialize before re-registering: the view must not lazily
@@ -1271,14 +1245,8 @@ object DataFusionProto {
         (projected, Map(name.toLowerCase -> aliased))
       case 34 => // EmptyTableScanNode: a scan proven empty at plan time —
         // zero rows of the declared schema
-        val fields0 = sub(node, 2).toSeq.flatMap(s => subs(s, 1)).map { f =>
-          org.apache.spark.sql.types.StructField(
-            sub(f, 1).map(strOf).getOrElse("c"),
-            consumeType(sub(f, 2).get), vint(f, 3).contains(1L))
-        }
         (spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(fields0)),
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf(sub(node, 2))),
           Map.empty[String, DataFrame])
       case other => throw new IllegalArgumentException(
         s"dfproto consume: unsupported plan variant $other")
@@ -1312,7 +1280,7 @@ object DataFusionProto {
   private val workTables: ThreadLocal[Map[String, DataFrame]] =
     ThreadLocal.withInitial(() => Map.empty[String, DataFrame])
 
-  private def joinTypeName(code: Long): String = code match {
+  private[plans] def joinTypeName(code: Long): String = code match {
     // datafusion_common.proto:80 JoinType
     case 0L => "inner"
     case 1L => "left"
@@ -1335,16 +1303,60 @@ object DataFusionProto {
     }
   }
 
-  private def consumeSortExpr(se: Array[Byte],
-      scope: Map[String, DataFrame] = Map.empty): Column = {
-    val c = consumeExpr(sub(se, 1).get, scope)
-    val asc = vint(se, 2).contains(1L)
-    val nullsFirst = vint(se, 3).contains(1L)
-    (asc, nullsFirst) match {
-      case (true, true) => c.asc_nulls_first
-      case (true, false) => c.asc_nulls_last
-      case (false, true) => c.desc_nulls_first
-      case (false, false) => c.desc_nulls_last
+  /** AggregateNode / AggregateExecNode re-planned: a node without
+    * aggregates (SELECT DISTINCT, GROUP BY alone) is DISTINCT over its keys. */
+  private[plans] def aggregated(input: DataFrame, keys: Seq[Column],
+      aggs: Seq[Column]): DataFrame =
+    if (aggs.isEmpty) input.select(keys: _*).distinct()
+    else if (keys.isEmpty) input.agg(aggs.head, aggs.tail: _*)
+    else input.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+
+  /** BinaryExprNode.op, the operator's Debug name, applied to its operands. */
+  private[plans] def binaryOp(op: String, l: Column, r: Column): Column = op match {
+    case "Eq" => l === r
+    case "NotEq" => l =!= r
+    case "Lt" => l < r
+    case "LtEq" => l <= r
+    case "Gt" => l > r
+    case "GtEq" => l >= r
+    case "And" => l && r
+    case "Or" => l || r
+    case "Plus" => l + r
+    case "Minus" => l - r
+    case "Multiply" => l * r
+    case "Divide" => l / r
+    case "Modulo" => l % r
+    case "BitwiseAnd" => l.bitwiseAND(r)
+    case "BitwiseOr" => l.bitwiseOR(r)
+    case "BitwiseXor" => l.bitwiseXOR(r)
+    case other => throw new IllegalArgumentException(s"dfproto consume: unsupported op $other")
+  }
+
+  /** A window function named as a udaf or a udwf (WindowExprNode and
+    * PhysicalWindowExprNode alike). */
+  private[plans] def windowFunction(udaf: Option[String], udwf: Option[String],
+      args: Seq[Column]): Column = (udaf, udwf) match {
+    case (Some(n), _) => PlanVocabulary.aggregate(n, distinct = false, args)
+    case (None, Some(n)) => PlanVocabulary.ranking(n).getOrElse(
+      throw new IllegalArgumentException(s"dfproto consume: unsupported window udwf $n"))
+    case _ => throw new IllegalArgumentException(
+      "dfproto consume: window expression without function")
+  }
+
+  /** PARTITION BY, ORDER BY and an optional WindowFrame (:762) as a spec. */
+  private[plans] def windowSpec(parts: Seq[Column], orders: Seq[Column],
+      frame: Option[Array[Byte]]): WindowSpec = {
+    val byParts = org.apache.spark.sql.expressions.Window.partitionBy(parts: _*)
+    val spec = if (orders.nonEmpty) byParts.orderBy(orders: _*) else byParts
+    frame.fold(spec) { fr =>
+      val lower = frameBound(sub(fr, 2), isLower = true)
+      val upper = frameBound(sub(fr, 3), isLower = false)
+      vint(fr, 1).getOrElse(0L) match {
+        case 0L => spec.rowsBetween(lower, upper)
+        case 1L => spec.rangeBetween(lower, upper)
+        case u => throw new IllegalArgumentException(
+          s"dfproto consume: unsupported frame units $u")
+      }
     }
   }
 
@@ -1370,29 +1382,8 @@ object DataFusionProto {
         .as(sub(node, 2).map(strOf).getOrElse("c"))
       case 3 => consumeLiteral(node)
       case 4 =>
-        val operands = subs(node, 1).map(ce)
-        val op = fields(node).collectFirst {
-          case (3, PBytes(v)) => strOf(v) }.getOrElse("")
-        operands.reduceLeft((l, r) => op match {
-          case "Eq" => l === r
-          case "NotEq" => l =!= r
-          case "Lt" => l < r
-          case "LtEq" => l <= r
-          case "Gt" => l > r
-          case "GtEq" => l >= r
-          case "And" => l && r
-          case "Or" => l || r
-          case "Plus" => l + r
-          case "Minus" => l - r
-          case "Multiply" => l * r
-          case "Divide" => l / r
-          case "Modulo" => l % r
-          case "BitwiseAnd" => l.bitwiseAND(r)
-          case "BitwiseOr" => l.bitwiseOR(r)
-          case "BitwiseXor" => l.bitwiseXOR(r)
-          case other => throw new IllegalArgumentException(
-            s"dfproto consume: unsupported op $other")
-        })
+        val op = sub(node, 3).map(strOf).getOrElse("")
+        subs(node, 1).map(ce).reduceLeft(binaryOp(op, _, _))
       case 6 => ce(sub(node, 1).get).isNull
       case 7 => ce(sub(node, 1).get).isNotNull
       case 8 => !ce(sub(node, 1).get)
@@ -1403,71 +1394,14 @@ object DataFusionProto {
         val list = subs(node, 2).map(ce)
         val in = v.isin(list: _*)
         if (vint(node, 3).contains(1L)) !in else in
-      case 19 =>
-        val name = sub(node, 1).map(strOf).getOrElse("")
-        val args = subs(node, 2).map(ce)
-        val distinct = vint(node, 5).contains(1L)
-        (name, distinct) match {
-          case ("sum", false) => sum(args.head)
-          case ("sum", true) => sum_distinct(args.head)
-          case ("count", true) => countDistinct(args.head, args.tail: _*)
-          case ("count", false) => count(args.head)
-          // min/max over distinct inputs are identical to plain min/max
-          case ("min", _) => min(args.head)
-          case ("max", _) => max(args.head)
-          case ("avg", false) => avg(args.head)
-          // avg(DISTINCT x): a native distinct Average, so the result type
-          // (decimal precision/scale, rounding) matches the reference's
-          // decimal avg instead of a sum/count decomposition's quotient type
-          case ("avg", true) =>
-            org.apache.spark.sql.GraftSqlBridge.column(
-              AggregateExpression(
-                Average(org.apache.spark.sql.GraftSqlBridge
-                  .expression(args.head)),
-                org.apache.spark.sql.catalyst.expressions.aggregate.Complete,
-                isDistinct = true))
-          case (other, d) => throw new IllegalArgumentException(
-            s"dfproto consume: unsupported aggregate $other (distinct=$d)")
-        }
-      case 18 => // WindowExprNode (datafusion.proto:680)
-        val args = subs(node, 4).map(ce)
-        val fn = (sub(node, 3).map(strOf), sub(node, 9).map(strOf)) match {
-          case (Some(udaf), _) => udaf match {
-            case "sum" => sum(args.head)
-            case "count" => count(args.head)
-            case "min" => min(args.head)
-            case "max" => max(args.head)
-            case "avg" => avg(args.head)
-            case other => throw new IllegalArgumentException(
-              s"dfproto consume: unsupported window udaf $other")
-          }
-          case (None, Some(udwf)) => udwf match {
-            case "row_number" => row_number()
-            case "rank" => rank()
-            case "dense_rank" => dense_rank()
-            case "percent_rank" => percent_rank()
-            case other => throw new IllegalArgumentException(
-              s"dfproto consume: unsupported window udwf $other")
-          }
-          case _ => throw new IllegalArgumentException(
-            "dfproto consume: WindowExprNode without function")
-        }
-        val parts = subs(node, 5).map(ce)
-        val orders = subs(node, 6).map(se => consumeSortExpr(se, scope))
-        var spec = org.apache.spark.sql.expressions.Window.partitionBy(parts: _*)
-        if (orders.nonEmpty) spec = spec.orderBy(orders: _*)
-        sub(node, 8).foreach { fr => // WindowFrame (:762)
-          val units = vint(fr, 1).getOrElse(0L)
-          val lower = frameBound(sub(fr, 2), isLower = true)
-          val upper = frameBound(sub(fr, 3), isLower = false)
-          units match {
-            case 0L => spec = spec.rowsBetween(lower, upper)
-            case 1L => spec = spec.rangeBetween(lower, upper)
-            case u => throw new IllegalArgumentException(
-              s"dfproto consume: unsupported frame units $u")
-          }
-        }
-        fn.over(spec)
+      case 19 => // AggregateUDFExprNode: fun_name=1, args=2, distinct=5
+        PlanVocabulary.aggregate(sub(node, 1).map(strOf).getOrElse(""),
+          vint(node, 5).contains(1L), subs(node, 2).map(ce))
+      case 18 => // WindowExprNode (datafusion.proto:680): udaf=3, udwf=9
+        val fn = windowFunction(sub(node, 3).map(strOf), sub(node, 9).map(strOf),
+          subs(node, 4).map(ce))
+        fn.over(windowSpec(subs(node, 5).map(ce),
+          subs(node, 6).map(se => sortOf(ce(sub(se, 1).get), se)), sub(node, 8)))
       case other => throw new IllegalArgumentException(
         s"dfproto consume: unsupported expr variant $other")
     }
@@ -1475,7 +1409,7 @@ object DataFusionProto {
 
   /** WindowFrameBound → Spark frame offset. PRECEDING/FOLLOWING with no
     * bound_value (the reference's ScalarValue-null) means unbounded. */
-  private[plans] def frameBound(b: Option[Array[Byte]], isLower: Boolean): Long =
+  private def frameBound(b: Option[Array[Byte]], isLower: Boolean): Long =
     b match {
       case None =>
         if (isLower) org.apache.spark.sql.expressions.Window.unboundedPreceding
@@ -1553,11 +1487,7 @@ object DataFusionProto {
       val f = sub(l, 1).getOrElse(
         throw new IllegalArgumentException("dfproto: List without field_type"))
       ArrayType(consumeType(sub(f, 2).get), vint(f, 3).contains(1L))
-    case (28, PBytes(s)) =>
-      StructType(subs(s, 1).map { f =>
-        StructField(sub(f, 1).map(strOf).getOrElse("c"),
-          consumeType(sub(f, 2).get), vint(f, 3).contains(1L))
-      })
+    case (28, PBytes(s)) => schemaOf(Some(s))
     case (33, PBytes(m)) =>
       sub(m, 1).flatMap(f => sub(f, 2)).map(consumeType) match {
         case Some(StructType(Array(k, v))) =>

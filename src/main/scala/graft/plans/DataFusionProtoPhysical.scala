@@ -1,10 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And => CAnd, Attribute, AttributeReference, BinaryOperator, Cast => CCast, DenseRank, Expression => CExpr, In, IsNotNull, IsNull, KnownFloatingPointNormalized, Literal => CLiteral, NamedExpression, Not, PercentRank, RangeFrame, Rank, RowFrame, RowNumber, SortOrder, SpecifiedWindowFrame, UnspecifiedFrame, WindowExpression, WindowSpecDefinition}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
-import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight, NormalizeNaNAndZero}
-import org.apache.spark.sql.catalyst.plans.{Cross, FullOuter, Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, BinaryOperator, Cast => CCast, Expression => CExpr, In, IsNotNull, IsNull, KnownFloatingPointNormalized, Literal => CLiteral, NamedExpression, Not, SortOrder, WindowExpression, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, NormalizeNaNAndZero}
+import org.apache.spark.sql.catalyst.plans.{Cross, Inner, JoinType}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, GlobalLimitExec, LocalLimitExec, ProjectExec, SortExec, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
@@ -42,15 +43,10 @@ import org.apache.spark.sql.types._
   * receiving engine picks its own partials).
   */
 object DataFusionProtoPhysical {
-  import DataFusionProto.{W, PBytes, PVarint, fields}
-
-  private def sub(b: Array[Byte], field: Int): Option[Array[Byte]] =
-    fields(b).collectFirst { case (`field`, PBytes(v)) => v }
-  private def subs(b: Array[Byte], field: Int): Seq[Array[Byte]] =
-    fields(b).collect { case (`field`, PBytes(v)) => v }
-  private def vint(b: Array[Byte], field: Int): Option[Long] =
-    fields(b).collectFirst { case (`field`, PVarint(v)) => v }
-  private def strOf(b: Array[Byte]): String = new String(b, "UTF-8")
+  import DataFusionProto.{W, PBytes, PVarint, aggregated, arrowField, arrowSchema, arrowType,
+    binaryOp, consumeType, emitFrame, emitSort, fields, joinTypeCode, joinTypeName, schemaOf,
+    sortOf, strOf, sub, subs, udaf, vint, windowFunction, windowSpec}
+  import PlanVocabulary.stripAlias
 
   /** repeated uint32 in BOTH wire encodings: proto3 packs repeated
     * scalars by default (prost emits ONE length-delimited blob of
@@ -142,15 +138,8 @@ object DataFusionProtoPhysical {
         scan.relation.location.inputFiles.foreach { f =>
           c.msg(1)(fg => fg.msg(1)(_.str(1, f))) // FileGroup/PartitionedFile
         }
-        c.msg(2) { schema => // full relation schema
-          scan.relation.schema.fields.foreach { f =>
-            schema.msg(1) { fld =>
-              fld.str(1, f.name)
-              fld.msg(2)(arrowType(f.dataType, _))
-              fld.bool(3, f.nullable)
-            }
-          }
-        }
+        // full relation schema
+        c.msg(2)(arrowSchema(DataTypeUtils.toAttributes(scan.relation.schema), _))
         // projection = indices of the scan output in the relation schema
         scan.output.foreach { a =>
           val idx = scan.relation.schema.fieldIndex(a.name)
@@ -321,14 +310,7 @@ object DataFusionProtoPhysical {
       }
     case r: org.apache.spark.sql.execution.RangeExec =>
       w.msg(33) { gs => // GenerateSeriesNode (datafusion.proto:1646)
-        gs.msg(1) { schema =>
-          r.output.foreach { a =>
-            schema.msg(1) { fld =>
-              fld.str(1, a.name); fld.msg(2)(arrowType(a.dataType, _))
-              fld.bool(3, a.nullable)
-            }
-          }
-        }
+        gs.msg(1)(arrowSchema(r.output, _))
         gs.int64(2, 8192L) // the reference's default batch_size
         gs.msg(4) { a => // GenerateSeriesArgsInt64 (:1621)
           a.int64(1, r.start)
@@ -354,16 +336,7 @@ object DataFusionProtoPhysical {
     case c: org.apache.spark.sql.execution.CoalesceExec if c.numPartitions == 1 =>
       w.msg(13)(m => m.msg(1)(emitPlan(c.child, _))) // CoalescePartitionsExecNode
     case l: org.apache.spark.sql.execution.LocalTableScanExec if l.rows.isEmpty =>
-      w.msg(3) { en => // EmptyExecNode (:1403): schema only
-        en.msg(1) { schema =>
-          l.output.foreach { a =>
-            schema.msg(1) { fld =>
-              fld.str(1, a.name); fld.msg(2)(arrowType(a.dataType, _))
-              fld.bool(3, a.nullable)
-            }
-          }
-        }
-      }
+      w.msg(3)(_.msg(1)(arrowSchema(l.output, _))) // EmptyExecNode (:1403): schema only
     case l: org.apache.spark.sql.execution.LocalTableScanExec =>
       // a non-empty local relation IS the reference's memory source:
       // MemoryScanExecNode (:1296) carries the rows as Arrow IPC STREAM
@@ -378,14 +351,7 @@ object DataFusionProtoPhysical {
         val rows = l.rows.map(r =>
           toScala(r).asInstanceOf[org.apache.spark.sql.Row])
         ms.raw(1, graft.sources.ArrowIpcWriter.streamBytes(schema, rows))
-        ms.msg(2) { sc =>
-          l.output.foreach { a =>
-            sc.msg(1) { fld =>
-              fld.str(1, a.name); fld.msg(2)(arrowType(a.dataType, _))
-              fld.bool(3, a.nullable)
-            }
-          }
-        }
+        ms.msg(2)(arrowSchema(l.output, _))
       }
     case g: org.apache.spark.sql.execution.GenerateExec =>
       // explode(list) = the reference's in-place UnnestExecNode (:979):
@@ -407,12 +373,9 @@ object DataFusionProtoPhysical {
         un.msg(1)(emitPlan(g.child, _))
         un.msg(2) { sc => // post-unnest schema: list slot → element type
           g.child.output.foreach { a =>
-            sc.msg(1) { fld =>
-              fld.str(1, a.name)
-              fld.msg(2)(arrowType(
-                if (a.exprId == arr.exprId) el.dataType else a.dataType, _))
-              fld.bool(3, if (a.exprId == arr.exprId) true else a.nullable)
-            }
+            val slot = a.exprId == arr.exprId
+            sc.msg(1)(arrowField(a.name, if (slot) el.dataType else a.dataType,
+              slot || a.nullable, _))
           }
         }
         un.msg(3) { lu => // ListUnnest (:987)
@@ -442,14 +405,7 @@ object DataFusionProtoPhysical {
             c.msg(1)(fg => fg.msg(1)(_.str(1, f.toString)))
           }
           val full = graft.sources.ArrowIpcSource.readSchema(scan.path)
-          c.msg(2) { sc =>
-            full.fields.foreach { f =>
-              sc.msg(1) { fld =>
-                fld.str(1, f.name); fld.msg(2)(arrowType(f.dataType, _))
-                fld.bool(3, f.nullable)
-              }
-            }
-          }
+          c.msg(2)(arrowSchema(DataTypeUtils.toAttributes(full), _))
           scan.required.fieldNames.foreach { n =>
             c.int64(4, full.fieldIndex(n).toLong)
           }
@@ -485,20 +441,11 @@ object DataFusionProtoPhysical {
         sink.msg(1) { c =>
           c.str(1, "file://")
           c.str(3, url)
-          c.msg(4) { sc =>
-            df.schema.fields.foreach { f =>
-              sc.msg(1) { fld =>
-                fld.str(1, f.name)
-                fld.msg(2)(DataFusionProto.arrowType(f.dataType, _))
-                fld.bool(3, f.nullable)
-              }
-            }
-          }
+          c.msg(4)(arrowSchema(DataTypeUtils.toAttributes(df.schema), _))
           partitionBy.foreach { p =>
             c.msg(5) { pc => // PartitionColumn{name=1, arrow_type=2}
               pc.str(1, p)
-              pc.msg(2)(DataFusionProto.arrowType(
-                df.schema(p).dataType, _))
+              pc.msg(2)(arrowType(df.schema(p).dataType, _))
             }
           }
           if (overwrite) c.int64(10, 1L) // InsertOp.Overwrite
@@ -506,15 +453,7 @@ object DataFusionProtoPhysical {
         if (format == "csv") // CsvWriterOptions.has_header(3)
           sink.msg(2)(_.bool(3, true))
       }
-      sn.msg(3) { sc => // sink_schema
-        df.schema.fields.foreach { f =>
-          sc.msg(1) { fld =>
-            fld.str(1, f.name)
-            fld.msg(2)(DataFusionProto.arrowType(f.dataType, _))
-            fld.bool(3, f.nullable)
-          }
-        }
-      }
+      sn.msg(3)(arrowSchema(DataTypeUtils.toAttributes(df.schema), _)) // sink_schema
     }
     w.bytes
   }
@@ -558,20 +497,8 @@ object DataFusionProtoPhysical {
       an.msg(4)(emitPlan(child, _))
       groups.foreach(g => an.str(5, g.name))
       aggOutputNames(groups, aggs, results).foreach(n => an.str(6, n))
-      an.msg(7) { schema => // input_schema (:1466)
-        child.output.foreach { a =>
-          schema.msg(1) { fld =>
-            fld.str(1, a.name)
-            fld.msg(2)(arrowType(a.dataType, _))
-            fld.bool(3, a.nullable)
-          }
-        }
-      }
+      an.msg(7)(arrowSchema(child.output, _)) // input_schema (:1466)
     }
-  }
-
-  private def stripAlias(e: CExpr): CExpr = e match {
-    case Alias(c, _) => c; case x => x
   }
 
   /** PhysicalExprNode (datafusion.proto:998). */
@@ -626,48 +553,17 @@ object DataFusionProtoPhysical {
 
   private def emitAggExpr(ae: AggregateExpression, anchor: Seq[Attribute],
       w: W): Unit = {
-    val (name, args) = ae.aggregateFunction match {
-      case Sum(c, _) => ("sum", Seq(c))
-      case Count(cs) if cs.isEmpty ||
-        cs == Seq(CLiteral(1, IntegerType)) => ("count", Seq(CLiteral(1L, LongType)))
-      case Count(cs) => ("count", cs)
-      case Min(c) => ("min", Seq(c))
-      case Max(c) => ("max", Seq(c))
-      case Average(c, _) => ("avg", Seq(c))
-      case other => throw new IllegalArgumentException(
-        s"dfproto physical emit: unsupported aggregate ${other.nodeName}")
-    }
+    val (name, args, distinct) = udaf(ae)
     w.msg(4) { an => // PhysicalAggregateExprNode (:1089): udaf=4 expr=2 distinct=3
       an.str(4, name)
       args.foreach(a => an.msg(2)(emitExpr(a, anchor, _)))
-      if (ae.isDistinct) an.bool(3, true)
+      if (distinct) an.bool(3, true)
     }
   }
 
   /** A sort key as PhysicalExprNode{sort=10{expr,asc,nulls_first}}. */
   private def emitSortAsExpr(so: SortOrder, anchor: Seq[Attribute], w: W): Unit =
-    w.msg(10)(emitSortFields(so, anchor, _))
-
-  /** Bare PhysicalSortExprNode fields (:1156) — used both wrapped (inside
-    * a PhysicalExprNode) and direct (window order_by, field 6). */
-  private def emitSortFields(so: SortOrder, anchor: Seq[Attribute], w: W): Unit = {
-    w.msg(1)(emitExpr(so.child, anchor, _))
-    w.bool(2, so.direction == org.apache.spark.sql.catalyst.expressions.Ascending)
-    w.bool(3, so.nullOrdering == org.apache.spark.sql.catalyst.expressions.NullsFirst)
-  }
-
-  private def joinTypeCode(jt: JoinType): Long = jt match {
-    // datafusion_common.proto:80 JoinType
-    case Inner => 0L
-    case Cross => 0L
-    case LeftOuter => 1L
-    case RightOuter => 2L
-    case FullOuter => 3L
-    case LeftSemi => 4L
-    case LeftAnti => 5L
-    case other => throw new IllegalArgumentException(
-      s"dfproto physical emit: unsupported join type $other")
-  }
+    w.msg(10)(emitSort(so, _)(emitExpr(_, anchor, _)))
 
   private def emitHashJoin(left: SparkPlan, right: SparkPlan,
       leftKeys: Seq[CExpr], rightKeys: Seq[CExpr], jt: JoinType,
@@ -711,15 +607,7 @@ object DataFusionProtoPhysical {
         }
       }
     }
-    w.msg(3) { schema =>
-      refs.foreach { a =>
-        schema.msg(1) { fld =>
-          fld.str(1, a.name)
-          fld.msg(2)(arrowType(a.dataType, _))
-          fld.bool(3, a.nullable)
-        }
-      }
-    }
+    w.msg(3)(arrowSchema(refs, _))
   }
 
   /** PhysicalWindowExprNode (datafusion.proto:1101): udaf name=3 /
@@ -730,43 +618,18 @@ object DataFusionProtoPhysical {
     val WindowExpression(fn, WindowSpecDefinition(parts, orders, frame)) = e
     fn match {
       case ae: AggregateExpression =>
-        val (n, args) = ae.aggregateFunction match {
-          case Sum(c, _) => ("sum", Seq(c))
-          case Count(cs) if cs.isEmpty ||
-            cs == Seq(CLiteral(1, IntegerType)) =>
-            ("count", Seq(CLiteral(1L, LongType)))
-          case Count(cs) => ("count", cs)
-          case Min(c) => ("min", Seq(c))
-          case Max(c) => ("max", Seq(c))
-          case Average(c, _) => ("avg", Seq(c))
-          case other => throw new IllegalArgumentException(
-            s"dfproto physical emit: unsupported window aggregate ${other.nodeName}")
-        }
+        val (n, args, _) = udaf(ae)
         w.str(3, n)
         args.foreach(a => w.msg(4)(emitExpr(a, anchor, _)))
-      case _: RowNumber => w.str(10, "row_number")
-      case _: Rank => w.str(10, "rank")
-      case _: DenseRank => w.str(10, "dense_rank")
-      case _: PercentRank => w.str(10, "percent_rank")
-      case other => throw new IllegalArgumentException(
-        s"dfproto physical emit: unsupported window function ${other.nodeName}")
+      case other => w.str(10, PlanVocabulary.rankingName(other).getOrElse(
+        throw new IllegalArgumentException(
+          s"dfproto physical emit: unsupported window function ${other.nodeName}")))
     }
     parts.foreach(p => w.msg(5)(emitExpr(p, anchor, _)))
-    orders.foreach(so => w.msg(6)(emitSortFields(so, anchor, _)))
-    frame match {
-      case SpecifiedWindowFrame(ft, lower, upper) =>
-        w.msg(7) { fr => // WindowFrame (:762), shared with the logical wire
-          fr.int64(1, ft match { case RowFrame => 0L; case RangeFrame => 1L })
-          fr.msg(2)(DataFusionProto.emitBound(lower, _))
-          fr.msg(3)(DataFusionProto.emitBound(upper, _))
-        }
-      case UnspecifiedFrame => ()
-    }
+    orders.foreach(so => w.msg(6)(emitSort(so, _)(emitExpr(_, anchor, _))))
+    emitFrame(frame, 7, w)
     w.str(8, name)
   }
-
-  private def arrowType(t: DataType, w: W): Unit =
-    DataFusionProto.arrowType(t, w)
 
   // --------------------------------------------------------------- consume
 
@@ -850,24 +713,10 @@ object DataFusionProtoPhysical {
         val names = fields(node).collect { case (6, PBytes(v)) => strOf(v) }
         val aggs = if (names.size == aggs0.size)
           aggs0.zip(names).map { case (c, n) => c.as(n) } else aggs0
-        if (keys.isEmpty) input.agg(aggs.head, aggs.tail: _*)
-        else input.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+        aggregated(input, keys, aggs)
       case 10 => // SortExecNode
         val input = consume(spark, sub(node, 1).get, tableFor)
-        val orders = subs(node, 2).map { se =>
-          // each entry is PhysicalExprNode{sort=10}
-          val sn = sub(se, 10).getOrElse(se)
-          val c = consumeExpr(sub(sn, 1).get, input)
-          val asc = vint(sn, 2).contains(1L)
-          val nf = vint(sn, 3).contains(1L)
-          (asc, nf) match {
-            case (true, true) => c.asc_nulls_first
-            case (true, false) => c.asc_nulls_last
-            case (false, true) => c.desc_nulls_first
-            case (false, false) => c.desc_nulls_last
-          }
-        }
-        val sorted = input.orderBy(orders: _*)
+        val sorted = input.orderBy(sortExprs(node, input): _*)
         // fetch ≥ 0 = the reference's TopK sort
         vint(node, 3).map(_.toInt).filter(_ >= 0)
           .map(sorted.limit).getOrElse(sorted)
@@ -961,14 +810,8 @@ object DataFusionProtoPhysical {
       case 13 => // CoalescePartitionsExecNode → one partition
         consume(spark, sub(node, 1).get, tableFor).coalesce(1)
       case 3 => // EmptyExecNode: zero rows of the declared schema
-        val fields0 = sub(node, 1).toSeq.flatMap(s => subs(s, 1)).map { f =>
-          StructField(sub(f, 1).map(strOf).getOrElse("c"),
-            DataFusionProto.consumeType(sub(f, 2).get),
-            vint(f, 3).contains(1L))
-        }
         spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(fields0))
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf(sub(node, 1)))
       case 11 => // CoalesceBatchesExecNode: batch sizing is engine-internal
         val input = consume(spark, sub(node, 1).get, tableFor)
         vint(node, 3).map(f => input.limit(f.toInt)).getOrElse(input)
@@ -979,30 +822,16 @@ object DataFusionProtoPhysical {
       case 21 => // SortPreservingMergeExecNode: re-plan as a global sort —
         // the merge-of-sorted-runs is Spark's own SortExec/AQE choice
         val input = consume(spark, sub(node, 1).get, tableFor)
-        val orders = subs(node, 2).map { se =>
-          val sn = sub(se, 10).getOrElse(se)
-          val c = consumeExpr(sub(sn, 1).get, input)
-          (vint(sn, 2).contains(1L), vint(sn, 3).contains(1L)) match {
-            case (true, true) => c.asc_nulls_first
-            case (true, false) => c.asc_nulls_last
-            case (false, true) => c.desc_nulls_first
-            case (false, false) => c.desc_nulls_last
-          }
-        }
+        val orders = sortExprs(node, input)
         val sorted = if (orders.isEmpty) input else input.orderBy(orders: _*)
         vint(node, 3).map(_.toInt).filter(_ >= 0)
           .map(sorted.limit).getOrElse(sorted)
       case 27 => // PlaceholderRowExecNode: one row per output partition
         // (absent partitions(2) = 0 decodes as the historical single
         // partition), all-NULL columns of the declared schema
-        val fields0 = sub(node, 1).toSeq.flatMap(s => subs(s, 1)).map { f =>
-          StructField(sub(f, 1).map(strOf).getOrElse("c"),
-            DataFusionProto.consumeType(sub(f, 2).get),
-            vint(f, 3).contains(1L))
-        }
         val n = vint(node, 2).map(_.toInt).filter(_ > 0).getOrElse(1)
         val base = spark.range(n.toLong).select()
-        fields0.foldLeft(base) { (df, f) =>
+        schemaOf(sub(node, 1)).foldLeft(base) { (df, f) =>
           df.withColumn(f.name, lit(null).cast(f.dataType))
         }
       case 25 => // SymmetricHashJoinExecNode: the stream-stream hash join —
@@ -1053,11 +882,7 @@ object DataFusionProtoPhysical {
         wr.save(path)
         spark.sql(s"SELECT CAST($n AS BIGINT) AS count")
       case 35 => // MemoryScanExecNode: partitions are Arrow IPC STREAM blobs
-        val schema0 = StructType(sub(node, 2).toSeq.flatMap(s => subs(s, 1)).map { f =>
-          StructField(sub(f, 1).map(strOf).getOrElse("c"),
-            DataFusionProto.consumeType(sub(f, 2).get),
-            vint(f, 3).contains(1L))
-        })
+        val schema0 = schemaOf(sub(node, 2))
         val blobs = subs(node, 1).filter(_.nonEmpty)
         val base =
           if (blobs.isEmpty)
@@ -1187,18 +1012,6 @@ object DataFusionProtoPhysical {
     }
   }
 
-  private def joinTypeName(code: Long): String = code match {
-    // datafusion_common.proto:80 JoinType
-    case 0L => "inner"
-    case 1L => "left"
-    case 2L => "right"
-    case 3L => "full"
-    case 4L => "left_semi"
-    case 5L => "left_anti"
-    case other => throw new IllegalArgumentException(
-      s"dfproto physical consume: unsupported join type $other")
-  }
-
   /** JoinFilter (datafusion.proto:1560) → Column: the expression's
     * PhysicalColumn indices address the filter's INTERMEDIATE schema;
     * ColumnIndex maps each slot back to (side, index-in-side). */
@@ -1220,55 +1033,21 @@ object DataFusionProtoPhysical {
 
   /** PhysicalWindowExprNode (datafusion.proto:1101) → windowed Column. */
   private def consumeWindowExpr(b: Array[Byte], input: DataFrame): Column = {
-    val args = subs(b, 4).map(e => consumeExpr(e, input))
-    val fn = (sub(b, 3).map(strOf), sub(b, 10).map(strOf)) match {
-      case (Some(udaf), _) => udaf match {
-        case "sum" => sum(args.head)
-        case "count" => count(args.head)
-        case "min" => min(args.head)
-        case "max" => max(args.head)
-        case "avg" => avg(args.head)
-        case other => throw new IllegalArgumentException(
-          s"dfproto physical consume: unsupported window udaf $other")
-      }
-      case (None, Some(udwf)) => udwf match {
-        case "row_number" => row_number()
-        case "rank" => rank()
-        case "dense_rank" => dense_rank()
-        case "percent_rank" => percent_rank()
-        case other => throw new IllegalArgumentException(
-          s"dfproto physical consume: unsupported window udwf $other")
-      }
-      case _ => throw new IllegalArgumentException(
-        "dfproto physical consume: PhysicalWindowExprNode without function")
-    }
-    val parts = subs(b, 5).map(e => consumeExpr(e, input))
+    def ce(e: Array[Byte]) = consumeExpr(e, input)
+    val fn = windowFunction(sub(b, 3).map(strOf), sub(b, 10).map(strOf), subs(b, 4).map(ce))
     // order_by entries are BARE PhysicalSortExprNodes (expr=1 asc=2 nf=3)
-    val orders = subs(b, 6).map { sn =>
-      val c = consumeExpr(sub(sn, 1).get, input)
-      (vint(sn, 2).contains(1L), vint(sn, 3).contains(1L)) match {
-        case (true, true) => c.asc_nulls_first
-        case (true, false) => c.asc_nulls_last
-        case (false, true) => c.desc_nulls_first
-        case (false, false) => c.desc_nulls_last
-      }
-    }
-    var spec = org.apache.spark.sql.expressions.Window.partitionBy(parts: _*)
-    if (orders.nonEmpty) spec = spec.orderBy(orders: _*)
-    sub(b, 7).foreach { fr => // WindowFrame (:762)
-      val units = vint(fr, 1).getOrElse(0L)
-      val lower = DataFusionProto.frameBound(sub(fr, 2), isLower = true)
-      val upper = DataFusionProto.frameBound(sub(fr, 3), isLower = false)
-      units match {
-        case 0L => spec = spec.rowsBetween(lower, upper)
-        case 1L => spec = spec.rangeBetween(lower, upper)
-        case u => throw new IllegalArgumentException(
-          s"dfproto physical consume: unsupported frame units $u")
-      }
-    }
-    val over = fn.over(spec)
+    val over = fn.over(windowSpec(subs(b, 5).map(ce),
+      subs(b, 6).map(sn => sortOf(ce(sub(sn, 1).get), sn)), sub(b, 7)))
     sub(b, 8).map(strOf).map(over.as).getOrElse(over)
   }
+
+  /** SortExecNode / SortPreservingMergeExecNode order keys: each a
+    * PhysicalExprNode{sort=10}, or a bare PhysicalSortExprNode. */
+  private def sortExprs(node: Array[Byte], input: DataFrame): Seq[Column] =
+    subs(node, 2).map { se =>
+      val sn = sub(se, 10).getOrElse(se)
+      sortOf(consumeExpr(sub(sn, 1).get, input), sn)
+    }
 
   private def consumeExpr(b: Array[Byte], input: DataFrame): Column =
     consumeExprR(b,
@@ -1299,33 +1078,12 @@ object DataFusionProtoPhysical {
             throw new IllegalArgumentException("dfproto physical: column"))))
       case 2 => DataFusionProto.consumeLiteral(node)
       case 3 =>
-        val l = rec(sub(node, 1).get)
-        val r = rec(sub(node, 2).get)
-        sub(node, 3).map(strOf).getOrElse("") match {
-          case "Eq" => l === r
-          case "NotEq" => l =!= r
-          case "Lt" => l < r
-          case "LtEq" => l <= r
-          case "Gt" => l > r
-          case "GtEq" => l >= r
-          case "And" => l && r
-          case "Or" => l || r
-          case "Plus" => l + r
-          case "Minus" => l - r
-          case "Multiply" => l * r
-          case "Divide" => l / r
-          case "Modulo" => l % r
-          case "BitwiseAnd" => l.bitwiseAND(r)
-          case "BitwiseOr" => l.bitwiseOR(r)
-          case "BitwiseXor" => l.bitwiseXOR(r)
-          case other => throw new IllegalArgumentException(
-            s"dfproto physical consume: unsupported op $other")
-        }
+        binaryOp(sub(node, 3).map(strOf).getOrElse(""),
+          rec(sub(node, 1).get), rec(sub(node, 2).get))
       case 5 => rec(sub(node, 1).get).isNull
       case 6 => rec(sub(node, 1).get).isNotNull
       case 7 => !rec(sub(node, 1).get)
-      case 9 => rec(sub(node, 1).get)
-        .cast(DataFusionProto.consumeType(sub(node, 2).get))
+      case 9 => rec(sub(node, 1).get).cast(consumeType(sub(node, 2).get))
       case 12 =>
         val v = rec(sub(node, 1).get)
         val list = subs(node, 2).map(rec)
@@ -1348,7 +1106,7 @@ object DataFusionProtoPhysical {
         val bound = scalarSubqueryBindings.get
         require(idx >= 0 && idx < bound.length,
           s"dfproto physical consume: unbound scalar subquery index $idx")
-        sub(node, 1).map(t => bound(idx).cast(DataFusionProto.consumeType(t)))
+        sub(node, 1).map(t => bound(idx).cast(consumeType(t)))
           .getOrElse(bound(idx))
       case other => throw new IllegalArgumentException(
         s"dfproto physical consume: unsupported expr variant $other")
@@ -1358,19 +1116,7 @@ object DataFusionProtoPhysical {
   private def consumeAggExpr(b: Array[Byte], input: DataFrame): Column = {
     val node = sub(b, 4).getOrElse(throw new IllegalArgumentException(
       "dfproto physical consume: expected aggregate_expr"))
-    val name = sub(node, 4).map(strOf).getOrElse("")
-    val args = subs(node, 2).map(e => consumeExpr(e, input))
-    val distinct = vint(node, 3).contains(1L)
-    (name, distinct) match {
-      case ("sum", false) => sum(args.head)
-      case ("sum", true) => sum_distinct(args.head)
-      case ("count", false) => count(args.head)
-      case ("count", true) => countDistinct(args.head, args.tail: _*)
-      case ("min", _) => min(args.head)
-      case ("max", _) => max(args.head)
-      case ("avg", false) => avg(args.head)
-      case (other, d) => throw new IllegalArgumentException(
-        s"dfproto physical consume: unsupported aggregate $other (distinct=$d)")
-    }
+    PlanVocabulary.aggregate(sub(node, 4).map(strOf).getOrElse(""),
+      vint(node, 3).contains(1L), subs(node, 2).map(e => consumeExpr(e, input)))
   }
 }

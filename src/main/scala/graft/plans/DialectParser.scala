@@ -90,7 +90,8 @@ object DialectParser {
   /** Finds the clauses as paren-depth-0 tokens: `DISTINCT ON ( … )` and
     * `QUALIFY …` up to the next top-level ORDER BY, LIMIT, OFFSET, WINDOW
     * or set operator. CTE bodies and subqueries sit inside parens, so the
-    * clauses found belong to the main query. */
+    * clauses found belong to the main query; one inside parens is rejected
+    * here rather than left for Spark to misread. */
   private def cut(s: String): Cut = {
     val toks = lex(s)
     def word(i: Int, w: String) = i < toks.length && toks(i).kind == 'w' &&
@@ -100,8 +101,12 @@ object DialectParser {
       if (punct(i, '(')) d + 1 else if (punct(i, ')')) d - 1 else d
     }
     def top(i: Int) = depth(i) == 0
-    val distinctOn = toks.indices.find(i => top(i) && word(i, "DISTINCT") && word(i + 1, "ON") &&
-      punct(i + 2, '(')).map { i =>
+    def distinctOnAt(i: Int) = word(i, "DISTINCT") && word(i + 1, "ON") && punct(i + 2, '(')
+    toks.indices.find(i => !top(i) && (word(i, "QUALIFY") || distinctOnAt(i))).foreach { i =>
+      val clause = if (word(i, "QUALIFY")) "QUALIFY" else "DISTINCT ON"
+      throw unsupported(s, s"$clause inside a subquery or CTE is unsupported")
+    }
+    val distinctOn = toks.indices.find(i => top(i) && distinctOnAt(i)).map { i =>
       val close = (i + 3 until toks.length).find(j => punct(j, ')') && depth(j + 1) == 0)
         .getOrElse(throw unsupported(s, "DISTINCT ON without a closing paren"))
       (toks(i).start, toks(close).end, s.substring(toks(i + 2).end, toks(close).start))

@@ -201,8 +201,7 @@ object SubstraitSerde {
             throw new IllegalArgumentException("substrait: unknown aggregate anchor"))
           val distinct =
             str(me \ "invocation").contains("AGGREGATION_INVOCATION_DISTINCT")
-          val args = arr(me \ "arguments").map(a0 => expression(a0 \ "value"))
-          aggFunction(name, args, distinct)
+          aggColumn(name, distinct, arr(me \ "arguments").map(a0 => expression(a0 \ "value")))
         }
         val nK = groupExprs.size
         val agged =
@@ -466,18 +465,13 @@ object SubstraitSerde {
     val ranking = Set("row_number", "rank", "dense_rank", "percent_rank",
       "cume_dist", "ntile", "lead", "lag")
     val fn: Column = name match {
-      case "row_number" => row_number()
-      case "rank" => rank()
-      case "dense_rank" => dense_rank()
-      case "percent_rank" => percent_rank()
       case "cume_dist" => cume_dist()
       case "ntile" => ntile(argLit(0, 1))
       case "lead" => lead(args.head, argLit(1, 1))
       case "lag" => lag(args.head, argLit(1, 1))
       case "first_value" => first(args.head)
       case "last_value" => last(args.head)
-      case other => aggFunction(other,
-        if (args.isEmpty) List(lit(1)) else args, distinct)
+      case other => PlanVocabulary.ranking(other).getOrElse(aggColumn(other, distinct, args))
     }
     val parts = arr(wf \ "partitions").map(expr0(_, ctx, level, bind = false))
     val sorts = arr(wf \ "sorts").map(sf =>
@@ -613,17 +607,9 @@ object SubstraitSerde {
       throw new IllegalArgumentException(s"substrait: unsupported function $other")
   }
 
-  private def aggFunction(name: String, args: List[Column],
-      distinct: Boolean): Column = (name, distinct) match {
-    case ("sum", false) => sum(args.head)
-    case ("sum", true) => sum_distinct(args.head)
-    case ("avg", false) => avg(args.head)
-    case ("min", _) => min(args.head)
-    case ("max", _) => max(args.head)
-    case ("count", false) => if (args.isEmpty) count(lit(1)) else count(args.head)
-    case ("count", true) => count_distinct(args.head)
-    case other => throw new IllegalArgumentException(s"substrait: aggregate $other")
-  }
+  /** Substrait spells `count(*)` with no arguments. */
+  private def aggColumn(name: String, distinct: Boolean, args: List[Column]): Column =
+    PlanVocabulary.aggregate(name, distinct, if (args.isEmpty) List(lit(1)) else args)
 
   /** Substrait Type message → Spark DataType (JSON field key = kind). */
   private def sparkTypeOf(t: JValue): DataType = {
@@ -662,15 +648,13 @@ object SubstraitSerde {
     OuterReference => COuterReference, WindowExpression => CWindowExpression,
     WindowSpecDefinition, SpecifiedWindowFrame, UnspecifiedFrame,
     RowFrame, RangeFrame, UnboundedPreceding, UnboundedFollowing,
-    CurrentRow => CCurrentRow, RowNumber => CRowNumber, Rank => CRank,
-    DenseRank => CDenseRank, PercentRank => CPercentRank,
-    CumeDist => CCumeDist, NTile => CNTile, Lead => CLead, Lag => CLag,
+    CurrentRow => CCurrentRow, CumeDist => CCumeDist, NTile => CNTile,
+    Lead => CLead, Lag => CLag,
     Floor => CFloor, Ceil => CCeil, Year => CYear, Month => CMonth,
     DayOfMonth => CDayOfMonth, Quarter => CQuarter,
     Contains => CContains, StartsWith => CStartsWith, EndsWith => CEndsWith}
-  import org.apache.spark.sql.catalyst.expressions.aggregate.{
-    AggregateExpression, Sum => CSum, Average => CAvg, Min => CMin,
-    Max => CMax, Count => CCount}
+  import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+  import PlanVocabulary.stripAlias
   import org.apache.spark.sql.catalyst.plans.logical._
   import org.apache.spark.sql.execution.datasources.LogicalRelation
 
@@ -713,23 +697,9 @@ object SubstraitSerde {
   private def innerTableName(plan: LogicalPlan): Option[String] = plan match {
     case View(desc, _, _, _) => Some(desc.identifier.table)
     case SubqueryAlias(ident, child) => innerTableName(child).orElse(Some(ident.name))
-    case lr: LogicalRelation =>
-      lr.catalogTable.map(_.identifier.table).orElse(relationPathName(lr))
+    case lr: LogicalRelation => PlanVocabulary.relationName(lr)
     case _ => None
   }
-
-  /** Path-derived name for a catalog-less file relation: the root path's
-    * base name with any file extension stripped (Tables.load reads
-    * `<dir>/<table>.parquet`). */
-  private def relationPathName(lr: LogicalRelation): Option[String] =
-    lr.relation match {
-      case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-        fs.location.rootPaths.headOption.map { p =>
-          val base = p.getName
-          if (base.contains('.')) base.substring(0, base.lastIndexOf('.')) else base
-        }
-      case _ => None
-    }
 
   private def emitRead(name: String, output: Seq[Attribute]): JValue =
     JObject("read" -> JObject(
@@ -743,7 +713,7 @@ object SubstraitSerde {
   private def emitRel(plan: LogicalPlan, reg: FnReg,
       outer: Seq[Attribute] = Nil): JValue = plan match {
     case SubqueryAlias(ident, child) if child.collectLeaves().size == 1 &&
-        (child.isInstanceOf[LeafNode] || PlanSerdeLeaf.is(child)) =>
+        isScanLeaf(child) =>
       emitRead(innerTableName(child).getOrElse(ident.name), plan.output)
     case SubqueryAlias(_, child) => emitRel(child, reg, outer)
     // hints are engine-local advice; the plan-exchange contract is that
@@ -764,8 +734,7 @@ object SubstraitSerde {
           if childOut.exists(_.exprId == a.exprId) =>
           childOut.indexWhere(_.exprId == a.exprId)
         case e =>
-          val stripped = e match { case Alias(c, _) => c; case x => x }
-          newExprs += emitExpr(stripped, childOut, reg, outer)
+          newExprs += emitExpr(stripAlias(e), childOut, reg, outer)
           childOut.size + newExprs.size - 1
       }
       JObject("project" -> JObject(
@@ -782,7 +751,7 @@ object SubstraitSerde {
     // substrait's AggregateRel holds only keys and raw measures, so split
     // into Aggregate(pure) + Project(composite over ordinals) and emit that
     case Aggregate(g, aggExprs, child, _) if aggExprs.exists { ne =>
-      val st = ne match { case Alias(c, _) => c; case x => x }
+      val st = stripAlias(ne)
       !st.isInstanceOf[AggregateExpression] &&
         g.indexWhere(_.semanticEquals(st)) < 0 &&
         st.exists(_.isInstanceOf[AggregateExpression])
@@ -885,8 +854,7 @@ object SubstraitSerde {
         }, None)
       val space = keyAttrs2 ++ mAttrs :+ ordAttr
       val outExprs = aggExprs.map { ne =>
-        val stripped = ne match { case Alias(c, _) => c; case x => x }
-        stripped.transformDown {
+        stripAlias(ne).transformDown {
           case ae: AggregateExpression =>
             mAttrs(aggList.indexWhere(_ eq ae))
           case at: Attribute if at.exprId == gidAttr.exprId => gidCase
@@ -906,7 +874,7 @@ object SubstraitSerde {
       val groups = groupingExpressions.map(emitExpr(_, childOut, reg, outer))
       val measures = scala.collection.mutable.ListBuffer[JValue]()
       val mapping = aggregateExpressions.map { ae =>
-        val stripped = ae match { case Alias(c, _) => c; case x => x }
+        val stripped = stripAlias(ae)
         val gi = groupingExpressions.indexWhere(_.semanticEquals(stripped))
         if (gi >= 0) gi
         else stripped match {
@@ -950,10 +918,8 @@ object SubstraitSerde {
       JObject("project" -> JObject(
         "common" -> JObject("direct" -> JObject()),
         "input" -> emitRel(w.child, reg, outer),
-        "expressions" -> JArray(w.windowExpressions.map { ne =>
-          val stripped = ne match { case Alias(c, _) => c; case x => x }
-          emitExpr(stripped, w.child.output, reg, outer)
-        }.toList)))
+        "expressions" -> JArray(w.windowExpressions.map(ne =>
+          emitExpr(stripAlias(ne), w.child.output, reg, outer)).toList)))
     // global and partition-local sorts both emit SortRel: Substrait's
     // sort is total, a sound refinement of a local sort (the library
     // emits local sorts only over single-partition children, where
@@ -962,16 +928,7 @@ object SubstraitSerde {
       JObject("sort" -> JObject(
         "common" -> JObject("direct" -> JObject()),
         "input" -> emitRel(child, reg, outer),
-        "sorts" -> JArray(order.map { so =>
-          val dir = (so.direction, so.nullOrdering) match {
-            case (Ascending, NullsFirst) => "SORT_DIRECTION_ASC_NULLS_FIRST"
-            case (Ascending, NullsLast) => "SORT_DIRECTION_ASC_NULLS_LAST"
-            case (Descending, NullsFirst) => "SORT_DIRECTION_DESC_NULLS_FIRST"
-            case (Descending, NullsLast) => "SORT_DIRECTION_DESC_NULLS_LAST"
-          }
-          JObject("expr" -> emitExpr(so.child, child.output, reg, outer),
-            "direction" -> JString(dir))
-        }.toList)))
+        "sorts" -> JArray(order.map(sortField(_, child.output, reg, outer)).toList)))
     case GlobalLimit(limitExpr, LocalLimit(_, child)) =>
       JObject("fetch" -> JObject(
         "common" -> JObject("direct" -> JObject()),
@@ -1032,14 +989,12 @@ object SubstraitSerde {
       s"substrait emit: unsupported node ${other.nodeName}")
   }
 
-  /** Leaf detection helper shared with PlanSerde's notion of a scan. */
-  private object PlanSerdeLeaf {
-    def is(plan: LogicalPlan): Boolean = plan match {
-      case _: LeafNode => true
-      case View(_, _, child, _) => is(child)
-      case SubqueryAlias(_, c) => is(c)
-      case _ => false
-    }
+  /** A scan: a leaf relation, possibly under view and alias wrappers. */
+  private def isScanLeaf(plan: LogicalPlan): Boolean = plan match {
+    case _: LeafNode => true
+    case View(_, _, child, _) => isScanLeaf(child)
+    case SubqueryAlias(_, c) => isScanLeaf(c)
+    case _ => false
   }
 
   private def fieldRef(i: Int): JValue =
@@ -1100,6 +1055,9 @@ object SubstraitSerde {
       // extension-space function; consume rebuilds the exact expression
       case p: graft.functions.DenseKeyProbe =>
         fn(graft.functions.DenseKeyProbe.Name, graft.functions.DenseKeyProbe.wireArgs(p))
+      // a NULL literal under a cast is the cast target's typed null
+      // (Substrait has no NullType)
+      case CCast(CLit(null, _), dt, _, _) => JObject("literal" -> literalJson(CLit(null, dt)))
       case CCast(child, dt, _, _) =>
         JObject("cast" -> JObject(
           "type" -> typeJson(dt, e.nullable),
@@ -1142,28 +1100,14 @@ object SubstraitSerde {
       case CQuarter(c) => extractFn("QUARTER", c, e, input, reg, outer)
       case CWindowExpression(fun, WindowSpecDefinition(parts, order, frame)) =>
         val (name, wargs, distinct) = fun match {
-          case agg: AggregateExpression =>
-            val (n, as) = agg.aggregateFunction match {
-              case CSum(c, _) => ("sum", Seq(c))
-              case CAvg(c, _) => ("avg", Seq(c))
-              case CMin(c) => ("min", Seq(c))
-              case CMax(c) => ("max", Seq(c))
-              case CCount(cs) if cs.forall(_.foldable) => ("count", Nil)
-              case CCount(cs) => ("count", cs)
-              case other => throw new IllegalArgumentException(
-                s"substrait emit: window aggregate ${other.prettyName}")
-            }
-            (n, as, agg.isDistinct)
-          case _: CRowNumber => ("row_number", Nil, false)
-          case _: CRank => ("rank", Nil, false)
-          case _: CDenseRank => ("dense_rank", Nil, false)
-          case _: CPercentRank => ("percent_rank", Nil, false)
+          case agg: AggregateExpression => measure(agg)
           case _: CCumeDist => ("cume_dist", Nil, false)
           case CNTile(b) => ("ntile", Seq(b), false)
           case CLead(in0, off, _, false) => ("lead", Seq(in0, off), false)
           case CLag(in0, off, _, false) => ("lag", Seq(in0, off), false)
-          case other => throw new IllegalArgumentException(
-            s"substrait emit: window function ${other.prettyName}")
+          case other => (PlanVocabulary.rankingName(other).getOrElse(
+            throw new IllegalArgumentException(
+              s"substrait emit: window function ${other.prettyName}")), Nil, false)
         }
         def boundJson(b: CExpr): JValue = b match {
           case UnboundedPreceding | UnboundedFollowing =>
@@ -1201,16 +1145,8 @@ object SubstraitSerde {
           "arguments" -> JArray(wargs.map(a =>
             JObject("value" -> emitExpr(a, input, reg, outer))).toList),
           "partitions" -> JArray(parts.map(emitExpr(_, input, reg, outer)).toList),
-          "sorts" -> JArray(order.map { so =>
-            val dir = (so.direction, so.nullOrdering) match {
-              case (Ascending, NullsFirst) => "SORT_DIRECTION_ASC_NULLS_FIRST"
-              case (Ascending, NullsLast) => "SORT_DIRECTION_ASC_NULLS_LAST"
-              case (Descending, NullsFirst) => "SORT_DIRECTION_DESC_NULLS_FIRST"
-              case (Descending, NullsLast) => "SORT_DIRECTION_DESC_NULLS_LAST"
-            }
-            JObject("expr" -> emitExpr(so.child, input, reg, outer),
-              "direction" -> JString(dir))
-          }.toList)) ++ frameFields)) :: Nil)
+          "sorts" -> JArray(order.map(sortField(_, input, reg, outer)).toList)) ++
+          frameFields)) :: Nil)
       case COuterReference(a) =>
         // depth-1 correlation: index into the ENCLOSING rel's input
         val i = outer.indexWhere(_.exprId == a.exprId)
@@ -1247,20 +1183,30 @@ object SubstraitSerde {
         JObject("enum" -> JString(field)),
         JObject("value" -> emitExpr(c, input, reg, outer))))))
 
+  /** An aggregate call in Substrait's spelling: `count(*)` (a count of
+    * constants) takes no arguments. */
+  private def measure(agg: AggregateExpression): (String, Seq[CExpr], Boolean) =
+    PlanVocabulary.aggregate(agg) match {
+      case ("count", cs, d) if cs.forall(_.foldable) => ("count", Nil, d)
+      case m => m
+    }
+
+  private def sortField(so: SortOrder, input: Seq[Attribute], reg: FnReg,
+      outer: Seq[Attribute]): JValue = {
+    val dir = (so.direction, so.nullOrdering) match {
+      case (Ascending, NullsFirst) => "SORT_DIRECTION_ASC_NULLS_FIRST"
+      case (Ascending, NullsLast) => "SORT_DIRECTION_ASC_NULLS_LAST"
+      case (Descending, NullsFirst) => "SORT_DIRECTION_DESC_NULLS_FIRST"
+      case (Descending, NullsLast) => "SORT_DIRECTION_DESC_NULLS_LAST"
+    }
+    JObject("expr" -> emitExpr(so.child, input, reg, outer), "direction" -> JString(dir))
+  }
+
   private def emitMeasure(agg: AggregateExpression, input: Seq[Attribute],
       reg: FnReg, outer: Seq[Attribute] = Nil): JValue = {
-    val (name, args) = agg.aggregateFunction match {
-      case CSum(c, _) => ("sum", Seq(c))
-      case CAvg(c, _) => ("avg", Seq(c))
-      case CMin(c) => ("min", Seq(c))
-      case CMax(c) => ("max", Seq(c))
-      case CCount(cs) if cs.forall(_.foldable) => ("count", Nil)
-      case CCount(cs) => ("count", cs)
-      case other => throw new IllegalArgumentException(
-        s"substrait emit: unsupported aggregate ${other.prettyName}")
-    }
+    val (name, args, distinct) = measure(agg)
     val invocation =
-      if (agg.isDistinct) "AGGREGATION_INVOCATION_DISTINCT"
+      if (distinct) "AGGREGATION_INVOCATION_DISTINCT"
       else "AGGREGATION_INVOCATION_ALL"
     JObject("measure" -> JObject(
       "functionReference" -> JInt(reg.anchor(sigOf(name, args))),

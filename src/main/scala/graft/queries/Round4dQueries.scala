@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.{DFContext, Tables}
 import graft.operators.Similarity
-import graft.plans.PlanSerde
+import graft.plans.SubstraitSerde
 import graft.sources.InMemoryKmsClient
 import Q._
 
@@ -21,12 +21,11 @@ object Round4dQueries extends QuerySet {
 
   val queries: Map[String, QueryFn] = Map(
 
-    // Plan exchange (reference: datafusion-proto roundtrip_logical_plan.rs,
-    // datafusion-substrait logical_plan/consumer.rs): the query is built
-    // with the DataFrame API, serialized to the PlanSerde JSON IR, thrown
-    // away, and REBUILT from the JSON against the session catalog — what
-    // executes is the deserialized plan, so the oracle checks consumer
-    // fidelity, not just the original query.
+    // Plan exchange (reference: datafusion-substrait logical_plan/
+    // producer and consumer): the query is built with the DataFrame API,
+    // emitted as Substrait JSON, thrown away, and REBUILT from the JSON
+    // against the session catalog — what executes is the consumed plan, so
+    // the oracle checks consumer fidelity, not just the original query.
     "plan_serde_roundtrip" -> { (s, dir) =>
       Tables.registerAll(s, dir)
       val built = s.table("orders")
@@ -35,7 +34,7 @@ object Round4dQueries extends QuerySet {
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_orders"), r2(sum(col("o_totalprice"))).as("sum_price"))
         .orderBy(col("c_mktsegment").asc)
-      PlanSerde.fromJson(s, PlanSerde.toJson(built))
+      SubstraitSerde.consumeJson(s, SubstraitSerde.emitJson(built), n => Some(s.table(n)))
     },
 
     // Parquet Modular Encryption roundtrip (reference:

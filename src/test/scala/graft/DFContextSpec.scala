@@ -200,6 +200,21 @@ class DFContextSpec extends AnyFunSuite {
     assert(n == want && want > 0)
   }
 
+  test("QUALIFY inside a CTE body fails loudly at parse time") {
+    val e = intercept[org.apache.spark.sql.catalyst.parser.ParseException](ctx.sql("""
+      WITH t AS (SELECT c_custkey FROM customer
+        QUALIFY row_number() OVER (PARTITION BY c_nationkey ORDER BY c_custkey) = 1)
+      SELECT count(*) FROM t"""))
+    assert(e.getMessage.contains("QUALIFY inside a subquery or CTE is unsupported"), e.getMessage)
+  }
+
+  test("DISTINCT ON inside a subquery fails loudly at parse time") {
+    val e = intercept[org.apache.spark.sql.catalyst.parser.ParseException](ctx.sql(
+      "SELECT count(*) FROM (SELECT DISTINCT ON (c_nationkey) c_nationkey FROM customer)"))
+    assert(e.getMessage.contains("DISTINCT ON inside a subquery or CTE is unsupported"),
+      e.getMessage)
+  }
+
   test("information_schema surfaces") {
     val tables = ctx.informationSchemaTables().collect().map(_.getString(0))
     assert(tables.contains("customer") && tables.contains("lineitem"))

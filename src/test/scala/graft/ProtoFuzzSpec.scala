@@ -89,6 +89,26 @@ class ProtoFuzzSpec extends AnyFunSuite {
     (df, shape.toString)
   }
 
+  /** Distinct shape `kind` over a seeded random base table and filter:
+    * count(DISTINCT …) over one or two columns, sum/avg(DISTINCT …), SELECT
+    * DISTINCT, or GROUP BY without an aggregate. Drawn from its own seed,
+    * so [[genPlan]]'s grid is unchanged. */
+  private def genDistinctPlan(rnd: scala.util.Random, kind: Int): (DataFrame, String) = {
+    val (bn, key, num, str, (fk, _, _)) = bases(rnd.nextInt(bases.size))
+    val m = rnd.nextInt(4) // 3: unfiltered
+    val df = if (m < 3) tbl(bn).filter(col(key) % 3 =!= lit(m)) else tbl(bn)
+    val grouped = df.groupBy(col(fk))
+    val (tag, out) = kind match {
+      case 0 => ("count_distinct", grouped.agg(count_distinct(col(str)).as("aggv")))
+      case 1 => ("count_distinct2", grouped.agg(count_distinct(col(str), col(num)).as("aggv")))
+      case 2 => ("sum_distinct", grouped.agg(sum_distinct(col(num)).as("aggv")))
+      case 3 => ("avg_distinct", grouped.agg(expr(s"avg(DISTINCT $num)").as("aggv")))
+      case 4 => ("select_distinct", df.select(col(fk), col(str)).distinct())
+      case _ => ("group_only", grouped.agg(Map.empty[String, String]))
+    }
+    (out, s"$bn|filter($m)|$tag")
+  }
+
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.map {
       case d: java.math.BigDecimal => d.stripTrailingZeros.toPlainString
@@ -124,6 +144,24 @@ class ProtoFuzzSpec extends AnyFunSuite {
       assert(got == expected,
         s"physical #$i [$shape]: ${got.size} vs ${expected.size} rows\n" +
           s"bytes=${hex(bytes)}\nfirst got=${got.take(3)}\nfirst exp=${expected.take(3)}")
+    }
+  }
+
+  test("each distinct-shaped plan round-trips both proto wires") {
+    val rnd = new scala.util.Random(1515)
+    for (i <- 0 until 6) {
+      val (df, shape) = genDistinctPlan(rnd, i)
+      val expected = rows(df)
+      for ((wire, bytes, back) <- Seq(
+          ("logical", DataFusionProto.emit(df),
+            (b: Array[Byte]) => DataFusionProto.consume(spark, b, resolver)),
+          ("physical", DataFusionProtoPhysical.emit(df),
+            (b: Array[Byte]) => DataFusionProtoPhysical.consume(spark, b, resolver)))) {
+        val got = rows(back(bytes))
+        assert(got == expected,
+          s"$wire distinct #$i [$shape]: ${got.size} vs ${expected.size} rows\n" +
+            s"bytes=${hex(bytes)}\nfirst got=${got.take(3)}\nfirst exp=${expected.take(3)}")
+      }
     }
   }
 }
